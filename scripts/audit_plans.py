@@ -267,7 +267,7 @@ def audit(name: str, txt: str) -> dict:
         "codegen_spans": len(set(re.findall(r"\[codegen id : (\d+)\]", txt))),
         "pushed": len(re.findall(r"PushedFilters: \[[^\]]", txt)),
         "python_stages": len(
-            re.findall(r"^\(\d+\) (?:ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas|FlatMapCoGroupsInPandas)", txt, re.M)
+            re.findall(r"^\(\d+\) (?:ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas|MapInPandas|MapInArrow|FlatMapCoGroupsInPandas)", txt, re.M)
         ),
         # \b excludes SortMergeJoin/SortAggregate operator names; only a
         # physical Sort node counts as a sort

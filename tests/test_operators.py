@@ -1466,6 +1466,21 @@ def test_bfs_min_depth_bitmap_matches_join_form(spark):
         assert got == want, cap
 
 
+def test_bfs_min_depth_bitmap_rejects_out_of_universe_seeds(spark):
+    """A seed outside [0, n_nodes) is a contract violation: it raises
+    instead of being dropped from the (node, depth) surface."""
+    import pytest
+
+    from twawler_spark.operators.graph import bfs_min_depth_bitmap
+
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    for seeds in ([1, 16], [-1], [1, 99]):
+        with pytest.raises(ValueError, match="outside the node universe"):
+            bfs_min_depth_bitmap(seeds, edges, 3, 16)
+    got = {(r["node"], r["depth"]) for r in bfs_min_depth_bitmap([1, 15], edges, 3, 16).collect()}
+    assert got == {(1, 0), (2, 1), (3, 2), (15, 0)}
+
+
 def test_dust_key2_param_positions(spark):
     """The canonicalize-with-param-stripped key must behave at every
     param position: first, middle, last, and when stripping empties the

@@ -124,7 +124,7 @@ def stream_u01(key: int, stream: int, index: int = 0) -> float:
     return (stream64(key, stream, index) >> 12) / float(1 << 52)
 
 
-# Vectorized numpy variants (used by the Arrow-batched fetch synthesis).
+# Vectorized numpy variants (the array kernels of docspec).
 
 def np_splitmix64(z: np.ndarray) -> np.ndarray:
     with np.errstate(over="ignore"):
@@ -134,11 +134,17 @@ def np_splitmix64(z: np.ndarray) -> np.ndarray:
         return z ^ (z >> np.uint64(31))
 
 
-def np_stream64(keys: np.ndarray, stream: int, index: int = 0) -> np.ndarray:
+def np_stream64(keys: np.ndarray, stream: int, index: int | np.ndarray = 0) -> np.ndarray:
+    """``stream64`` over an array of keys; ``index`` is one int or an
+    int array aligned with ``keys``."""
     k = keys.astype(np.int64).view(np.uint64)
     with np.errstate(over="ignore"):
         a = np_splitmix64(k ^ np.uint64((stream * _SM_M1) & _M))
-        return np_splitmix64(a ^ np.uint64((index * _SM_M2) & _M))
+        if isinstance(index, np.ndarray):
+            mix = index.astype(np.uint64) * np.uint64(_SM_M2)
+        else:
+            mix = np.uint64((index * _SM_M2) & _M)
+        return np_splitmix64(a ^ mix)
 
 
 def np_stream_u01(keys: np.ndarray, stream: int, index: int = 0) -> np.ndarray:

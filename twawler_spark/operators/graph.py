@@ -157,9 +157,16 @@ def bfs_min_depth_bitmap(
     surface as bfs_min_depth — min hop distance, duplicate edges
     harmless (bitmap OR). For unbounded node spaces keep
     bfs_min_depth: a |V|^2/8-bit matrix only makes sense when |V| is a
-    design constant (here ~50 MB at 20k nodes)."""
+    design constant (here ~50 MB at 20k nodes). A seed outside
+    [0, n_nodes) raises ValueError."""
     import pandas as pd
 
+    bad = [s for s in seeds if not 0 <= int(s) < n_nodes]
+    if bad:
+        raise ValueError(
+            f"bfs_min_depth_bitmap: seeds {bad[:5]} outside the node universe "
+            f"[0, {n_nodes})"
+        )
     sc = edges.sparkSession.sparkContext
     nb = (n_nodes + 7) // 8
     p = sc.defaultParallelism
@@ -206,9 +213,7 @@ def bfs_min_depth_bitmap(
                     adj[s], np.frombuffer(m, dtype=np.uint8), out=adj[s]
                 )
         dist = np.full(n_nodes, -1, dtype=np.int64)
-        frontier = np.array(
-            sorted({s for s in seed_list if 0 <= s < n_nodes}), dtype=np.int64
-        )
+        frontier = np.array(sorted(set(seed_list)), dtype=np.int64)
         dist[frontier] = 0
         for d in range(1, max_depth + 1):
             if len(frontier) == 0:

@@ -9,8 +9,9 @@ batch over snapshot tables. Plan shape per round:
     -> score                                  [column exprs, codegen]
     -> robots gate                            [broadcast join + exists()]
     -> per-host budget rank                   [two-phase salted window]
-    -> fetch                                  [grouped Arrow UDF, ≤ Σbudgets rows]
-    -> documents append (dedup doc_id)        [hash agg]
+    -> fetch: status, docs, outlinks          [ONE Arrow pass, no exchange,
+                                               ≤ Σbudgets rows, checkpointed]
+    -> documents append (dedup doc_id)        [explode + hash agg]
     -> outlink discovery -> seen filter       [persisted broadcast bloom probe
                                                + scan-only confirm; sharded
                                                cogroup tier beyond ~10^9 keys]
@@ -36,12 +37,11 @@ from pyspark.sql import functions as F
 
 from ..io_catalog import Catalog
 from ..operators.admission import admit, gate_robots
-from ..operators.budget import fetch_plan
 from ..operators.scoring import score
 from ..operators.seen_filter import BroadcastBloom
 from ..schemas import FRONTIER
 from ..synth import NOW_EPOCH
-from .fetcher import discover_outlinks, fetch_documents, fetch_results
+from .fetcher import documents_of, fetch, outlinks_of, results_of
 
 REVIVE_TTL_ROUNDS = 3
 ROUND_SECONDS = 3600
@@ -493,11 +493,15 @@ def run_round(
     n_scheduled = int(obs_plan.get["n"])
 
     # ------------------------------------------------------------- fetch
+    # one Arrow pass computes status, documents and outlinks per plan
+    # URL; documents, results and links below are JVM-only projections
+    # of this checkpoint, so the Python fetch runs exactly once
+    fetched = fetch(plan, round_no, n_hosts).localCheckpoint(eager=True)
+    results = results_of(fetched)
     obs_docs, n_d = _count_obs()
-    docs = fetch_documents(plan, round_no).dropDuplicates(["doc_id"]).observe(obs_docs, n_d)
+    docs = documents_of(fetched, round_no).dropDuplicates(["doc_id"]).observe(obs_docs, n_d)
     catalog.append(docs, "documents", round_no)
     n_docs = int(obs_docs.get["n"])
-    results = fetch_results(plan).localCheckpoint(eager=True)
 
     # crawl-order lineage (golden for ordering-equality tests)
     catalog.append(
@@ -507,9 +511,7 @@ def run_round(
     )
 
     # -------------------------------------------------- discovery + admit
-    links = discover_outlinks(results, n_hosts).withColumn(
-        "url_hash", F.xxhash64(F.col("url"))
-    )
+    links = outlinks_of(fetched).withColumn("url_hash", F.xxhash64(F.col("url")))
     # follow-edge table (addfollowers.py:39 shape: follower -> followee)
     catalog.append(
         links.select(
@@ -522,8 +524,8 @@ def run_round(
         round_no,
     )
     obs_cands, n_c = _count_obs()
-    # checkpoint: the dedup shuffle + outlink UDF run once, not once per
-    # consumer (the admit plan references candidates in two branches)
+    # checkpoint: the dedup shuffle runs once, not once per consumer
+    # (the admit plan references candidates in two branches)
     cands = (
         links.dropDuplicates(["url_hash"])  # within-round dedup
         .observe(obs_cands, n_c)
