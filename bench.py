@@ -335,7 +335,7 @@ def sched_round_once(
     )
     plan = build_two_phase_plan(
         admitted, robots, budgets, NOW_EPOCH + 3600, salt_buckets=16,
-        dict_encode_hosts=True, host_stats=host_stats,
+        host_stats=host_stats,
     )
     n_planned = plan.count()
     dt = time.time() - t0
@@ -618,27 +618,6 @@ def main() -> int:
         f"admitted in {admit_cuckoo_dt:.2f}s")
     assert n_admit_cuckoo == n_admit_exact, "cuckoo admission must equal exact"
 
-    # sharded-cogroup tier: the >=10^9-key path where the filter no longer
-    # broadcasts (~15 GB of bits at 10^10) — co-partitioned shard probe,
-    # shuffle-join confirm. Benchmarked at the same shape so the tier
-    # choice is measured, not asserted.
-    from twawler_spark.operators.seen_filter import build_sharded_bloom
-
-    t0 = time.time()
-    sharded = build_sharded_bloom(seen_big, n_buckets=4 * cpus)
-    sharded.shards.persist()
-    sharded.shards.count()
-    sharded_build_dt = time.time() - t0
-    log(f"one-time sharded-filter build: {n_urls} keys, {4 * cpus} shards "
-        f"in {sharded_build_dt:.2f}s")
-    admit_op(cands, seen_big, bloom=sharded).count()
-    t0 = time.time()
-    n_admit_sharded = admit_op(cands, seen_big, bloom=sharded).count()
-    admit_sharded_dt = time.time() - t0
-    log(f"admit sharded cogroup probe+confirm: {n_admit_sharded} admitted "
-        f"in {admit_sharded_dt:.2f}s")
-    assert n_admit_sharded == n_admit_exact, "sharded admission must equal exact"
-    sharded.shards.unpersist()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(512 * 1024 * 1024))
 
     queries: dict[str, float] = {
@@ -650,7 +629,6 @@ def main() -> int:
         "admit_seenbig_exact": round(admit_exact_dt, 3),
         "admit_seenbig_bloom": round(admit_bloom_dt, 3),
         "admit_seenbig_cuckoo": round(admit_cuckoo_dt, 3),
-        "admit_seenbig_sharded": round(admit_sharded_dt, 3),
         "bloom_delta_update": round(update_dt, 3),
     }
 

@@ -70,8 +70,7 @@ def main() -> int:
         t0 = time.time()
         plan = build_two_phase_plan(
             active, robots, budgets, NOW_EPOCH + 3600,
-            salt_buckets=salt, dict_encode_hosts=True,
-            host_stats=host_stats if salt > 1 else None,
+            salt_buckets=salt, host_stats=host_stats if salt > 1 else None,
         )
         plan.count()
         return time.time() - t0

@@ -5,6 +5,8 @@ checkpoints crawlerdata.lastid, dumpall.py:83-87)."""
 
 from __future__ import annotations
 
+import os
+
 from twawler_spark.io_catalog import Catalog
 from twawler_spark.plans.round import bootstrap, run_rounds
 
@@ -54,6 +56,9 @@ def test_compaction_and_history_expiry(spark, crawl_root, tmp_path_factory):
     assert cat.compaction_rounds("frontier") == [4]  # 0..3 expired at r4
     assert cat.committed_rounds("frontier") == [4, 5]
     assert cat.latest_round("frontier") == 5
+    assert sorted(os.listdir(f"{cat.root}/bloom")) == [
+        "4.bits", "4.json", "5.bits", "5.json"
+    ]
     assert read_frontier(cat, 5).count() > 0
     # manifest arithmetic matches the materialized view
     assert cat.read_manifest("frontier", 5)["n_rows"] == read_frontier(cat, 5).count()

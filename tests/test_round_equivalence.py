@@ -146,7 +146,7 @@ def test_plan_invariant_under_repartitioning(spark, crawl_root):
     def plan_rows(active):
         plan = build_two_phase_plan(
             active, robots, budgets, NOW_EPOCH + 3600, salt_buckets=4,
-            dict_encode_hosts=True, host_stats=host_stats, hot_threshold=50,
+            host_stats=host_stats, hot_threshold=50,
         )
         return sorted(
             (r["url_hash"], r["host"], r["phase"], r["fetch_rank"])
@@ -183,7 +183,6 @@ def test_null_first_id_rides_the_plan_intact(spark, crawl_root):
     )
     plan = build_two_phase_plan(
         active, robots, budgets, NOW_EPOCH + 3600, salt_buckets=4,
-        dict_encode_hosts=True,
     )
     rows = plan.select("url_hash", "first_id", "reached").collect()
     null_rows = [r for r in rows if r["url_hash"] % 5 == 0]
@@ -195,7 +194,7 @@ def test_null_first_id_rides_the_plan_intact(spark, crawl_root):
 
 
 def test_missing_budget_host_fails_fast(spark, crawl_root):
-    """dict_encode_hosts regression (ADVICE r3): a frontier host absent
+    """Host dictionary-encoding regression (ADVICE r3): a frontier host absent
     from the budgets dim must raise, not silently collapse all unmatched
     hosts into one NULL-host ranking partition."""
     from pyspark.sql import functions as F
@@ -211,7 +210,6 @@ def test_missing_budget_host_fails_fast(spark, crawl_root):
     active = frontier.where(F.col("state") == "active")
     plan = build_two_phase_plan(
         active, robots, holey, NOW_EPOCH + 3600, salt_buckets=4,
-        dict_encode_hosts=True,
     )
     with pytest.raises(Exception, match="missing from budgets dim"):
         plan.collect()

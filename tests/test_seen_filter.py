@@ -1,5 +1,6 @@
-"""Sharded Bloom: zero false negatives, bounded false positives,
-treeAggregate global merge, and bloom-vs-exact admission equality."""
+"""Persisted Bloom seen-filter: zero false negatives, bounded false
+positives, treeAggregate build merge, and bloom-vs-exact admission
+equality."""
 
 from __future__ import annotations
 
@@ -10,9 +11,10 @@ from twawler_spark.hashing import np_stream64
 from twawler_spark.operators.admission import admit
 from twawler_spark.operators.seen_filter import (
     BroadcastBloom,
+    _bits_set,
     _bits_test,
+    _build_bits,
     _positions,
-    build_sharded_bloom,
 )
 
 
@@ -20,32 +22,6 @@ def _keys_df(spark, lo, hi, name="url_hash"):
     return spark.range(lo, hi).select(
         F.xxhash64(F.col("id").cast("string")).alias(name)
     )
-
-
-def test_no_false_negatives(spark):
-    seen = _keys_df(spark, 0, 20_000)
-    bloom = build_sharded_bloom(seen, n_buckets=16, fpp=0.01)
-    flagged = bloom.probe(seen).select("url_hash", "maybe_seen").collect()
-    assert len(flagged) == 20_000
-    assert all(r["maybe_seen"] for r in flagged)
-
-
-def test_false_positive_rate_bounded(spark):
-    seen = _keys_df(spark, 0, 20_000)
-    other = _keys_df(spark, 100_000, 120_000)
-    bloom = build_sharded_bloom(seen, n_buckets=16, fpp=0.01)
-    fp = bloom.probe(other).where(F.col("maybe_seen")).count()
-    assert fp / 20_000 < 0.05
-
-
-def test_bloom_admission_equals_exact(spark):
-    seen = _keys_df(spark, 0, 5_000)
-    cands = _keys_df(spark, 2_500, 10_000)
-    bloom = build_sharded_bloom(seen, n_buckets=8)
-    with_bloom = {r["url_hash"] for r in admit(cands, seen, bloom).collect()}
-    exact = {r["url_hash"] for r in admit(cands, seen, None).collect()}
-    assert with_bloom == exact
-    assert len(exact) == 5_000  # ids 5000..9999 hash-distinct
 
 
 def test_broadcast_bloom_no_false_negatives_and_update(spark, tmp_path):
@@ -89,12 +65,15 @@ def test_broadcast_bloom_fpp_bounded(spark):
 
 def test_merge_global_treeaggregate(spark):
     seen = _keys_df(spark, 0, 8_000)
-    bloom = build_sharded_bloom(seen, n_buckets=8, fixed_m_bits=1 << 17)
-    m, k, bits = bloom.merge_global()
-    assert m == 1 << 17
+    m, k = 1 << 17, 5
+    bits = _build_bits(seen, "url_hash", 8, m, k)
     keys = np.array(
         [r["url_hash"] for r in seen.collect()], dtype=np.int64
     )
+    # the per-bucket tree-OR equals one single-pass bit set over all keys
+    single = np.zeros(m // 8, dtype=np.uint8)
+    _bits_set(single, _positions(keys, m, k))
+    assert (bits == single).all()
     assert _bits_test(bits, _positions(keys, m, k)).all()
     fresh = np.array(
         [r["url_hash"] for r in _keys_df(spark, 50_000, 52_000).collect()],

@@ -14,7 +14,7 @@ Layout:
   synth         deterministic distributed generators (frontier/seen/budgets)
   io_catalog    snapshot-versioned parquet tables (Iceberg-fallback storage)
   functions/    urls, text, spans — scalar/vectorized kernels
-  operators/    admission, seen_filter (bloom), scoring, budget, dedup,
+  operators/    admission, seen_filter (bloom), scoring, dedup,
                 similarity, multimodal
   plans/        fetcher + the per-round scheduling batch job
   streaming/    structured-streaming ingest wrapper

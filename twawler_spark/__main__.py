@@ -43,7 +43,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--rounds", type=int, default=3)
     c.add_argument("--hosts", type=int, required=True)
     c.add_argument("--salt", type=int, default=16)
-    c.add_argument("--no-bloom", action="store_true")
     c.add_argument("--fresh", action="store_true", help="ignore committed snapshots")
 
     s = sub.add_parser("status", help="committed rounds + per-round metrics")
@@ -62,8 +61,7 @@ def main(argv: list[str] | None = None) -> int:
             if a.fresh or cat.latest_round("frontier") is None:
                 bootstrap(cat, cat.read_input("frontier_seed"), cat.read_input("seen_seed"))
             t0 = time.time()
-            stats = run_rounds(cat, a.rounds, n_hosts=a.hosts,
-                               salt_buckets=a.salt, use_bloom=not a.no_bloom)
+            stats = run_rounds(cat, a.rounds, n_hosts=a.hosts, salt_buckets=a.salt)
             dt = time.time() - t0
             for st in stats:
                 print(json.dumps(vars(st)))

@@ -160,7 +160,6 @@ def _plan(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
         budgets,
         CRAWL_NOW,
         salt_buckets=4,
-        dict_encode_hosts=True,
     )
     return frontier, plan
 

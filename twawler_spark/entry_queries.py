@@ -1967,9 +1967,10 @@ def q_host_adaptive_budget(spark, sf):
     the latency proxy) compares to the fleet-wide mean — slow hosts
     get throttled toward 1, fast hosts earn up to 2x the base budget.
     This is the adaptive tier above the static per-host budget the
-    round plan already enforces (operators/budget.py); the reference's
-    equivalent is the rate-limit backoff that stretches the crawl
-    cadence when the API slows (twkit/utils.py rate-limit handling).
+    round plan already enforces (plans/round.py build_two_phase_plan);
+    the reference's equivalent is the rate-limit backoff that stretches
+    the crawl cadence when the API slows (twkit/utils.py rate-limit
+    handling).
 
     100 TB shape: one map-side-combinable groupBy(host) + a broadcast
     1-row fleet mean; the output is one row per host (20 here, ~10^7

@@ -16,17 +16,20 @@ array — no skewed shuffle by host, no per-row Python.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cuckoo_filter import BroadcastCuckoo
-from .seen_filter import BroadcastBloom, ShardedBloom
+if TYPE_CHECKING:
+    from .cuckoo_filter import BroadcastCuckoo
+    from .seen_filter import BroadcastBloom
 
 
 def admit(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: BroadcastBloom | BroadcastCuckoo | ShardedBloom | None = None,
+    bloom: BroadcastBloom | BroadcastCuckoo | None = None,
     key_col: str = "url_hash",
     confirm_broadcast: bool = True,
 ) -> DataFrame:
@@ -36,19 +39,21 @@ def admit(
     key, O(|seen|) shuffle per round. Correct, but the seen-set is the
     10^10 table; reshuffling it every round is the scale killer.
 
-    BroadcastBloom path (production default): ZERO shuffles —
+    Probe + confirm path: ``bloom`` is any filter with zero false
+    negatives and ``probe(candidates, key_col, flag_col)`` — the round's
+    persisted ``BroadcastBloom``, or ``BroadcastCuckoo`` (its ~0.01% fpp
+    shrinks the maybe set ~80x further, and its deletes let retraction
+    rounds skip a rebuild). ZERO shuffles —
       1. probe candidate keys map-side (broadcast bits + Arrow UDF);
-         bloom-ABSENT keys are definitely new (no false negatives);
+         filter-ABSENT keys are definitely new;
       2. exact-confirm the "maybe seen" remainder with a broadcast SEMI
          join where ``seen`` is the STREAM side: the seen table is
          column-pruned-scanned once but never shuffled;
       3. anti-join candidates against the broadcast CONFIRMED set —
          sized |seen ∩ candidates| + fpp, bounded by the round's
          candidate count, never by |seen|.
-
-    ShardedBloom path: same protocol but the probe cogroups candidates
-    with co-partitioned shard filters — for filters too big to
-    broadcast (>=10^10 keys ≈ 15 GB of bits).
+    ``confirm_broadcast=False`` confirms with a co-partitioned shuffle
+    join instead, for frontier-scale candidate sets.
     """
     seen_keys = seen.select(key_col)
     if bloom is None:
@@ -62,30 +67,20 @@ def admit(
         return candidates.join(
             seen_keys.hint("SHUFFLE_HASH"), key_col, "left_anti"
         )
-    if isinstance(bloom, (BroadcastBloom, BroadcastCuckoo)):
-        # cuckoo shares the protocol; its ~0.01% fpp shrinks the maybe
-        # set ~80x further, and delete_keys lets retraction rounds skip
-        # the full rebuild the Bloom tier would need
-        flagged = bloom.probe(
-            candidates.select(key_col), key_col=key_col, flag_col="__maybe_seen"
-        )
-        maybe = flagged.where(F.col("__maybe_seen")).select(key_col)
-        if confirm_broadcast:
-            # plan-bounded candidate sets (run_round's outlinks): seen is
-            # the stream side — scanned (pruned to the key column), never
-            # shuffled; dupes in `confirmed` dedupe inside the hash relation
-            confirmed = seen_keys.join(F.broadcast(maybe), key_col, "left_semi")
-            return candidates.join(F.broadcast(confirmed), key_col, "left_anti")
-        # frontier-scale candidate sets (whole-frontier dedup): the maybe
-        # set is a constant fraction of the candidates — confirm with a
-        # co-partitioned shuffle join instead of a driver-built broadcast
-        confirmed = maybe.join(seen_keys, key_col, "left_semi")
-        return candidates.join(confirmed, key_col, "left_anti")
-    # sharded tier: maybe-set can itself be huge, so confirm stays a
-    # co-partitioned shuffle join rather than a broadcast
-    flagged = bloom.probe(candidates.select(key_col), flag_col="__maybe_seen")
+    flagged = bloom.probe(
+        candidates.select(key_col), key_col=key_col, flag_col="__maybe_seen"
+    )
     maybe = flagged.where(F.col("__maybe_seen")).select(key_col)
-    confirmed = maybe.join(seen_keys.distinct(), key_col, "left_semi")
+    if confirm_broadcast:
+        # plan-bounded candidate sets (run_round's outlinks): seen is
+        # the stream side — scanned (pruned to the key column), never
+        # shuffled; dupes in `confirmed` dedupe inside the hash relation
+        confirmed = seen_keys.join(F.broadcast(maybe), key_col, "left_semi")
+        return candidates.join(F.broadcast(confirmed), key_col, "left_anti")
+    # frontier-scale candidate sets (whole-frontier dedup): the maybe
+    # set is a constant fraction of the candidates — confirm with a
+    # co-partitioned shuffle join instead of a driver-built broadcast
+    confirmed = maybe.join(seen_keys, key_col, "left_semi")
     return candidates.join(confirmed, key_col, "left_anti")
 
 

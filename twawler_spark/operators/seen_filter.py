@@ -1,25 +1,19 @@
-"""Partitioned Bloom seen-filter.
+"""Persisted Bloom seen-filter.
 
 The reference preloads its membership sets (ignored/cemetery/suspended/
 protected/greeks) into driver-side Python dicts (twkit/utils.py:107-135,
 ``init_state(use_cache=True)``) and checks candidates one by one
-(utils.py:672-692 ``can_follow``). That caps out at what fits on one
-machine. The rebuild shards the seen-set by ``pmod(url_hash, n_buckets)``
-and builds one Bloom filter per shard with an Arrow-batched
-``applyInPandas`` — filters live with the data on executors and are
-joined to candidates by bucket with ``cogroup`` (co-partitioned, never
-broadcast), so a 10^10-key seen-set (≈15 GB of filter bits at 10 b/key)
-never has to fit anywhere whole.
+(utils.py:672-692 ``can_follow``). The rebuild keeps ONE Bloom filter
+over the seen-set: built distributed (per-bucket ``applyInPandas``
+filters OR-merged via RDD ``treeAggregate``), updated per round with
+only that round's delta, persisted in the catalog and probed map-side
+from a broadcast.
 
 Probe outcome per candidate:
   * bloom says ABSENT  -> definitely new (no false negatives) — admit
     without touching the exact set;
   * bloom says PRESENT -> "maybe seen" (fpp ≈ 1%) — only this small
     remainder goes through the exact anti-join.
-
-``merge_global`` additionally ORs equal-sized shard filters into one
-filter via RDD ``treeAggregate`` (the north rule's merge path) for a
-driver-side broadcastable prefilter when the key count allows it.
 """
 
 from __future__ import annotations
@@ -74,121 +68,39 @@ def _size_for(n: int, fpp: float) -> tuple[int, int]:
     return m, k
 
 
-@dataclass
-class ShardedBloom:
-    shards: DataFrame  # (bucket, n_keys, m_bits, k_hashes, bits)
-    n_buckets: int
-    key_col: str = "url_hash"
-
-    def probe(self, candidates: DataFrame, flag_col: str = "maybe_seen") -> DataFrame:
-        """candidates + boolean ``flag_col``; co-partitioned cogroup by bucket."""
-        key = self.key_col
-        cand = candidates.withColumn(
-            "__bucket", F.pmod(F.col(key), F.lit(self.n_buckets)).cast("int")
-        )
-        from pyspark.sql import types as T
-
-        out_schema = T.StructType(
-            list(cand.schema.fields) + [T.StructField(flag_col, T.BooleanType(), False)]
-        )
-
-        def check(cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-            if cpdf.empty:
-                return cpdf.assign(**{flag_col: pd.Series([], dtype=bool)})
-            if bpdf.empty:
-                return cpdf.assign(**{flag_col: False})
-            row = bpdf.iloc[0]
-            bits = np.frombuffer(row["bits"], dtype=np.uint8)
-            pos = _positions(
-                cpdf[key].to_numpy(), int(row["m_bits"]), int(row["k_hashes"])
-            )
-            return cpdf.assign(**{flag_col: _bits_test(bits, pos)})
-
-        res = (
-            cand.groupBy("__bucket")
-            .cogroup(self.shards.withColumnRenamed("bucket", "__bucket").groupBy("__bucket"))
-            .applyInPandas(check, schema=out_schema)
-        )
-        return res.drop("__bucket")
-
-    def merge_global(self):
-        """OR all equal-sized shards into one (m, k, bits) via treeAggregate."""
-        rows = self.shards.select("m_bits", "k_hashes", "bits").rdd
-        meta = self.shards.select("m_bits", "k_hashes").first()
-        if meta is None:
-            return None
-        m, k = int(meta["m_bits"]), int(meta["k_hashes"])
-
-        def seq(acc: np.ndarray, row) -> np.ndarray:
-            if int(row["m_bits"]) != m or int(row["k_hashes"]) != k:
-                raise ValueError("merge_global requires uniform shard sizing")
-            return acc | np.frombuffer(row["bits"], dtype=np.uint8)
-
-        zero = np.zeros(m // 8, dtype=np.uint8)
-        merged = rows.treeAggregate(zero, seq, lambda a, b: a | b, depth=3)
-        return m, k, merged
-
-
-def build_sharded_bloom(
-    keys: DataFrame,
-    key_col: str = "url_hash",
-    n_buckets: int = 64,
-    fpp: float = 0.01,
-    fixed_m_bits: int | None = None,
-    fixed_k: int | None = None,
-) -> ShardedBloom:
-    """Build per-bucket filters with applyInPandas (one Arrow batch/bucket).
-
-    ``fixed_m_bits`` forces uniform sizing (required by merge_global);
-    ``fixed_k`` additionally pins the probe count so shards built from
-    different key sets (e.g. per-round deltas) stay OR-mergeable. Default
-    sizes each shard for its own key count at ``fpp``.
-    """
+def _build_bits(
+    keys: DataFrame, key_col: str, n_buckets: int, m_bits: int, k_hashes: int
+) -> np.ndarray:
+    """Distributed bit-set for ``keys`` at a fixed (m, k): one filter per
+    ``pmod(key, n_buckets)`` bucket built with ``applyInPandas`` (one
+    Arrow batch per bucket), OR-merged via RDD ``treeAggregate``.
+    Equal to a single-pass bit set over all keys."""
     bucketed = keys.select(
         F.col(key_col), F.pmod(F.col(key_col), F.lit(n_buckets)).cast("int").alias("bucket")
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        arr = pdf[key_col].to_numpy()
-        n = len(arr)
-        if fixed_m_bits is not None:
-            m = fixed_m_bits
-            k = fixed_k or max(1, min(16, round(m / max(n, 1) * math.log(2))))
-        else:
-            m, k = _size_for(n, fpp)
-            if fixed_k:
-                k = fixed_k
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        _bits_set(bits, _positions(arr, m, k))
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "n_keys": [n],
-                "m_bits": [m],
-                "k_hashes": [k],
-                "bits": [bits.tobytes()],
-            }
-        )
+        bits = np.zeros(m_bits // 8, dtype=np.uint8)
+        _bits_set(bits, _positions(pdf[key_col].to_numpy(), m_bits, k_hashes))
+        return pd.DataFrame({"bits": [bits.tobytes()]})
 
-    shards = bucketed.groupBy("bucket").applyInPandas(
-        build, schema="bucket int, n_keys long, m_bits long, k_hashes int, bits binary"
+    shards = bucketed.groupBy("bucket").applyInPandas(build, schema="bits binary")
+    zero = np.zeros(m_bits // 8, dtype=np.uint8)
+    return shards.rdd.treeAggregate(
+        zero,
+        lambda acc, row: acc | np.frombuffer(row["bits"], dtype=np.uint8),
+        lambda a, b: a | b,
+        depth=3,
     )
-    return ShardedBloom(shards=shards, n_buckets=n_buckets, key_col=key_col)
-
-
-# =====================================================================
-# Broadcast tier: one persisted filter, incrementally updated per round
-# =====================================================================
 
 
 @dataclass
 class BroadcastBloom:
-    """Driver-held Bloom filter for the seen-set, the production default
-    below ~1 GB of filter bits (10^9-key tier; beyond that use
-    ShardedBloom's cogroup probe, which never centralizes the bits).
+    """Driver-held Bloom filter for the seen-set; its m/8 bytes of bits
+    must fit the driver and one broadcast.
 
     Lifecycle fixes the round-1 regression (bloom slower than exact):
-      * built ONCE from the full seen-set (distributed sharded build +
+      * built ONCE from the full seen-set (per-bucket build +
         treeAggregate OR — the north rule's per-partition merge path);
       * each round ORs in only that round's seen-DELTA — O(|delta|),
         never O(|seen|) — then persists bits atomically in the catalog;
@@ -227,13 +139,7 @@ class BroadcastBloom:
         # n_buckets * m/8 bytes, so shard count shrinks as m grows
         m_bytes = m // 8
         n_buckets = 64 if m_bytes <= (16 << 20) else (16 if m_bytes <= (128 << 20) else 8)
-        sb = build_sharded_bloom(
-            keys, key_col, n_buckets, fpp, fixed_m_bits=m, fixed_k=k
-        )
-        merged = sb.merge_global()
-        bits = (
-            merged[2] if merged is not None else np.zeros(m // 8, dtype=np.uint8)
-        )
+        bits = _build_bits(keys, key_col, n_buckets, m, k)
         return cls(m_bits=m, k_hashes=k, bits=bits, n_keys=n_keys, capacity=capacity)
 
     # deltas below this come to the driver as one small collect (8 B/key)
@@ -257,16 +163,9 @@ class BroadcastBloom:
             )
             self.update_from_keys(arr)
             return
-        sb = build_sharded_bloom(
-            delta_keys,
-            key_col,
-            self.N_BUILD_BUCKETS,
-            fixed_m_bits=self.m_bits,
-            fixed_k=self.k_hashes,
+        self.bits = self.bits | _build_bits(
+            delta_keys, key_col, self.N_BUILD_BUCKETS, self.m_bits, self.k_hashes
         )
-        merged = sb.merge_global()
-        if merged is not None:
-            self.bits = self.bits | merged[2]
         self.n_keys += n_delta
 
     def update_from_keys(self, keys: np.ndarray) -> None:

@@ -13,8 +13,7 @@ batch over snapshot tables. Plan shape per round:
                                                ≤ Σbudgets rows, checkpointed]
     -> documents append (dedup doc_id)        [explode + hash agg]
     -> outlink discovery -> seen filter       [persisted broadcast bloom probe
-                                               + scan-only confirm; sharded
-                                               cogroup tier beyond ~10^9 keys]
+                                               + scan-only confirm]
     -> state MERGE + snapshot write           [broadcast join, atomic manifest]
 
 Per-round counters ride Observations on the round's own writes and
@@ -117,8 +116,11 @@ def read_frontier(catalog: Catalog, upto_round: int) -> DataFrame:
 
 
 def expire_frontier_history(catalog: Catalog) -> list[int]:
-    """Drop manifests/snapshots/deltas older than the latest compaction
-    (safe: reads only ever need the latest compaction + later deltas)."""
+    """Drop manifests/snapshots/deltas and seen-filter files older than
+    the latest compaction (safe: reads only ever need the latest
+    compaction + later deltas, and a resume loads the filter of the
+    latest committed round)."""
+    import glob
     import shutil
 
     comps = catalog.compaction_rounds("frontier")
@@ -128,6 +130,8 @@ def expire_frontier_history(catalog: Catalog) -> list[int]:
         os.remove(catalog._manifest_path("frontier", r))
         shutil.rmtree(catalog._snap_dir("frontier", r), ignore_errors=True)
         shutil.rmtree(f"{catalog.root}/frontier_v/data/round={r}", ignore_errors=True)
+        for path in glob.glob(bloom_prefix(catalog, r) + ".*"):
+            os.remove(path)
     return expired
 
 
@@ -149,13 +153,12 @@ def bootstrap(
     catalog: Catalog,
     frontier_seed: DataFrame,
     seen_seed: DataFrame,
-    build_bloom: bool = True,
 ) -> None:
     """Round-0 state: seen = seed sets ∪ all tracked frontier keys;
     frontier rows already in a seed set are not tracked (can_follow).
 
     The persisted seen-filter is built HERE, once, from the full set
-    (distributed sharded build + treeAggregate merge); every later round
+    (per-bucket build + treeAggregate merge); every later round
     only ORs in its delta — never an O(|seen|) rebuild."""
     seed_keys = seen_seed.select("url_hash").distinct()
     fresh = frontier_seed.join(seed_keys, "url_hash", "left_anti")
@@ -175,11 +178,8 @@ def bootstrap(
     catalog.append(seen0.observe(obs, n), "seen", 0)
     n_seen = int(obs.get["n"])
     catalog.commit_round("seen", 0, n_seen)
-    if build_bloom:
-        bloom = BroadcastBloom.build(
-            read_seen(catalog, 0).select("url_hash"), n_keys=n_seen
-        )
-        bloom.save(bloom_prefix(catalog, 0))
+    bloom = BroadcastBloom.build(read_seen(catalog, 0).select("url_hash"), n_keys=n_seen)
+    bloom.save(bloom_prefix(catalog, 0))
     catalog.write_snapshot(frontier0, "frontier", 0)
 
 
@@ -191,7 +191,6 @@ def build_two_phase_plan(
     salt_buckets: int = 16,
     default_budget: int = 4,
     default_late_budget: int = 2,
-    dict_encode_hosts: bool = False,
     host_stats: DataFrame | None = None,
     hot_threshold: int = 5000,
 ) -> DataFrame:
@@ -219,18 +218,16 @@ def build_two_phase_plan(
     joining the tiny plan back to the frontier on url_hash). Robots
     gating therefore evaluates the path BEFORE the projection.
 
-    ``dict_encode_hosts``: additionally dictionary-encode the host
-    string into a dense int for the two ranking exchanges (the host
-    name is the second-widest column; ~20 bytes -> 8 through every
-    shuffle and a cheaper partitioner hash), restoring the string on
-    the SMALL plan output via a broadcast join. Sound only when
-    ``budgets`` covers every frontier host — which the engine
-    guarantees by design: the politeness/budget table IS the host
-    dimension (per-host crawl state must exist for every host admitted
-    to the frontier), so callers that own the budget table set this.
-    If ``budgets`` already carries a ``host_id`` column it is used
-    as-is; otherwise a deterministic dense id is derived once over the
-    tiny dim.
+    The host string is dictionary-encoded into a dense int for the two
+    ranking exchanges (the host name is the second-widest column; ~20
+    bytes -> 8 through every shuffle and a cheaper partitioner hash)
+    and restored on the SMALL plan output via a broadcast join. This
+    requires ``budgets`` to cover every frontier host — the engine's
+    politeness/budget table IS the host dimension (per-host crawl state
+    exists for every host admitted to the frontier) — and a host
+    missing from it fails the plan. If ``budgets`` already carries a
+    ``host_id`` column it is used as-is; otherwise a deterministic dense
+    id is derived once over the tiny dim.
 
     ``host_stats`` (host, n_urls — per-host frontier row counts, e.g.
     maintained incrementally in the host dimension, or one column-pruned
@@ -283,43 +280,33 @@ def build_two_phase_plan(
             .select("host", F.lit(True).alias("__hot"))
         )
         gated = gated.join(F.broadcast(hot), "host", "left")
-    if dict_encode_hosts:
-        if "host_id" in budgets.columns:
-            dim = budgets.select("host", "host_id", "budget_per_round")
-        else:
-            # one tiny single-partition window over the dim (n_hosts
-            # rows); at 10^8+ hosts ship a precomputed host_id instead
-            dim = budgets.select("host", "budget_per_round").withColumn(
-                "host_id", F.row_number().over(Window.orderBy("host")).cast("long")
-            )
-        # budgets must cover every frontier host under dict encoding —
-        # a miss would leave host_id NULL and silently merge all such
-        # hosts into ONE ranking partition (and a NULL host in the
-        # output). Fail fast instead: raise on the first unmatched row.
-        joined = (
-            gated.join(F.broadcast(dim), "host", "left")
-            .withColumn(
-                "host_id",
-                F.when(
-                    F.col("host_id").isNull(),
-                    F.raise_error(F.concat(
-                        F.lit("build_two_phase_plan: frontier host '"),
-                        F.col("host"),
-                        F.lit("' missing from budgets dim "
-                              "(dict_encode_hosts=True requires full "
-                              "budget coverage)"),
-                    )).cast("long"),
-                ).otherwise(F.col("host_id")),
-            )
-            .drop("host")
-        )
-        hkey = "host_id"
+    if "host_id" in budgets.columns:
+        dim = budgets.select("host", "host_id", "budget_per_round")
     else:
-        dim = None
-        joined = gated.join(
-            F.broadcast(budgets.select("host", "budget_per_round")), "host", "left"
+        # one tiny single-partition window over the dim (n_hosts
+        # rows); at 10^8+ hosts ship a precomputed host_id instead
+        dim = budgets.select("host", "budget_per_round").withColumn(
+            "host_id", F.row_number().over(Window.orderBy("host")).cast("long")
         )
-        hkey = "host"
+    # budgets must cover every frontier host — a miss would leave
+    # host_id NULL and silently merge all such hosts into ONE ranking
+    # partition (and a NULL host in the output). Fail fast instead:
+    # raise on the first unmatched row.
+    joined = (
+        gated.join(F.broadcast(dim), "host", "left")
+        .withColumn(
+            "host_id",
+            F.when(
+                F.col("host_id").isNull(),
+                F.raise_error(F.concat(
+                    F.lit("build_two_phase_plan: frontier host '"),
+                    F.col("host"),
+                    F.lit("' missing from budgets dim"),
+                )).cast("long"),
+            ).otherwise(F.col("host_id")),
+        )
+        .drop("host")
+    )
     wb = (
         joined
         .withColumn(
@@ -344,8 +331,8 @@ def build_two_phase_plan(
     wb = wb.withColumn("__salt", salt)
     if host_stats is not None:
         wb = wb.drop("__hot")
-    w_es = Window.partitionBy(hkey, "__salt").orderBy(*order_e)
-    w_hs = Window.partitionBy(hkey, "__salt").orderBy(*order_h)
+    w_es = Window.partitionBy("host_id", "__salt").orderBy(*order_e)
+    w_hs = Window.partitionBy("host_id", "__salt").orderBy(*order_h)
     pre = (
         wb.withColumn("__rne", F.row_number().over(w_es))
         .withColumn("__rnh", F.row_number().over(w_hs))
@@ -361,13 +348,13 @@ def build_two_phase_plan(
     # would run twice). Phase-2's rank among NON-phase-1 rows comes from a
     # mixed-order row_number (phase-1 rows first) minus the host's
     # phase-1 count — identical ordering semantics, half the sort work.
-    w_e = Window.partitionBy(hkey).orderBy(*order_e)
+    w_e = Window.partitionBy("host_id").orderBy(*order_e)
     ranked = pre.withColumn("__rank_e", F.row_number().over(w_e))
     is_p1 = F.col("__rank_e") <= F.col("__b")
-    w_mixed = Window.partitionBy(hkey).orderBy(
+    w_mixed = Window.partitionBy("host_id").orderBy(
         is_p1.cast("int").desc(), *order_h
     )
-    w_host = Window.partitionBy(hkey).orderBy(
+    w_host = Window.partitionBy("host_id").orderBy(
         is_p1.cast("int").desc(), *order_h
     ).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     keep = ["url_hash", "host", "last_id",
@@ -383,9 +370,8 @@ def build_two_phase_plan(
         .withColumn("__rank_h", F.col("__rn_mixed") - F.col("__n_p1"))
     )
     out = staged.where(is_p1 | (F.col("__rank_h") <= F.col("__b2")))
-    if dict_encode_hosts:
-        # restore the host string on the SMALL plan output only
-        out = out.join(F.broadcast(dim.select("host_id", "host")), "host_id", "left")
+    # restore the host string on the SMALL plan output only
+    out = out.join(F.broadcast(dim.select("host_id", "host")), "host_id", "left")
     return out.select(
         *keep,
         F.when(is_p1, F.col("__rank_e")).otherwise(F.col("__rank_h")).alias("fetch_rank"),
@@ -445,7 +431,6 @@ def run_round(
     round_no: int,
     n_hosts: int,
     salt_buckets: int = 16,
-    use_bloom: bool = True,
 ) -> RoundStats:
     """One scheduling round.
 
@@ -481,11 +466,8 @@ def run_round(
     host_stats = frontier.where(F.col("state") == "active").groupBy("host").agg(
         F.count(F.lit(1)).alias("n_urls")
     )
-    # the budget table covers every frontier host by construction (it is
-    # the per-host politeness state), so host dictionary-encoding is sound
     plan = build_two_phase_plan(
-        active, robots, budgets, now, salt_buckets,
-        dict_encode_hosts=True, host_stats=host_stats,
+        active, robots, budgets, now, salt_buckets, host_stats=host_stats
     )
     # one job materializes the plan AND surfaces both counters
     plan = plan.observe(obs_plan, n_p).localCheckpoint(eager=True)
@@ -532,7 +514,7 @@ def run_round(
         .localCheckpoint(eager=True)
     )
     n_candidates = int(obs_cands.get["n"])
-    bloom = BroadcastBloom.load(bloom_prefix(catalog, round_no - 1)) if use_bloom else None
+    bloom = BroadcastBloom.load(bloom_prefix(catalog, round_no - 1))
     obs_adm, n_ad = _count_obs()
     admitted = (
         admit(cands, seen, bloom=bloom).observe(obs_adm, n_ad).localCheckpoint(eager=True)
@@ -597,20 +579,19 @@ def run_round(
     # persist the updated seen-filter: OR in this round's delta only.
     # Idempotent under crash-replay (set-OR), saved BEFORE the frontier
     # manifest so every committed round has its filter.
-    if use_bloom:
-        bloom.update(
-            spark.read.parquet(f"{catalog.root}/seen/data/round={round_no}").select(
-                "url_hash"
-            ),
-            n_delta=n_admitted + n_dead,
+    bloom.update(
+        spark.read.parquet(f"{catalog.root}/seen/data/round={round_no}").select(
+            "url_hash"
+        ),
+        n_delta=n_admitted + n_dead,
+    )
+    if bloom.needs_rebuild:
+        bloom = BroadcastBloom.build(
+            read_seen(catalog, round_no).select("url_hash"),
+            n_keys=bloom.n_keys,
+            capacity=BLOOM_REBUILD_FACTOR * bloom.n_keys,
         )
-        if bloom.needs_rebuild:
-            bloom = BroadcastBloom.build(
-                read_seen(catalog, round_no).select("url_hash"),
-                n_keys=bloom.n_keys,
-                capacity=BLOOM_REBUILD_FACTOR * bloom.n_keys,
-            )
-        bloom.save(bloom_prefix(catalog, round_no))
+    bloom.save(bloom_prefix(catalog, round_no))
 
     # manifest write = the round's COMMIT point; compaction every K
     # rounds bounds the delta chain. n_dead/n_admitted already counted
