@@ -49,10 +49,10 @@ def test_resume_equals_uninterrupted(spark, crawl_root, tmp_path_factory):
 def test_compaction_and_history_expiry(spark, crawl_root, tmp_path_factory):
     """COMPACT_EVERY=4: round 4 writes a compaction snapshot and expires
     earlier manifests/deltas; reads and resume still work after."""
-    from twawler_spark.plans.round import read_frontier
+    from twawler_spark.plans.round import read_frontier, round_status
 
     cat = _setup(spark, crawl_root, str(tmp_path_factory.mktemp("e")))
-    run_rounds(cat, 5, n_hosts=N_HOSTS)
+    stats = run_rounds(cat, 5, n_hosts=N_HOSTS)
     assert cat.compaction_rounds("frontier") == [4]  # 0..3 expired at r4
     assert cat.committed_rounds("frontier") == [4, 5]
     assert cat.latest_round("frontier") == 5
@@ -62,6 +62,16 @@ def test_compaction_and_history_expiry(spark, crawl_root, tmp_path_factory):
     assert read_frontier(cat, 5).count() > 0
     # manifest arithmetic matches the materialized view
     assert cat.read_manifest("frontier", 5)["n_rows"] == read_frontier(cat, 5).count()
+    # RoundStats commit with the round: the compaction snapshot's (its
+    # n_frontier is the snapshot count) and the next delta round's;
+    # stats of expired rounds went with their manifests
+    assert cat.read_manifest("frontier", 4)["stats"] == vars(stats[3])
+    assert stats[3].n_frontier == cat.read_manifest("frontier", 4)["n_rows"]
+    assert cat.read_manifest("frontier", 5)["stats"] == vars(stats[4])
+    assert round_status(cat) == {
+        "committed_rounds": [4, 5],
+        "stats": [vars(stats[3]), vars(stats[4])],
+    }
 
 
 def test_manifest_lineage(spark, crawl_root, tmp_path_factory):

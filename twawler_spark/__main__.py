@@ -6,7 +6,7 @@ or  python -m twawler_spark <cmd> ...
 Commands:
   gen    --root DIR --urls N --hosts H          write synthetic inputs
   crawl  --root DIR --rounds R --hosts H        run/resume scheduling rounds
-  status --root DIR                             committed rounds + metrics
+  status --root DIR                             committed rounds + RoundStats
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ if __package__ in (None, ""):
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from twawler_spark.io_catalog import Catalog
-from twawler_spark.plans.round import bootstrap, run_rounds
+from twawler_spark.plans.round import bootstrap, round_status, run_rounds
 from twawler_spark.session import get_spark
 from twawler_spark.synth import write_inputs
 
@@ -45,7 +45,7 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--salt", type=int, default=16)
     c.add_argument("--fresh", action="store_true", help="ignore committed snapshots")
 
-    s = sub.add_parser("status", help="committed rounds + per-round metrics")
+    s = sub.add_parser("status", help="committed rounds + per-round RoundStats")
     s.add_argument("--root", required=True)
 
     a = p.parse_args(argv)
@@ -70,15 +70,7 @@ def main(argv: list[str] | None = None) -> int:
                               "sec": round(dt, 2),
                               "scheduled_plus_deduped_per_sec": round(done / dt, 1) if dt else None}))
         elif a.cmd == "status":
-            cat = Catalog(spark, a.root)
-            rounds = cat.committed_rounds("frontier")
-            out = {"committed_rounds": rounds}
-            if rounds and cat.has_appends("round_metrics"):
-                rows = cat.read_appended("round_metrics").collect()
-                out["metrics"] = {
-                    f"r{r['round']}.{r['metric']}": r["value"] for r in rows
-                }
-            print(json.dumps(out, sort_keys=True))
+            print(json.dumps(round_status(Catalog(spark, a.root)), sort_keys=True))
         return 0
     finally:
         spark.stop()

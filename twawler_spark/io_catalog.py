@@ -9,7 +9,14 @@ implements the same contract on plain parquet dirs:
   root/<table>/_manifests/<round>.json         row counts + per-partition
                                                lineage (the north rule's
                                                "per-partition lineage +
-                                               counters")
+                                               counters") + the round's
+                                               stats, committed together
+
+The tables the round writes (``schemas.CATALOG_TABLES``: frontier,
+frontier_v, seen) have declared schemas: every write is checked against
+the declaration on the driver, and reads pass it to the parquet reader,
+so no read runs a footer-inference job. External inputs
+(``read_input``) keep inference.
 
 Resume = read the highest committed snapshot (manifest written last, so
 a killed round leaves no committed-but-partial snapshot — the
@@ -22,11 +29,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-import re
+from .schemas import CATALOG_TABLES
 
 # bump when the bucketed on-disk contract changes (file-per-bucket layout,
 # sort order, hash placement); markers written by other versions are stale
@@ -134,6 +144,28 @@ def register_bucketed(
     )
 
 
+def _check_schema(df: DataFrame, table: str) -> None:
+    """Raise ``ValueError`` naming the first column where ``df`` departs
+    from ``table``'s declared schema: missing, extra or retyped. Names
+    and types only — parquet reads every column back nullable. Runs on
+    the driver (analysis only, no job); undeclared tables pass."""
+    want = CATALOG_TABLES.get(table)
+    if want is None:
+        return
+    got = {f.name: f.dataType for f in df.schema.fields}
+    for f in want.fields:
+        if f.name not in got:
+            raise ValueError(f"{table}: column {f.name!r} is missing")
+        if got[f.name] != f.dataType:
+            raise ValueError(
+                f"{table}: column {f.name!r} is {got[f.name].simpleString()}, "
+                f"declared {f.dataType.simpleString()}"
+            )
+    extra = sorted(set(got) - set(want.fieldNames()))
+    if extra:
+        raise ValueError(f"{table}: column {extra[0]!r} is not declared")
+
+
 class Catalog:
     def __init__(self, spark: SparkSession, root: str, use_iceberg: bool = False):
         self.spark = spark
@@ -152,40 +184,57 @@ class Catalog:
     def _manifest_path(self, table: str, round_no: int) -> str:
         return f"{self.root}/{table}/_manifests/{round_no}.json"
 
-    def write_snapshot(self, df: DataFrame, table: str, round_no: int) -> dict:
+    def write_snapshot(
+        self,
+        df: DataFrame,
+        table: str,
+        round_no: int,
+        stats: Callable[[int], dict] | None = None,
+    ) -> dict:
+        """Write a full snapshot and commit it. ``stats(n_rows)``, if
+        given, returns the round's stats; they are committed in the
+        manifest once the snapshot's row count is known."""
+        _check_schema(df, table)
         path = self._snap_dir(table, round_no)
         df.write.mode("overwrite").parquet(path)
-        written = self.spark.read.parquet(path)
+        written = self._reader(table).parquet(path)
         lineage = (
             written.groupBy(F.spark_partition_id().alias("partition"))
             .count()
             .orderBy("partition")
             .collect()
         )
+        n_rows = int(sum(r["count"] for r in lineage))
         manifest = {
             "table": table,
             "round": round_no,
             "kind": "compaction",
-            "n_rows": int(sum(r["count"] for r in lineage)),
+            "n_rows": n_rows,
             "partitions": [
                 {"partition": int(r["partition"]), "rows": int(r["count"])}
                 for r in lineage
             ],
             "columns": written.columns,
         }
+        if stats is not None:
+            manifest["stats"] = stats(n_rows)
         self._write_manifest(table, round_no, manifest)
         return manifest
 
-    def commit_round(self, table: str, round_no: int, n_rows: int) -> dict:
+    def commit_round(
+        self, table: str, round_no: int, n_rows: int, stats: dict | None = None
+    ) -> dict:
         """Commit a delta-only round: manifest without snapshot data
         (the delta files were appended separately; this rename is the
-        atomic commit point)."""
+        atomic commit point, so ``stats`` commit with the round)."""
         manifest = {
             "table": table,
             "round": round_no,
             "kind": "commit",
             "n_rows": int(n_rows),
         }
+        if stats is not None:
+            manifest["stats"] = stats
         self._write_manifest(table, round_no, manifest)
         return manifest
 
@@ -222,7 +271,7 @@ class Catalog:
             round_no = self.latest_round(table)
             if round_no is None:
                 raise FileNotFoundError(f"no committed snapshot for {table}")
-        return self.spark.read.parquet(self._snap_dir(table, round_no))
+        return self._reader(table).parquet(self._snap_dir(table, round_no))
 
     def read_manifest(self, table: str, round_no: int) -> dict:
         with open(self._manifest_path(table, round_no)) as f:
@@ -245,18 +294,29 @@ class Catalog:
 
     # ------------------------------------------------------- append tables
     def append(self, df: DataFrame, table: str, round_no: int) -> None:
+        _check_schema(df, table)
         df.write.mode("overwrite").parquet(
             f"{self.root}/{table}/data/round={round_no}"
         )
 
     def read_appended(self, table: str) -> DataFrame:
         return (
-            self.spark.read.option("basePath", f"{self.root}/{table}/data")
+            self._reader(table, appended=True)
+            .option("basePath", f"{self.root}/{table}/data")
             .parquet(f"{self.root}/{table}/data")
         )
 
-    def has_appends(self, table: str) -> bool:
-        return os.path.isdir(f"{self.root}/{table}/data")
+    def _reader(self, table: str, appended: bool = False):
+        """A parquet reader carrying ``table``'s declared schema (plus the
+        ``round`` partition column of an appended table), or an inferring
+        one for undeclared tables."""
+        reader = self.spark.read
+        want = CATALOG_TABLES.get(table)
+        if want is None:
+            return reader
+        if appended:
+            want = T.StructType(want.fields + [T.StructField("round", T.IntegerType())])
+        return reader.schema(want)
 
     # ------------------------------------------------------------- inputs
     def read_input(self, name: str) -> DataFrame:

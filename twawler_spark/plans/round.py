@@ -3,18 +3,25 @@
 Rebuild of the reference's 4-phase crawl cycle
 (scripts/crawl-tweets.sh:37-160): score -> schedule under per-host
 budget -> fetch -> classify/transition -> discover/admit, as ONE Spark
-batch over snapshot tables. Plan shape per round:
+batch over snapshot tables. Plan shape per round (main thread = M,
+worker threads = W; W writes overlap the M steps after them):
 
   frontier snapshot (scan, pruned)           [parquet min-max on state]
     -> score                                  [column exprs, codegen]
     -> robots gate                            [broadcast join + exists()]
     -> per-host budget rank                   [two-phase salted window]
+    -> plan checkpoint                     M
+       -> crawl_order append               W
     -> fetch: status, docs, outlinks          [ONE Arrow pass, no exchange,
-                                               ≤ Σbudgets rows, checkpointed]
-    -> documents append (dedup doc_id)        [explode + hash agg]
+                                               ≤ Σbudgets rows, checkpointed] M
+       -> documents, follow_edges appends  W  [JVM projections of the fetch
+                                               checkpoint]
     -> outlink discovery -> seen filter       [persisted broadcast bloom probe
-                                               + scan-only confirm]
-    -> state MERGE + snapshot write           [broadcast join, atomic manifest]
+                                               + scan-only confirm] M
+       -> state MERGE -> frontier_v append W  [broadcast join]
+       -> seen append + filter update      M  [admitted ∪ 404 keys, in memory]
+    -> barrier, then commit: seen manifest, filter save, frontier manifest
+       (+ RoundStats; a snapshot every COMPACT_EVERY rounds)
 
 Per-round counters ride Observations on the round's own writes and
 eager checkpoints — zero standalone count() jobs (the r1 scaling fix).
@@ -29,8 +36,10 @@ State machine (reference utils.py:351-446 set-mutation protocol):
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, replace
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -70,13 +79,6 @@ class RoundStats:
     n_dead: int
     n_frontier: int
     n_seen: int
-
-    def as_rows(self):
-        return [
-            (self.round, k, int(v))
-            for k, v in vars(self).items()
-            if k != "round"
-        ]
 
 
 COMPACT_EVERY = 4  # frontier compaction cadence (rounds)
@@ -436,10 +438,27 @@ def run_round(
 
     Driver-action discipline (the scaling-efficiency fix): every counter
     rides an ``Observation`` on a job the round runs ANYWAY (a write or
-    an eager checkpoint) — no standalone ``count()`` jobs, no re-reads
-    of freshly written parquet. The seen-filter is LOADED from the
-    catalog (persisted at bootstrap) and updated with this round's
+    an eager checkpoint) — no standalone ``count()`` jobs, and no
+    re-reads of the round's own writes outside the compaction snapshot
+    and a filter rebuild: the dead keys and the seen-filter delta come
+    from the fetch and admit checkpoints. The seen-filter is LOADED from
+    the catalog (persisted at bootstrap) and updated with this round's
     delta only — never rebuilt from the full seen-set.
+
+    Overlap: the writes run as a dependency graph, not a sequence. The
+    crawl_order, documents and follow_edges appends read only the plan
+    and fetch checkpoints, so worker threads run them as soon as those
+    exist, while the main thread fetches and checkpoints the candidates
+    and the admitted keys; the frontier_v merge then runs on a worker
+    next to the seen append. Spark schedules the concurrent jobs on the
+    shared executors. The Python UDF work (fetch, bloom probe) and the
+    four checkpoints stay on the main thread, in order: plan, fetch,
+    candidates, admitted.
+
+    Commit barrier: every write finishes (or raises) before the seen
+    manifest, the filter save and the frontier manifest, in that order.
+    A failed write therefore leaves the round uncommitted, and no write
+    is still running when the call returns or raises.
     """
     spark = catalog.spark
     now = round_now_epoch(round_no)
@@ -474,117 +493,125 @@ def run_round(
     n_active = int(obs_active.get["n"])
     n_scheduled = int(obs_plan.get["n"])
 
-    # ------------------------------------------------------------- fetch
-    # one Arrow pass computes status, documents and outlinks per plan
-    # URL; documents, results and links below are JVM-only projections
-    # of this checkpoint, so the Python fetch runs exactly once
-    fetched = fetch(plan, round_no, n_hosts).localCheckpoint(eager=True)
-    results = results_of(fetched)
-    obs_docs, n_d = _count_obs()
-    docs = documents_of(fetched, round_no).dropDuplicates(["doc_id"]).observe(obs_docs, n_d)
-    catalog.append(docs, "documents", round_no)
+    # writes go to workers as soon as their checkpoints exist; leaving
+    # the block waits for every write, and .result() raises before any
+    # commit (see the docstring)
+    with ThreadPoolExecutor(max_workers=4) as pool:
+
+        def write(df: DataFrame, table: str):
+            # carry the job group, description and tags to the worker
+            task = inheritable_thread_target(spark)(catalog.append)
+            return pool.submit(task, df, table, round_no)
+
+        # crawl-order lineage (golden for ordering-equality tests)
+        writes = [
+            write(
+                plan.select("url_hash", "host", "phase", "expected", "fetch_rank"),
+                "crawl_order",
+            )
+        ]
+
+        # --------------------------------------------------------- fetch
+        # one Arrow pass computes status, documents and outlinks per plan
+        # URL; documents, results and links below are JVM-only
+        # projections of this checkpoint, so the Python fetch runs once
+        fetched = fetch(plan, round_no, n_hosts).localCheckpoint(eager=True)
+        results = results_of(fetched)
+        obs_docs, n_d = _count_obs()
+        writes.append(write(
+            documents_of(fetched, round_no).dropDuplicates(["doc_id"]).observe(obs_docs, n_d),
+            "documents",
+        ))
+        links = outlinks_of(fetched).withColumn("url_hash", F.xxhash64(F.col("url")))
+        # follow-edge table (addfollowers.py:39 shape: follower -> followee)
+        writes.append(write(
+            links.select(F.col("src_hash"), F.col("url_hash").alias("dst_hash"))
+            .dropDuplicates(["src_hash", "dst_hash"])
+            .withColumn("discovered_round", F.lit(round_no)),
+            "follow_edges",
+        ))
+
+        # ---------------------------------------------- discovery + admit
+        obs_cands, n_c = _count_obs()
+        # checkpoint: the dedup shuffle runs once, not once per consumer
+        # (the admit plan references candidates in two branches)
+        cands = (
+            links.dropDuplicates(["url_hash"])  # within-round dedup
+            .observe(obs_cands, n_c)
+            .localCheckpoint(eager=True)
+        )
+        n_candidates = int(obs_cands.get["n"])
+        bloom = BroadcastBloom.load(bloom_prefix(catalog, round_no - 1))
+        obs_adm, n_ad = _count_obs()
+        admitted = (
+            admit(cands, seen, bloom=bloom).observe(obs_adm, n_ad).localCheckpoint(eager=True)
+        )
+        n_admitted = int(obs_adm.get["n"])
+
+        new_rows = admitted.select(
+            "url",
+            "url_hash",
+            F.regexp_extract("url", r"^https://([^/]+)/", 1).alias("host"),
+            # decompose once at admission; every later round reads only this
+            F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("/")).alias("path"),
+            F.lit("active").alias("state"),
+            F.lit(round_no).alias("state_round"),
+            F.lit(0).cast("long").alias("last_id"),
+            F.lit(0).cast("long").alias("first_id"),
+            F.lit(False).alias("reached"),
+            F.timestamp_seconds(F.lit(now)).alias("latest_ts"),
+            F.timestamp_seconds(F.lit(now)).alias("earliest_ts"),
+            F.lit(1.0).alias("rate_tph"),
+            F.lit(round_no).alias("discovered_round"),
+        )
+
+        # ----------------------------------------------------- state MERGE
+        merged = merge_fetch_results(frontier, results, round_no, now)
+        changed = merged.where(F.col("status").isNotNull() | F.col("__revived"))
+        delta = (
+            changed.select(*[f.name for f in FRONTIER.fields])
+            .withColumn(
+                "op", F.when(F.col("state") == "dead", "delete").otherwise("upsert")
+            )
+            .unionByName(new_rows.withColumn("op", F.lit("upsert")))
+        )
+        writes.append(write(delta, "frontier_v"))
+
+        # append-only seen delta (O(|delta|)/round; see read_seen). The
+        # dead keys are the fetch's 404s: the merge is the only source
+        # of 'dead' and a frontier view never holds dead rows, so these
+        # are exactly the delta's op='delete' rows.
+        dead_keys = results.where(F.col("status") == 404).select("url_hash")
+        seen_delta = admitted.select(
+            "url_hash", F.lit("tracked").alias("set_name"), F.lit(round_no).alias("added_round")
+        ).unionByName(
+            dead_keys.select(
+                "url_hash", F.lit("dead").alias("set_name"), F.lit(round_no).alias("added_round")
+            )
+        )
+        obs_dead = Observation()
+        catalog.append(
+            seen_delta.observe(
+                obs_dead,
+                F.sum(F.when(F.col("set_name") == "dead", 1).otherwise(0)).alias("n_dead"),
+            ),
+            "seen",
+            round_no,
+        )
+        n_dead = int(obs_dead.get["n_dead"] or 0)
+        # OR this round's delta into the filter (in memory; saved below)
+        bloom.update(seen_delta, n_delta=n_admitted + n_dead)
+        for w in writes:
+            w.result()
     n_docs = int(obs_docs.get["n"])
 
-    # crawl-order lineage (golden for ordering-equality tests)
-    catalog.append(
-        plan.select("url_hash", "host", "phase", "expected", "fetch_rank"),
-        "crawl_order",
-        round_no,
-    )
-
-    # -------------------------------------------------- discovery + admit
-    links = outlinks_of(fetched).withColumn("url_hash", F.xxhash64(F.col("url")))
-    # follow-edge table (addfollowers.py:39 shape: follower -> followee)
-    catalog.append(
-        links.select(
-            F.col("src_hash"),
-            F.col("url_hash").alias("dst_hash"),
-        )
-        .dropDuplicates(["src_hash", "dst_hash"])
-        .withColumn("discovered_round", F.lit(round_no)),
-        "follow_edges",
-        round_no,
-    )
-    obs_cands, n_c = _count_obs()
-    # checkpoint: the dedup shuffle runs once, not once per consumer
-    # (the admit plan references candidates in two branches)
-    cands = (
-        links.dropDuplicates(["url_hash"])  # within-round dedup
-        .observe(obs_cands, n_c)
-        .localCheckpoint(eager=True)
-    )
-    n_candidates = int(obs_cands.get["n"])
-    bloom = BroadcastBloom.load(bloom_prefix(catalog, round_no - 1))
-    obs_adm, n_ad = _count_obs()
-    admitted = (
-        admit(cands, seen, bloom=bloom).observe(obs_adm, n_ad).localCheckpoint(eager=True)
-    )
-    n_admitted = int(obs_adm.get["n"])
-
-    new_rows = admitted.select(
-        "url",
-        "url_hash",
-        F.regexp_extract("url", r"^https://([^/]+)/", 1).alias("host"),
-        # decompose once at admission; every later round reads only this
-        F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("/")).alias("path"),
-        F.lit("active").alias("state"),
-        F.lit(round_no).alias("state_round"),
-        F.lit(0).cast("long").alias("last_id"),
-        F.lit(0).cast("long").alias("first_id"),
-        F.lit(False).alias("reached"),
-        F.timestamp_seconds(F.lit(now)).alias("latest_ts"),
-        F.timestamp_seconds(F.lit(now)).alias("earliest_ts"),
-        F.lit(1.0).alias("rate_tph"),
-        F.lit(round_no).alias("discovered_round"),
-    )
-
-    # --------------------------------------------------------- state MERGE
-    merged = merge_fetch_results(frontier, results, round_no, now)
-    changed = merged.where(F.col("status").isNotNull() | F.col("__revived"))
-    frontier_cols = [f.name for f in FRONTIER.fields]
-    obs_delta = Observation()
-    delta = (
-        changed.select(*frontier_cols)
-        .withColumn(
-            "op", F.when(F.col("state") == "dead", "delete").otherwise("upsert")
-        )
-        .unionByName(new_rows.withColumn("op", F.lit("upsert")))
-        .observe(
-            obs_delta,
-            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("n_dead"),
-        )
-    )
-    catalog.append(delta, "frontier_v", round_no)
-    n_dead = int(obs_delta.get["n_dead"] or 0)
-    # dead keys re-read from the just-written (small) delta partition —
-    # cheaper than recomputing the frontier-results merge a second time
-    dead_keys = (
-        spark.read.parquet(f"{catalog.root}/frontier_v/data/round={round_no}")
-        .where(F.col("op") == "delete")
-        .select("url_hash")
-    )
-
-    # append-only seen delta (O(|delta|)/round; see read_seen)
-    seen_delta = admitted.select(
-        "url_hash", F.lit("tracked").alias("set_name"), F.lit(round_no).alias("added_round")
-    ).unionByName(
-        dead_keys.select(
-            "url_hash", F.lit("dead").alias("set_name"), F.lit(round_no).alias("added_round")
-        )
-    )
-    catalog.append(seen_delta, "seen", round_no)
+    # ---------------------------------------------------------- commit
     n_seen = catalog.read_manifest("seen", round_no - 1)["n_rows"] + n_admitted + n_dead
     catalog.commit_round("seen", round_no, n_seen)
 
-    # persist the updated seen-filter: OR in this round's delta only.
-    # Idempotent under crash-replay (set-OR), saved BEFORE the frontier
-    # manifest so every committed round has its filter.
-    bloom.update(
-        spark.read.parquet(f"{catalog.root}/seen/data/round={round_no}").select(
-            "url_hash"
-        ),
-        n_delta=n_admitted + n_dead,
-    )
+    # persist the updated seen-filter. Idempotent under crash-replay
+    # (set-OR), saved BEFORE the frontier manifest so every committed
+    # round has its filter.
     if bloom.needs_rebuild:
         bloom = BroadcastBloom.build(
             read_seen(catalog, round_no).select("url_hash"),
@@ -593,18 +620,11 @@ def run_round(
         )
     bloom.save(bloom_prefix(catalog, round_no))
 
-    # manifest write = the round's COMMIT point; compaction every K
-    # rounds bounds the delta chain. n_dead/n_admitted already counted
-    # (localCheckpointed inputs), so nothing below re-reads expired deltas.
-    if round_no % COMPACT_EVERY == 0:
-        fm = catalog.write_snapshot(read_frontier(catalog, round_no), "frontier", round_no)
-        n_frontier = fm["n_rows"]
-        expire_frontier_history(catalog)
-    else:
-        prev_n = catalog.read_manifest("frontier", round_no - 1)["n_rows"]
-        n_frontier = prev_n - n_dead + n_admitted
-        catalog.commit_round("frontier", round_no, n_frontier)
-
+    # manifest write = the round's COMMIT point, with its RoundStats;
+    # compaction every K rounds bounds the delta chain. n_dead/n_admitted
+    # already counted (localCheckpointed inputs), so nothing below
+    # re-reads expired deltas.
+    prev_n = catalog.read_manifest("frontier", round_no - 1)["n_rows"]
     stats = RoundStats(
         round=round_no,
         n_active=n_active,
@@ -613,12 +633,32 @@ def run_round(
         n_candidates=n_candidates,
         n_admitted=n_admitted,
         n_dead=n_dead,
-        n_frontier=n_frontier,
+        n_frontier=prev_n - n_dead + n_admitted,
         n_seen=n_seen,
     )
-    metrics = spark.createDataFrame(stats.as_rows(), "round int, metric string, value long")
-    catalog.append(metrics, "round_metrics", round_no)
+    if round_no % COMPACT_EVERY == 0:
+        # a snapshot commits its own row count as n_frontier
+        fm = catalog.write_snapshot(
+            read_frontier(catalog, round_no), "frontier", round_no,
+            stats=lambda n_rows: vars(replace(stats, n_frontier=n_rows)),
+        )
+        stats = RoundStats(**fm["stats"])
+        expire_frontier_history(catalog)
+    else:
+        catalog.commit_round("frontier", round_no, stats.n_frontier, stats=vars(stats))
     return stats
+
+
+def round_status(catalog: Catalog) -> dict:
+    """Committed frontier rounds and the RoundStats committed with each
+    (bootstrap round 0 has none; rounds expired by compaction take
+    their stats with them)."""
+    rounds = catalog.committed_rounds("frontier")
+    manifests = [catalog.read_manifest("frontier", r) for r in rounds]
+    return {
+        "committed_rounds": rounds,
+        "stats": [m["stats"] for m in manifests if "stats" in m],
+    }
 
 
 def run_rounds(

@@ -791,8 +791,7 @@ _WINDOW_R5 = [
     # shape's siblings (user_creation_dates, word_daily_series) are
     # r4-green, and the crawl->corpus composition has no driver row yet
     # a13_counters yields its slot to admit_cuckoo_retract (new cuckoo
-    # seen-filter tier, never driver-checked); the counters engine path
-    # stays pytest-verified via round_metrics
+    # seen-filter tier, never driver-checked)
     # a9_degree_stats + a15_lang_topk yield their slots to the two
     # never-driver-checked round-5d operators (crawl_bfs_depth,
     # dust_rules): the A-family keeps a5/a7 in-window and both

@@ -107,21 +107,13 @@ FETCH_RESULT = T.StructType(
     ]
 )
 
-# per-round counters (reference count-dumped.py / crawlerstats analog)
-ROUND_METRICS = T.StructType(
-    [
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("value", T.LongType(), False),
-    ]
+# frontier change log: one FRONTIER row per changed key and round, with
+# op = 'upsert' | 'delete' (SCD2 deltas between compaction snapshots)
+FRONTIER_V = T.StructType(
+    FRONTIER.fields + [T.StructField("op", T.StringType(), False)]
 )
 
-BLOOM_SHARD = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("n_keys", T.LongType(), False),
-        T.StructField("m_bits", T.LongType(), False),
-        T.StructField("k_hashes", T.IntegerType(), False),
-        T.StructField("bits", T.BinaryType(), False),
-    ]
-)
+# the catalog tables the round itself writes: Catalog checks every write
+# against these and reads them without schema inference; appended tables
+# gain the ``round`` partition column on read
+CATALOG_TABLES = {"frontier": FRONTIER, "frontier_v": FRONTIER_V, "seen": SEEN}

@@ -14,6 +14,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Driver heap that fits the host: half its physical memory, capped
+    at 16 GiB, in whole GiB (at least 1)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "twawler_spark",
     master: str | None = None,
@@ -42,7 +49,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # the seen-filter merge (treeAggregate of per-bucket Bloom
         # shards, 256 MiB each at the 10^8-key tier) returns several
         # shard-sized partials to the driver in one stage — the 1g
