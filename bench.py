@@ -298,8 +298,8 @@ def sched_round_once(
     ``url_hash``, so the whole-frontier dedup anti-join is a
     zero-exchange zero-sort per-bucket merge — no shuffle ever touches
     either 10^10-row table, and scaling is bounded only by scan
-    bandwidth. The wide ``url`` column is projected away (path
-    pre-extracted) BEFORE ranking, so no shuffle carries the URL string.
+    bandwidth. The wide ``url`` column is never read (robots gating
+    reads ``FRONTIER.path``), so no shuffle carries the URL string.
     Comparison variants: exact SMJ anti-join over unbucketed storage
     (shuffles both sides), exact broadcast anti-join (valid only while
     seen keys fit executor memory — cannot exist at 10^10), and the
@@ -319,7 +319,7 @@ def sched_round_once(
     # the wide url column (the largest column in the table)
     narrow = frontier.where(F.col("state") == "active").select(
         "url_hash", "host", "last_id", "first_id", "reached", "rate_tph",
-        "latest_ts", F.col("path").alias("__path"),
+        "latest_ts", "path",
     )
     if bloom is None and exact_broadcast:
         admitted = narrow.join(

@@ -309,10 +309,9 @@ def main():
     seen = spark.read.parquet(f"{root}/seen_seed").select("url_hash")
     budgets = spark.read.parquet(f"{root}/host_budget")
     robots = spark.read.parquet(f"{root}/robots")
-    path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("/"))
     narrow = frontier.where(F.col("state") == "active").select(
         "url_hash", "host", "last_id", "first_id", "reached", "rate_tph",
-        "latest_ts", path.alias("__path"),
+        "latest_ts", "path",
     )
     adm = narrow.join(F.broadcast(seen), "url_hash", "left_anti")
     round_plan = build_two_phase_plan(adm, robots, budgets, NOW_EPOCH + 3600, 16)
@@ -338,7 +337,7 @@ def main():
     fb = spark.table("audit_frontier_b")
     narrow_b = fb.where(F.col("state") == "active").select(
         "url_hash", "host", "last_id", "first_id", "reached", "rate_tph",
-        "latest_ts", path.alias("__path"),
+        "latest_ts", "path",
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     adm_b = narrow_b.join(
@@ -413,8 +412,8 @@ def main():
         f.write("  deny-map groupBy; both ranking phases come out of ONE stage-B pass\n")
         f.write("  (mixed-order row_number — no union, no duplicated subtree). The\n")
         f.write("  dedup anti-join and robots gate are broadcast — the frontier is\n")
-        f.write("  never reshuffled for them; the wide `url` string is projected out\n")
-        f.write("  before any exchange (`__path` pre-extracted).\n")
+        f.write("  never reshuffled for them; the wide `url` string is never read\n")
+        f.write("  (robots gating reads `FRONTIER.path`).\n")
         f.write("- `frontier dedup (co-bucketed)`: ZERO exchanges, ZERO sorts — the\n")
         f.write("  production storage layout (frontier and seen bucketBy+sortBy on\n")
         f.write("  url_hash, one file per bucket) turns whole-frontier dedup into a\n")

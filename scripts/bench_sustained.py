@@ -80,7 +80,7 @@ def main() -> int:
             # the full resume + commit cost a real restart would.
             target = (cat.latest_round("frontier") or 0) + 1
             t0 = time.time()
-            (st,) = run_rounds(cat, target, n_hosts=a.hosts, salt_buckets=16)
+            (st,) = run_rounds(cat, target, n_hosts=a.hosts)
             dt = time.time() - t0
             work = st.n_scheduled + st.n_candidates
             row = {

@@ -1,12 +1,15 @@
 """Every ``from twawler_spark... import name`` in the entry-point scripts
 (bench, driver entry, ``scripts/``, ``perfbench/``) resolves — including
-imports local to a function, which only fail when that arm runs. No
-Spark session is needed: only the modules are imported."""
+imports local to a function, which only fail when that arm runs — and
+every keyword argument those scripts pass to an imported name is a
+parameter of it, so a removed option fails here, not mid-run. No Spark
+session is needed: only the modules are imported."""
 
 from __future__ import annotations
 
 import ast
 import importlib
+import inspect
 import os
 
 import pytest
@@ -27,12 +30,16 @@ def _entry_files() -> list[str]:
     return files
 
 
-def _package_imports(path: str) -> list[tuple[int, str, str]]:
-    """(line, module, name) for every ``from twawler_spark...`` import."""
+def _parse(path: str) -> ast.Module:
     with open(path) as f:
-        tree = ast.parse(f.read(), filename=path)
+        return ast.parse(f.read(), filename=path)
+
+
+def _package_imports(tree: ast.Module) -> list[tuple[int, str, str, str]]:
+    """(line, module, name, local name) for every ``from twawler_spark...``
+    import."""
     return [
-        (node.lineno, node.module, a.name)
+        (node.lineno, node.module, a.name, a.asname or a.name)
         for node in ast.walk(tree)
         if isinstance(node, ast.ImportFrom)
         and node.level == 0
@@ -41,17 +48,61 @@ def _package_imports(path: str) -> list[tuple[int, str, str]]:
     ]
 
 
+def _resolve(module: str, name: str):
+    mod = importlib.import_module(module)
+    if hasattr(mod, name):
+        return getattr(mod, name)
+    # `from pkg import submodule` resolves once the submodule loads
+    return importlib.import_module(f"{module}.{name}")
+
+
 @pytest.mark.parametrize(
     "path", _entry_files(), ids=lambda p: os.path.relpath(p, REPO)
 )
 def test_entry_point_imports_resolve(path):
-    for line, module, name in _package_imports(path):
+    for line, module, name, _ in _package_imports(_parse(path)):
         where = f"{os.path.relpath(path, REPO)}:{line}"
-        mod = importlib.import_module(module)
-        if hasattr(mod, name):
-            continue
-        # `from pkg import submodule` resolves once the submodule loads
         try:
-            importlib.import_module(f"{module}.{name}")
+            _resolve(module, name)
         except ModuleNotFoundError:
             pytest.fail(f"{where}: {module} has no name {name!r}")
+
+
+def _call_target(func: ast.expr, imported: dict):
+    """The package object a call reaches: an imported name (``f(...)``,
+    aliases included) or an attribute of an imported class or module
+    (``Cls.f(...)``); None for any other call."""
+    if isinstance(func, ast.Name):
+        return imported.get(func.id)
+    if isinstance(func, ast.Attribute) and isinstance(func.value, ast.Name):
+        owner = imported.get(func.value.id)
+        if inspect.isclass(owner) or inspect.ismodule(owner):
+            return getattr(owner, func.attr, None)
+    return None
+
+
+@pytest.mark.parametrize(
+    "path", _entry_files(), ids=lambda p: os.path.relpath(p, REPO)
+)
+def test_entry_point_keywords_match_signatures(path):
+    tree = _parse(path)
+    imported = {
+        local: _resolve(module, name)
+        for _, module, name, local in _package_imports(tree)
+    }
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        target = _call_target(node.func, imported)
+        if target is None or not callable(target):
+            continue
+        params = inspect.signature(target).parameters.values()
+        if any(p.kind is p.VAR_KEYWORD for p in params):
+            continue
+        names = {p.name for p in params}
+        for kw in node.keywords:
+            if kw.arg is not None and kw.arg not in names:
+                pytest.fail(
+                    f"{os.path.relpath(path, REPO)}:{node.lineno}: "
+                    f"{ast.unparse(node.func)} takes no keyword {kw.arg!r}"
+                )

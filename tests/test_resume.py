@@ -59,6 +59,7 @@ def test_compaction_and_history_expiry(spark, crawl_root, tmp_path_factory):
     assert sorted(os.listdir(f"{cat.root}/bloom")) == [
         "4.bits", "4.json", "5.bits", "5.json"
     ]
+    assert sorted(os.listdir(f"{cat.root}/seen/_manifests")) == ["4.json", "5.json"]
     assert read_frontier(cat, 5).count() > 0
     # manifest arithmetic matches the materialized view
     assert cat.read_manifest("frontier", 5)["n_rows"] == read_frontier(cat, 5).count()

@@ -193,10 +193,13 @@ def test_null_first_id_rides_the_plan_intact(spark, crawl_root):
     assert all(r["first_id"] is not None for r in other)
 
 
-def test_missing_budget_host_fails_fast(spark, crawl_root):
+@pytest.mark.parametrize("case", ["missing_host", "null_budget"])
+def test_missing_budget_host_fails_fast(spark, crawl_root, case):
     """Host dictionary-encoding regression (ADVICE r3): a frontier host absent
     from the budgets dim must raise, not silently collapse all unmatched
-    hosts into one NULL-host ranking partition."""
+    hosts into one NULL-host ranking partition. A host whose
+    budget_per_round is NULL must raise too: the planner has no default
+    budget to give it."""
     from pyspark.sql import functions as F
 
     from twawler_spark.plans.round import build_two_phase_plan
@@ -206,10 +209,18 @@ def test_missing_budget_host_fails_fast(spark, crawl_root):
     robots = spark.read.parquet(f"{crawl_root}/robots")
     budgets = spark.read.parquet(f"{crawl_root}/host_budget")
     one_host = budgets.select("host").first()["host"]
-    holey = budgets.where(F.col("host") != one_host)
+    if case == "missing_host":
+        holey = budgets.where(F.col("host") != one_host)
+        match = "missing from budgets dim"
+    else:
+        holey = budgets.withColumn(
+            "budget_per_round",
+            F.when(F.col("host") != one_host, F.col("budget_per_round")),
+        )
+        match = "NULL budget_per_round"
     active = frontier.where(F.col("state") == "active")
     plan = build_two_phase_plan(
         active, robots, holey, NOW_EPOCH + 3600, salt_buckets=4,
     )
-    with pytest.raises(Exception, match="missing from budgets dim"):
+    with pytest.raises(Exception, match=match):
         plan.collect()

@@ -42,8 +42,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--root", required=True)
     c.add_argument("--rounds", type=int, default=3)
     c.add_argument("--hosts", type=int, required=True)
-    c.add_argument("--salt", type=int, default=16)
-    c.add_argument("--fresh", action="store_true", help="ignore committed snapshots")
 
     s = sub.add_parser("status", help="committed rounds + per-round RoundStats")
     s.add_argument("--root", required=True)
@@ -58,10 +56,11 @@ def main(argv: list[str] | None = None) -> int:
                               "sec": round(time.time() - t0, 2)}))
         elif a.cmd == "crawl":
             cat = Catalog(spark, a.root)
-            if a.fresh or cat.latest_round("frontier") is None:
+            # a fresh crawl is a fresh --root: bootstrap only an empty catalog
+            if cat.latest_round("frontier") is None:
                 bootstrap(cat, cat.read_input("frontier_seed"), cat.read_input("seen_seed"))
             t0 = time.time()
-            stats = run_rounds(cat, a.rounds, n_hosts=a.hosts, salt_buckets=a.salt)
+            stats = run_rounds(cat, a.rounds, n_hosts=a.hosts)
             dt = time.time() - t0
             for st in stats:
                 print(json.dumps(vars(st)))

@@ -60,12 +60,6 @@ def doc_text(spans: Column, sep: str = " ") -> Column:
     return F.array_join(texts, sep)
 
 
-def media_refs(spans: Column) -> Column:
-    return F.transform(
-        F.filter(spans, lambda s: s["kind"] == "media"), lambda s: s["media_ref"]
-    )
-
-
 def span_stats(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
     """Per-doc span-mix features (text/media counts, text length)."""
     s = F.col(spans_col)

@@ -123,13 +123,6 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return canonicalize_series(urls)
 
 
-def canonical_host(url_col: Column) -> Column:
-    """Host of the *canonical* URL, as a pure column expression."""
-    host = F.lower(F.parse_url(url_col, F.lit("HOST")))
-    host = F.regexp_replace(host, r"^www\.", "")
-    return F.regexp_replace(host, r":(80|443)$", "")
-
-
 def url_hash64(url_col: Column) -> Column:
     """64-bit hash of a canonical URL — JVM-side, codegen'd.
 

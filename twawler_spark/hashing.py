@@ -119,11 +119,6 @@ def stream64(key: int, stream: int, index: int = 0) -> int:
     return splitmix64(splitmix64(to_unsigned64(key) ^ (stream * _SM_M1 & _M)) ^ (index * _SM_M2 & _M))
 
 
-def stream_u01(key: int, stream: int, index: int = 0) -> float:
-    """Deterministic uniform in [0, 1)."""
-    return (stream64(key, stream, index) >> 12) / float(1 << 52)
-
-
 # Vectorized numpy variants (the array kernels of docspec).
 
 def np_splitmix64(z: np.ndarray) -> np.ndarray:
@@ -145,7 +140,3 @@ def np_stream64(keys: np.ndarray, stream: int, index: int | np.ndarray = 0) -> n
         else:
             mix = np.uint64((index * _SM_M2) & _M)
         return np_splitmix64(a ^ mix)
-
-
-def np_stream_u01(keys: np.ndarray, stream: int, index: int = 0) -> np.ndarray:
-    return (np_stream64(keys, stream, index) >> np.uint64(12)).astype(np.float64) / float(1 << 52)

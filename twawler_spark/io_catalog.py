@@ -4,8 +4,9 @@ The design targets Iceberg (hidden partitioning, snapshot isolation,
 MERGE); this sandbox ships no iceberg-spark-runtime jar, so ``Catalog``
 implements the same contract on plain parquet dirs:
 
-  root/<table>/snap=<round>/part-*.parquet     full snapshots (frontier, seen)
-  root/<table>/data/round=<round>/...          append-only logs (documents)
+  root/<table>/snap=<round>/part-*.parquet     full snapshots (frontier)
+  root/<table>/data/round=<round>/...          append-only logs (frontier_v,
+                                               seen, documents, ...)
   root/<table>/_manifests/<round>.json         row counts + per-partition
                                                lineage (the north rule's
                                                "per-partition lineage +
@@ -21,8 +22,13 @@ so no read runs a footer-inference job. External inputs
 Resume = read the highest committed snapshot (manifest written last, so
 a killed round leaves no committed-but-partial snapshot — the
 reference's "kill-safe, no corrupt state" invariant, README Stopping).
-If an Iceberg catalog is configured on the session, set
-``use_iceberg=True`` to route through table identifiers instead.
+Every snapshot read names its round. Expiry of old rounds belongs to
+the round driver (``plans.round.expire_frontier_history``), which knows
+which manifests a later round still reads.
+
+``write_bucketed``/``register_bucketed`` keep a hash-bucketed layout
+for whole-frontier dedup (``bench.py``'s bucketed tier); the crawl
+round writes neither table bucketed.
 """
 
 from __future__ import annotations
@@ -64,9 +70,10 @@ def write_bucketed(
     n_buckets: int = 64,
 ) -> None:
     """Persist ``df`` hash-bucketed + sorted on ``key`` (the co-located
-    layout for the two 10^10 tables, frontier and seen: a join between
-    tables bucketed alike needs NO exchange — Iceberg's ``bucket(N,
-    key)`` partition transform + storage-partitioned joins).
+    layout of ``bench.py``'s whole-frontier dedup tier over copies of
+    frontier and seen: a join between tables bucketed alike needs NO
+    exchange — Iceberg's ``bucket(N, key)`` partition transform +
+    storage-partitioned joins).
 
     ``repartition(n, key)`` uses the same murmur3-pmod placement as
     ``bucketBy``, so each task holds exactly one bucket and writes
@@ -167,14 +174,9 @@ def _check_schema(df: DataFrame, table: str) -> None:
 
 
 class Catalog:
-    def __init__(self, spark: SparkSession, root: str, use_iceberg: bool = False):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        if use_iceberg:
-            raise NotImplementedError(
-                "iceberg-spark-runtime not on classpath in this sandbox; "
-                "parquet-snapshot fallback implements the same contract"
-            )
         os.makedirs(root, exist_ok=True)
 
     # ---------------------------------------------------------- snapshots
@@ -266,31 +268,12 @@ class Catalog:
         rounds = self.committed_rounds(table)
         return rounds[-1] if rounds else None
 
-    def read_snapshot(self, table: str, round_no: int | None = None) -> DataFrame:
-        if round_no is None:
-            round_no = self.latest_round(table)
-            if round_no is None:
-                raise FileNotFoundError(f"no committed snapshot for {table}")
+    def read_snapshot(self, table: str, round_no: int) -> DataFrame:
         return self._reader(table).parquet(self._snap_dir(table, round_no))
 
     def read_manifest(self, table: str, round_no: int) -> dict:
         with open(self._manifest_path(table, round_no)) as f:
             return json.load(f)
-
-    def expire_snapshots(self, table: str, keep_last: int = 2) -> list[int]:
-        """Drop all but the newest ``keep_last`` committed snapshots
-        (Iceberg expire_snapshots analog). Manifest is deleted FIRST so
-        a crash mid-expiry never leaves a committed-but-missing snapshot."""
-        import shutil
-
-        rounds = self.committed_rounds(table)
-        expired = rounds[:-keep_last] if keep_last > 0 else rounds
-        for r in expired:
-            mp = self._manifest_path(table, r)
-            if os.path.exists(mp):
-                os.remove(mp)
-            shutil.rmtree(self._snap_dir(table, r), ignore_errors=True)
-        return expired
 
     # ------------------------------------------------------- append tables
     def append(self, df: DataFrame, table: str, round_no: int) -> None:

@@ -93,23 +93,12 @@ def robots_deny_map(robots: DataFrame) -> DataFrame:
     )
 
 
-def gate_robots(
-    candidates: DataFrame,
-    robots: DataFrame,
-    url_col: str = "url",
-    path_col: str | None = None,
-) -> DataFrame:
-    """Drop candidates whose canonical path matches any deny prefix.
-
-    ``path_col`` lets the caller pass a pre-extracted path column so the
-    wide URL string can be projected away before downstream shuffles.
-    """
+def gate_robots(candidates: DataFrame, robots: DataFrame, path_col: str) -> DataFrame:
+    """Drop candidates whose canonical path (the ``path_col`` column,
+    decomposed from the URL once at admission) matches any deny prefix
+    of their ``host``; the URL string itself is never read."""
     deny = robots_deny_map(robots)
-    path = (
-        F.col(path_col)
-        if path_col
-        else F.coalesce(F.parse_url(F.col(url_col), F.lit("PATH")), F.lit("/"))
-    )
+    path = F.col(path_col)
     joined = candidates.join(F.broadcast(deny), "host", "left")
     blocked = F.when(
         F.col("deny_prefixes").isNull(), F.lit(False)

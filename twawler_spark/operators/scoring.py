@@ -7,7 +7,8 @@ with indexes on ``expected desc`` / ``hours desc`` (freq.py:120-123).
 
 Here both priority orders are plain column expressions over the frontier
 snapshot — no materialized queue, no indexes: the "queue" is the ranked
-take in budget.py, re-derived every round from the same formula.
+take in ``plans.round.build_two_phase_plan``, re-derived every round
+from the same formula.
 """
 
 from __future__ import annotations
@@ -24,29 +25,4 @@ def score(frontier: DataFrame, now_epoch: int) -> DataFrame:
     hours_idle = F.greatest(hours_idle, F.lit(0.0))
     return frontier.withColumn("hours_idle", hours_idle).withColumn(
         "expected", F.col("rate_tph") * F.col("hours_idle")
-    )
-
-
-def rescore_rate(frontier: DataFrame, documents: DataFrame, now_epoch: int) -> DataFrame:
-    """Recompute rate_tph from observed document counts (freq.py:63-103):
-    per source URL, rate = n_docs * 3600 / (now - earliest_ts) seconds.
-
-    groupBy url_hash is a map-side-combinable hash aggregate; the join
-    back is on the frontier's own key so AQE can pick broadcast when the
-    per-round doc set is small.
-    """
-    counts = documents.groupBy("url_hash").agg(F.count("*").alias("__n_docs"))
-    span_s = F.greatest(
-        F.lit(now_epoch) - F.unix_timestamp(F.col("earliest_ts")), F.lit(3600)
-    )
-    return (
-        frontier.join(counts, "url_hash", "left")
-        .withColumn(
-            "rate_tph",
-            F.when(
-                F.col("__n_docs").isNotNull(),
-                F.col("__n_docs") * F.lit(3600.0) / span_s,
-            ).otherwise(F.col("rate_tph")),
-        )
-        .drop("__n_docs")
     )

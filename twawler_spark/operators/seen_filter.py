@@ -5,9 +5,9 @@ protected/greeks) into driver-side Python dicts (twkit/utils.py:107-135,
 ``init_state(use_cache=True)``) and checks candidates one by one
 (utils.py:672-692 ``can_follow``). The rebuild keeps ONE Bloom filter
 over the seen-set: built distributed (per-bucket ``applyInPandas``
-filters OR-merged via RDD ``treeAggregate``), updated per round with
-only that round's delta, persisted in the catalog and probed map-side
-from a broadcast.
+filters OR-merged via RDD ``treeAggregate``), updated per round on the
+driver with only that round's delta (collected through Arrow),
+persisted in the catalog and probed map-side from a broadcast.
 
 Probe outcome per candidate:
   * bloom says ABSENT  -> definitely new (no false negatives) — admit
@@ -102,8 +102,9 @@ class BroadcastBloom:
     Lifecycle fixes the round-1 regression (bloom slower than exact):
       * built ONCE from the full seen-set (per-bucket build +
         treeAggregate OR — the north rule's per-partition merge path);
-      * each round ORs in only that round's seen-DELTA — O(|delta|),
-        never O(|seen|) — then persists bits atomically in the catalog;
+      * each round ORs in only that round's seen-DELTA on the driver —
+        O(|delta|), never O(|seen|) — then persists bits atomically in
+        the catalog;
       * probed map-side via a broadcast + vectorized Arrow UDF: zero
         shuffles touch either the candidates or the seen-set.
 
@@ -117,8 +118,6 @@ class BroadcastBloom:
     bits: np.ndarray  # uint8, m_bits // 8 bytes
     n_keys: int
     capacity: int
-
-    N_BUILD_BUCKETS = 64
 
     # ------------------------------------------------------------ build
     @classmethod
@@ -142,31 +141,17 @@ class BroadcastBloom:
         bits = _build_bits(keys, key_col, n_buckets, m, k)
         return cls(m_bits=m, k_hashes=k, bits=bits, n_keys=n_keys, capacity=capacity)
 
-    # deltas below this come to the driver as one small collect (8 B/key)
-    # instead of a distributed build whose treeAggregate would move
-    # n_buckets × m bytes — per-round deltas are plan-bounded, so this is
-    # the production path; the distributed branch covers bulk backfills.
-    DRIVER_UPDATE_MAX = 8_000_000
-
     def update(self, delta_keys: DataFrame, n_delta: int, key_col: str = "url_hash") -> None:
-        """OR in one round's delta — O(|delta|), never O(|seen|)."""
+        """OR in one round's delta — O(|delta|), never O(|seen|). The
+        delta is plan-bounded, so it is collected to the driver (8 B/key)
+        through Arrow — a Row-object collect() at 10^6+ keys spends ~10x
+        the time materializing Python rows (measured 10.1s -> sub-second
+        at a 1M-key delta) — and set there; ``n_delta`` = 0 skips the
+        collect job."""
         if n_delta == 0:
             return
-        if n_delta <= self.DRIVER_UPDATE_MAX:
-            # Arrow columnar transfer — a Row-object collect() at 10^6+
-            # keys spends ~10x the time materializing Python rows
-            # (measured 10.1s -> sub-second at a 1M-key delta)
-            arr = (
-                delta_keys.select(key_col)
-                .toPandas()[key_col]
-                .to_numpy(dtype=np.int64)
-            )
-            self.update_from_keys(arr)
-            return
-        self.bits = self.bits | _build_bits(
-            delta_keys, key_col, self.N_BUILD_BUCKETS, self.m_bits, self.k_hashes
-        )
-        self.n_keys += n_delta
+        arr = delta_keys.select(key_col).toPandas()[key_col].to_numpy(dtype=np.int64)
+        self.update_from_keys(arr)
 
     def update_from_keys(self, keys: np.ndarray) -> None:
         """Driver-side bit-set for an in-hand delta (numpy, vectorized)."""

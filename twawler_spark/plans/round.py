@@ -82,6 +82,7 @@ class RoundStats:
 
 
 COMPACT_EVERY = 4  # frontier compaction cadence (rounds)
+SALT_BUCKETS = 16  # stage-A salting of hot hosts in the round's plan
 
 
 def read_frontier(catalog: Catalog, upto_round: int) -> DataFrame:
@@ -118,10 +119,12 @@ def read_frontier(catalog: Catalog, upto_round: int) -> DataFrame:
 
 
 def expire_frontier_history(catalog: Catalog) -> list[int]:
-    """Drop manifests/snapshots/deltas and seen-filter files older than
-    the latest compaction (safe: reads only ever need the latest
-    compaction + later deltas, and a resume loads the filter of the
-    latest committed round)."""
+    """Drop frontier manifests/snapshots/deltas, seen manifests and
+    seen-filter files older than the latest compaction (safe: reads
+    only ever need the latest compaction + later deltas, a round reads
+    only the previous round's seen manifest, and a resume loads the
+    filter of the latest committed round). The ``seen/data`` partitions
+    stay: they are the seen set."""
     import glob
     import shutil
 
@@ -129,6 +132,9 @@ def expire_frontier_history(catalog: Catalog) -> list[int]:
     latest_comp = comps[-1]
     expired = [r for r in catalog.committed_rounds("frontier") if r < latest_comp]
     for r in expired:
+        seen_manifest = catalog._manifest_path("seen", r)
+        if os.path.exists(seen_manifest):
+            os.remove(seen_manifest)
         os.remove(catalog._manifest_path("frontier", r))
         shutil.rmtree(catalog._snap_dir("frontier", r), ignore_errors=True)
         shutil.rmtree(f"{catalog.root}/frontier_v/data/round={r}", ignore_errors=True)
@@ -190,15 +196,26 @@ def build_two_phase_plan(
     robots: DataFrame,
     budgets: DataFrame,
     now: int,
-    salt_buckets: int = 16,
-    default_budget: int = 4,
-    default_late_budget: int = 2,
+    salt_buckets: int = SALT_BUCKETS,
     host_stats: DataFrame | None = None,
     hot_threshold: int = 5000,
 ) -> DataFrame:
     """The per-round scheduling plan (crawl-tweets.sh phases 1+2):
     score → robots gate → per-host budget rank by ``expected`` (phase 1),
     then the leftover ranked by staleness at half budget (--crawl-late).
+
+    Input contract:
+      ``active``: frontier rows to rank, with FRONTIER's ``url_hash``,
+        ``host``, ``path``, ``last_id``, ``first_id``, ``reached``,
+        ``rate_tph`` and ``latest_ts`` columns;
+      ``robots``: (host, rule, path_prefix) rules for ``gate_robots``;
+      ``budgets``: (host, budget_per_round) with a non-NULL budget for
+        every host in ``active`` — phase 1 takes up to B rows per host,
+        the late phase up to max(B // 2, 1). A host missing from
+        ``budgets``, or with a NULL budget, raises when the plan runs:
+        there is no default budget;
+      ``host_stats`` (optional): (host, n_urls), see adaptive salting
+        below.
 
     Shuffle discipline (the 100 TB shape): exactly TWO exchanges touch
     the candidate set —
@@ -218,18 +235,16 @@ def build_two_phase_plan(
     widest column and no plan consumer needs it — the fetch stage keys
     on url_hash/host; a production fetcher resolves the string by
     joining the tiny plan back to the frontier on url_hash). Robots
-    gating therefore evaluates the path BEFORE the projection.
+    gating reads the ``path`` column, decomposed once at admission, so
+    the plan never reads ``url``.
 
     The host string is dictionary-encoded into a dense int for the two
     ranking exchanges (the host name is the second-widest column; ~20
     bytes -> 8 through every shuffle and a cheaper partitioner hash)
-    and restored on the SMALL plan output via a broadcast join. This
-    requires ``budgets`` to cover every frontier host — the engine's
-    politeness/budget table IS the host dimension (per-host crawl state
-    exists for every host admitted to the frontier) — and a host
-    missing from it fails the plan. If ``budgets`` already carries a
-    ``host_id`` column it is used as-is; otherwise a deterministic dense
-    id is derived once over the tiny dim.
+    and restored on the SMALL plan output via a broadcast join. The
+    dense id is derived once over the tiny ``budgets`` dim — the
+    engine's politeness/budget table IS the host dimension (per-host
+    crawl state exists for every host admitted to the frontier).
 
     ``host_stats`` (host, n_urls — per-host frontier row counts, e.g.
     maintained incrementally in the host dimension, or one column-pruned
@@ -246,18 +261,13 @@ def build_two_phase_plan(
     per-bucket top-B keep is a superset of the per-host top-B for ANY
     bucket count, so results are bit-identical.
     """
-    narrow = ["url_hash", "host", "last_id", "first_id",
-              "reached", "rate_tph", "latest_ts"]
-    if "__path" in active.columns:  # caller already projected the url away
-        sched_cols = [F.col(c) for c in narrow] + [F.col("__path")]
-    elif "path" in active.columns:
-        # FRONTIER.path: decomposed once at admission — the scan never
-        # reads the wide url column at all (biggest column in the table)
-        sched_cols = [F.col(c) for c in narrow] + [F.col("path").alias("__path")]
-    else:
-        path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("/"))
-        sched_cols = [F.col(c) for c in narrow] + [path.alias("__path")]
-    scored = score(active.select(*sched_cols), now)
+    # FRONTIER.path: decomposed once at admission — the scan never
+    # reads the wide url column at all (biggest column in the table)
+    scored = score(
+        active.select("url_hash", "host", "last_id", "first_id", "reached",
+                      "rate_tph", "latest_ts", F.col("path").alias("__path")),
+        now,
+    )
     # rate_tph/latest_ts are consumed by score(); __path by the robots
     # gate — none of them may ride the ranking shuffles and sorts.
     # first_id/reached are pure passengers (no ranking consumer): pack
@@ -282,46 +292,33 @@ def build_two_phase_plan(
             .select("host", F.lit(True).alias("__hot"))
         )
         gated = gated.join(F.broadcast(hot), "host", "left")
-    if "host_id" in budgets.columns:
-        dim = budgets.select("host", "host_id", "budget_per_round")
-    else:
-        # one tiny single-partition window over the dim (n_hosts
-        # rows); at 10^8+ hosts ship a precomputed host_id instead
-        dim = budgets.select("host", "budget_per_round").withColumn(
-            "host_id", F.row_number().over(Window.orderBy("host")).cast("long")
-        )
-    # budgets must cover every frontier host — a miss would leave
-    # host_id NULL and silently merge all such hosts into ONE ranking
-    # partition (and a NULL host in the output). Fail fast instead:
-    # raise on the first unmatched row.
-    joined = (
+    # one tiny single-partition window over the dim (n_hosts rows)
+    dim = budgets.select("host", "budget_per_round").withColumn(
+        "host_id", F.row_number().over(Window.orderBy("host")).cast("long")
+    )
+
+    def fail(what: str) -> F.Column:
+        return F.raise_error(F.concat(
+            F.lit("build_two_phase_plan: frontier host '"), F.col("host"), F.lit(what),
+        )).cast("long")
+
+    # budgets must give every frontier host a budget — a missing host
+    # would leave host_id NULL and silently merge all such hosts into
+    # ONE ranking partition (and a NULL host in the output); a NULL
+    # budget would drop the host's rows from the rank filters. Fail
+    # fast instead: the partition key raises on the first unmatched or
+    # unbudgeted row (CASE branches are tried in order).
+    wb = (
         gated.join(F.broadcast(dim), "host", "left")
         .withColumn(
             "host_id",
-            F.when(
-                F.col("host_id").isNull(),
-                F.raise_error(F.concat(
-                    F.lit("build_two_phase_plan: frontier host '"),
-                    F.col("host"),
-                    F.lit("' missing from budgets dim"),
-                )).cast("long"),
-            ).otherwise(F.col("host_id")),
+            F.when(F.col("host_id").isNull(), fail("' missing from budgets dim"))
+            .when(F.col("budget_per_round").isNull(), fail("' has a NULL budget_per_round"))
+            .otherwise(F.col("host_id")),
         )
+        .withColumnRenamed("budget_per_round", "__b")
+        .withColumn("__b2", F.greatest(F.floor(F.col("__b") / 2), F.lit(1)).cast("int"))
         .drop("host")
-    )
-    wb = (
-        joined
-        .withColumn(
-            "__b", F.coalesce(F.col("budget_per_round"), F.lit(default_budget))
-        )
-        .withColumn(
-            "__b2",
-            F.when(
-                F.col("budget_per_round").isNotNull(),
-                F.greatest(F.floor(F.col("budget_per_round") / 2), F.lit(1)).cast("int"),
-            ).otherwise(F.lit(default_late_budget)),
-        )
-        .drop("budget_per_round")
     )
     salt = F.pmod(F.col("url_hash"), F.lit(salt_buckets)).cast("int")
     if host_stats is not None:
@@ -428,12 +425,7 @@ def merge_fetch_results(
     )
 
 
-def run_round(
-    catalog: Catalog,
-    round_no: int,
-    n_hosts: int,
-    salt_buckets: int = 16,
-) -> RoundStats:
+def run_round(catalog: Catalog, round_no: int, n_hosts: int) -> RoundStats:
     """One scheduling round.
 
     Driver-action discipline (the scaling-efficiency fix): every counter
@@ -485,9 +477,7 @@ def run_round(
     host_stats = frontier.where(F.col("state") == "active").groupBy("host").agg(
         F.count(F.lit(1)).alias("n_urls")
     )
-    plan = build_two_phase_plan(
-        active, robots, budgets, now, salt_buckets, host_stats=host_stats
-    )
+    plan = build_two_phase_plan(active, robots, budgets, now, host_stats=host_stats)
     # one job materializes the plan AND surfaces both counters
     plan = plan.observe(obs_plan, n_p).localCheckpoint(eager=True)
     n_active = int(obs_active.get["n"])
@@ -661,14 +651,8 @@ def round_status(catalog: Catalog) -> dict:
     }
 
 
-def run_rounds(
-    catalog: Catalog,
-    n_rounds: int,
-    n_hosts: int,
-    resume: bool = True,
-    **kw,
-) -> list[RoundStats]:
+def run_rounds(catalog: Catalog, n_rounds: int, n_hosts: int) -> list[RoundStats]:
     """Run/resume rounds up to ``n_rounds`` from the latest committed
     snapshot (the reference's kill-safe restart, README Stopping)."""
-    start = (catalog.latest_round("frontier") or 0) + 1 if resume else 1
-    return [run_round(catalog, r, n_hosts, **kw) for r in range(start, n_rounds + 1)]
+    start = (catalog.latest_round("frontier") or 0) + 1
+    return [run_round(catalog, r, n_hosts) for r in range(start, n_rounds + 1)]
