@@ -11,7 +11,8 @@ Also times the headline operator queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1).
 
 Env knobs:
-  SPARK_GRAFT_CPUS        parallelism (default 32) -> local[N]
+  SPARK_GRAFT_CPUS        parallelism (default: the CPUs this process may
+                          use, session.default_cpus) -> local[N]
   SPARK_GRAFT_SF_DIR      driver-table dir for query timings
   SPARK_GRAFT_BENCH_URLS  synthetic frontier size (default 4_000_000)
   SPARK_GRAFT_BENCH_SKIP_QUERIES  "1" -> scheduling bench only
@@ -32,7 +33,7 @@ from twawler_spark.io_catalog import register_bucketed, write_bucketed
 from twawler_spark.operators.admission import admit
 from twawler_spark.operators.seen_filter import BroadcastBloom
 from twawler_spark.plans.round import build_two_phase_plan
-from twawler_spark.session import get_spark
+from twawler_spark.session import default_cpus, get_spark
 from twawler_spark.synth import NOW_EPOCH, write_inputs
 
 HEADLINE_QUERIES = (
@@ -454,7 +455,7 @@ def bench_ivf_storage(spark) -> dict[str, float]:
 
 
 def main() -> int:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_urls = int(os.environ.get("SPARK_GRAFT_BENCH_URLS", "4000000"))
     n_hosts = max(100, n_urls // 200)

@@ -9,7 +9,7 @@ Usage:
   (no names -> all HEADLINE_QUERIES from bench.py)
 
 Env knobs (same semantics as bench.py):
-  SPARK_GRAFT_CPUS   core count -> local[N]   (default 32)
+  SPARK_GRAFT_CPUS   core count -> local[N]   (default: session.default_cpus)
   SPARK_GRAFT_SF_DIR data dir                 (default /root/testdata/sf0.1)
   SPARK_GRAFT_REPEAT timed repeats per query  (default 1, like bench.py)
 """
@@ -25,13 +25,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from twawler_spark.session import default_cpus, get_spark
+    from twawler_spark.registry import QUERIES
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     repeat = int(os.environ.get("SPARK_GRAFT_REPEAT", "1"))
     names = sys.argv[1:]
-
-    from twawler_spark.session import get_spark
-    from twawler_spark.registry import QUERIES
 
     if not names:
         from bench import HEADLINE_QUERIES

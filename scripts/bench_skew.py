@@ -31,7 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from twawler_spark.session import get_spark
+from twawler_spark.session import default_cpus, get_spark
 from twawler_spark.synth import NOW_EPOCH, write_inputs
 from twawler_spark.plans.round import build_two_phase_plan
 
@@ -91,7 +91,7 @@ def main() -> int:
         "best_unsalted": round(min(a), 3),
         "best_salted": round(min(b), 3),
         "speedup": round(min(a) / min(b), 2),
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus()),
     }
     print(json.dumps(res))
     return 0

@@ -2,8 +2,9 @@
 (bench, driver entry, ``scripts/``, ``perfbench/``) resolves — including
 imports local to a function, which only fail when that arm runs — and
 every keyword argument those scripts pass to an imported name is a
-parameter of it, so a removed option fails here, not mid-run. No Spark
-session is needed: only the modules are imported."""
+parameter of it, so a removed option fails here, not mid-run. perfbench's
+probes, which patch the program's methods by name, still install. No
+Spark session is needed: only the modules are imported."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ import ast
 import importlib
 import inspect
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -106,3 +109,17 @@ def test_entry_point_keywords_match_signatures(path):
                     f"{os.path.relpath(path, REPO)}:{node.lineno}: "
                     f"{ast.unparse(node.func)} takes no keyword {kw.arg!r}"
                 )
+
+
+def test_perfbench_probes_install():
+    """``perfbench/probes.Spans.install`` wraps catalog, seen-filter and
+    DataFrame methods looked up by name in the owning class; a renamed
+    or moved method would otherwise break every perfbench run, and only
+    at run time. A fresh interpreter, so no patch leaks into this one."""
+    subprocess.run(
+        [sys.executable, "-c", "import probes; probes.Spans().install()"],
+        cwd=os.path.join(REPO, "perfbench"),
+        env={**os.environ, "PYTHONPATH": os.pathsep.join([REPO, os.environ.get("PYTHONPATH", "")])},
+        check=True,
+        timeout=300,
+    )

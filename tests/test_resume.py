@@ -32,17 +32,17 @@ def test_resume_equals_uninterrupted(spark, crawl_root, tmp_path_factory):
     assert b2.latest_round("frontier") == 2
     run_rounds(b2, 4, n_hosts=N_HOSTS)
 
-    from twawler_spark.plans.round import read_frontier, read_seen
+    from twawler_spark.plans.round import read_frontier
 
     left = {tuple(r) for r in read_frontier(a, 4).collect()}
     right = {tuple(r) for r in read_frontier(b2, 4).collect()}
     assert left == right
-    seen_a = {tuple(r) for r in read_seen(a, 4).collect()}
-    seen_b = {tuple(r) for r in read_seen(b2, 4).collect()}
+    seen_a = {tuple(r) for r in a.read_committed("seen", 4).collect()}
+    seen_b = {tuple(r) for r in b2.read_committed("seen", 4).collect()}
     assert seen_a == seen_b
 
-    docs_a = {r["doc_id"] for r in a.read_appended("documents").collect()}
-    docs_b = {r["doc_id"] for r in b2.read_appended("documents").collect()}
+    docs_a = {r["doc_id"] for r in a.read_committed("documents", 4).collect()}
+    docs_b = {r["doc_id"] for r in b2.read_committed("documents", 4).collect()}
     assert docs_a == docs_b
 
 

@@ -5,33 +5,44 @@ declared-schema contract.
 thread's checkpoints and joins them all before the seen manifest, the
 seen-filter save and the frontier manifest. A write that fails must
 leave the round uncommitted, with no write still running, and a resume
-must reach the uninterrupted state. Writes of the round's own tables
-are checked against ``schemas.CATALOG_TABLES``; reads of them run no
-schema-inference job.
+must reach the uninterrupted state. The same holds at every commit
+boundary after the writes: the seen manifest, the seen-filter save,
+the frontier manifest, round 4's compaction snapshot and the history
+expiry after it. Writes of the round's own tables are checked against
+``schemas.CATALOG_TABLES``; reads of them run no schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import threading
 
 import pytest
 from pyspark.sql import functions as F
 
+from twawler_spark import reference_sim
 from twawler_spark.io_catalog import Catalog
+from twawler_spark.operators.seen_filter import BroadcastBloom
+from twawler_spark.plans import round as round_mod
 from twawler_spark.plans.round import (
+    COMPACT_EVERY,
     bootstrap,
     read_frontier,
-    read_seen,
+    round_status,
     run_round,
     run_rounds,
 )
 from twawler_spark.schemas import CATALOG_TABLES
-from twawler_spark.session import default_driver_memory
+from twawler_spark.session import default_cpus, default_driver_memory
 
 from .conftest import N_HOSTS
 
 N_ROUNDS = 2
+# one round past the first compaction (round COMPACT_EVERY)
+COMPACT_ROUNDS = COMPACT_EVERY + 1
+APPENDED = ("crawl_order", "documents", "follow_edges", "frontier_v", "seen")
 
 
 def _setup(spark, crawl_root, root):
@@ -51,8 +62,8 @@ def uninterrupted(spark, crawl_root, tmp_path_factory):
 def _state(cat: Catalog, upto: int):
     return (
         {tuple(r) for r in read_frontier(cat, upto).collect()},
-        {tuple(r) for r in read_seen(cat, upto).collect()},
-        {r["doc_id"] for r in cat.read_appended("documents").collect()},
+        {tuple(r) for r in cat.read_committed("seen", upto).collect()},
+        {r["doc_id"] for r in cat.read_committed("documents", upto).collect()},
     )
 
 
@@ -91,6 +102,13 @@ def test_failed_write_leaves_round_uncommitted(
     assert not os.path.exists(f"{cat.root}/frontier/_manifests/1.json")
     assert not [f for f in os.listdir(f"{cat.root}/bloom") if f.startswith("1.")]
     assert cat.latest_round("frontier") == 0
+    # a reader of the committed rounds sees none of round 1's appends,
+    # though some of them are on disk
+    upto = cat.latest_round("frontier")
+    written = [t for t in APPENDED if os.path.isdir(f"{cat.root}/{t}/data/round=1")]
+    assert written
+    for t in written:
+        assert cat.read_committed(t, upto).where(F.col("round") == 1).count() == 0
 
     monkeypatch.setattr(Catalog, "append", raw_append)
     resumed = Catalog(spark, cat.root)
@@ -107,9 +125,16 @@ def test_committed_reads_submit_no_jobs(spark, uninterrupted):
     sc.setJobGroup(group, group)
     try:
         frontier = read_frontier(cat, N_ROUNDS)
-        seen = read_seen(cat, N_ROUNDS)
+        seen = cat.read_committed("seen", N_ROUNDS)
         assert frontier.columns == CATALOG_TABLES["frontier"].fieldNames()
         assert seen.columns == CATALOG_TABLES["seen"].fieldNames() + ["round"]
+        for table in ("crawl_order", "follow_edges"):
+            df = cat.read_committed(table, N_ROUNDS)
+            assert df.columns == CATALOG_TABLES[table].fieldNames() + ["round"]
+        # DOCUMENTS declares ``round``: read once, last like every partition column
+        docs = cat.read_committed("documents", N_ROUNDS)
+        declared = CATALOG_TABLES["documents"].fieldNames()
+        assert docs.columns == [c for c in declared if c != "round"] + ["round"]
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -128,18 +153,22 @@ def _conforming(spark, table):
 
 
 MUTATIONS = {
-    "missing": lambda df: (df.drop("url_hash"), "url_hash"),
-    "extra": lambda df: (df.withColumn("bogus", F.lit(1)), "bogus"),
-    "retyped": lambda df: (df.withColumn("url_hash", F.col("url_hash").cast("string")), "url_hash"),
+    "missing": lambda df, key: (df.drop(key), key),
+    "extra": lambda df, key: (df.withColumn("bogus", F.lit(1)), "bogus"),
+    "retyped": lambda df, key: (df.withColumn(key, F.col(key).cast("string")), key),
 }
 
 
 @pytest.mark.parametrize("mutation", sorted(MUTATIONS))
-@pytest.mark.parametrize("table", ["frontier", "frontier_v", "seen"])
+@pytest.mark.parametrize(
+    "table",
+    ["frontier", "frontier_v", "seen", "documents", "follow_edges", "crawl_order"],
+)
 def test_write_rejects_schema_violation(spark, tmp_path, table, mutation):
     cat = Catalog(spark, str(tmp_path))
     write = cat.write_snapshot if table == "frontier" else cat.append
-    bad, column = MUTATIONS[mutation](_conforming(spark, table))
+    key = "src_hash" if table == "follow_edges" else "url_hash"  # a declared long
+    bad, column = MUTATIONS[mutation](_conforming(spark, table), key)
     with pytest.raises(ValueError, match=f"{table}: column '{column}'"):
         write(bad, table, 1)
     assert not os.path.exists(f"{cat.root}/{table}")  # nothing written
@@ -151,3 +180,185 @@ def test_default_driver_memory_fits_host():
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert 1 <= gib <= 16
     assert gib == 1 or gib * 2**30 <= phys // 2
+
+
+def test_default_cpus_fit_host():
+    assert 1 <= default_cpus() == len(os.sched_getaffinity(0)) <= os.cpu_count()
+
+
+def test_undeclared_table_raises(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path))
+    df = _conforming(spark, "seen")
+    with pytest.raises(KeyError, match="seen_copy"):
+        cat.append(df, "seen_copy", 1)
+    with pytest.raises(KeyError, match="seen_copy"):
+        cat.read_committed("seen_copy", 1)
+    assert not os.path.exists(f"{cat.root}/seen_copy")
+
+
+# --------------------------------------------------- commit boundaries
+@pytest.fixture(scope="module")
+def committed_through(spark, crawl_root, tmp_path_factory):
+    """``copy(r, dest)``: a catalog with rounds 0..r committed, at
+    ``dest``. Each ``r`` is crawled once; every caller gets a copy."""
+    built = {}
+
+    def copy(r: int, dest: str) -> Catalog:
+        if r not in built:
+            cat = _setup(spark, crawl_root, str(tmp_path_factory.mktemp(f"through{r}")))
+            run_rounds(cat, r, n_hosts=N_HOSTS)
+            built[r] = cat.root
+        shutil.copytree(built[r], dest)
+        return Catalog(spark, dest)
+
+    return copy
+
+
+@pytest.fixture(scope="module")
+def whole(spark, crawl_root, tmp_path_factory, uninterrupted):
+    """``whole(n)``: an uninterrupted catalog through round ``n`` and the
+    reference simulator's run of ``n`` rounds, each computed once."""
+    cats = {N_ROUNDS: uninterrupted[0]}
+    sims = {}
+
+    def get(n: int):
+        if n not in cats:
+            cats[n] = _setup(spark, crawl_root, str(tmp_path_factory.mktemp(f"whole{n}")))
+            run_rounds(cats[n], n, n_hosts=N_HOSTS)
+        if n not in sims:
+            sims[n] = reference_sim.run(crawl_root, n, n_hosts=N_HOSTS)
+        return cats[n], sims[n]
+
+    return get
+
+
+def _rows(df) -> list[str]:
+    """Every row of ``df``, order-free, duplicates kept."""
+    return sorted(
+        json.dumps(r.asDict(recursive=True), default=str, sort_keys=True)
+        for r in df.collect()
+    )
+
+
+def _tables(cat: Catalog, upto: int) -> dict:
+    return {
+        "frontier": _rows(read_frontier(cat, upto)),
+        **{t: _rows(cat.read_committed(t, upto)) for t in APPENDED},
+    }
+
+
+def _history(cat: Catalog) -> tuple:
+    """What a committed catalog keeps besides its tables: committed and
+    compaction rounds, filter files, seen manifests and round stats."""
+    return (
+        cat.committed_rounds("frontier"),
+        cat.compaction_rounds("frontier"),
+        sorted(os.listdir(f"{cat.root}/bloom")),
+        sorted(os.listdir(f"{cat.root}/seen/_manifests")),
+        round_status(cat),
+    )
+
+
+def _as_sim(cat: Catalog, upto: int) -> tuple:
+    """The round tables keyed as ``reference_sim.SimResult`` keys them
+    (test_round_equivalence's comparisons)."""
+    frontier = read_frontier(cat, upto).collect()
+    return (
+        {
+            (r["round"], r["host"], r["phase"], r["fetch_rank"], r["url_hash"])
+            for r in cat.read_committed("crawl_order", upto).collect()
+        },
+        {r["url_hash"] for r in cat.read_committed("seen", upto).collect()},
+        {
+            r["doc_id"]: [tuple(s) for s in r["spans"]]
+            for r in cat.read_committed("documents", upto).collect()
+        },
+        {
+            (r["src_hash"], r["dst_hash"])
+            for r in cat.read_committed("follow_edges", upto).collect()
+        },
+        {r["url_hash"]: r["state"] for r in frontier},
+        {r["url_hash"]: (r["last_id"], r["first_id"], r["reached"]) for r in frontier},
+    )
+
+
+def _sim_tables(sim) -> tuple:
+    return (
+        set(sim.crawl_order),
+        sim.seen,
+        sim.documents,
+        sim.edges,
+        sim.frontier_states,
+        {
+            uh: (row["last_id"], row["first_id"], row["reached"])
+            for uh, row in sim.frontier_rows.items()
+        },
+    )
+
+
+def _manifest_of(table: str, round_no: int):
+    return lambda self, t, r, manifest: (t, r) == (table, round_no)
+
+
+# boundary -> (failing round, owner, attribute, which call fails). The
+# manifest cases fail inside commit_round / write_snapshot at the rename
+# that commits them (a compaction's snapshot files are already written);
+# the expiry case fails after round 4's snapshot committed.
+BOUNDARIES = {
+    "seen_manifest": (1, Catalog, "_write_manifest", _manifest_of("seen", 1)),
+    "filter_save": (1, BroadcastBloom, "save", lambda self, prefix: prefix.endswith("/1")),
+    "frontier_manifest": (1, Catalog, "_write_manifest", _manifest_of("frontier", 1)),
+    "compaction_snapshot": (
+        COMPACT_EVERY, Catalog, "_write_manifest", _manifest_of("frontier", COMPACT_EVERY),
+    ),
+    "expiry": (COMPACT_EVERY, round_mod, "expire_frontier_history", lambda cat: True),
+}
+
+
+@pytest.mark.parametrize("boundary", list(BOUNDARIES))
+def test_failed_commit_resumes_to_uninterrupted(
+    spark, tmp_path, monkeypatch, committed_through, whole, boundary
+):
+    """A failure at each commit boundary leaves the round uncommitted
+    (the expiry's round stays committed, with its history on disk); a
+    resume reaches the uninterrupted run, the reference simulator's
+    tables, and the uninterrupted history (an interrupted expiry is
+    finished)."""
+    r, owner, name, fails = BOUNDARIES[boundary]
+    n = N_ROUNDS if r == 1 else COMPACT_ROUNDS
+    cat = committed_through(r - 1, str(tmp_path / "cat"))
+    raw = getattr(owner, name)
+
+    def failing(*args):
+        if fails(*args):
+            raise OSError(f"injected failure at {boundary}")
+        return raw(*args)
+
+    monkeypatch.setattr(owner, name, failing)
+    with pytest.raises(OSError, match=f"injected failure at {boundary}"):
+        run_round(cat, r, N_HOSTS)
+    monkeypatch.undo()
+    if boundary == "expiry":
+        assert cat.latest_round("frontier") == r
+        assert cat.committed_rounds("frontier") == list(range(r + 1))
+    else:
+        assert cat.latest_round("frontier") == r - 1
+
+    resumed = Catalog(spark, cat.root)
+    run_rounds(resumed, n, n_hosts=N_HOSTS)
+    ref, sim = whole(n)
+    assert _tables(resumed, n) == _tables(ref, n)
+    assert _as_sim(resumed, n) == _sim_tables(sim)
+    assert _history(resumed) == _history(ref)
+    if n == COMPACT_ROUNDS:
+        # test_compaction_and_history_expiry's state after 5 rounds
+        assert resumed.committed_rounds("frontier") == [4, 5]
+        assert resumed.compaction_rounds("frontier") == [4]
+        assert sorted(os.listdir(f"{resumed.root}/bloom")) == [
+            "4.bits", "4.json", "5.bits", "5.json"
+        ]
+        assert sorted(os.listdir(f"{resumed.root}/seen/_manifests")) == ["4.json", "5.json"]
+        assert (
+            resumed.read_manifest("frontier", 5)["n_rows"]
+            == read_frontier(resumed, 5).count()
+        )

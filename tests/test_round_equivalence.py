@@ -40,7 +40,7 @@ def test_crawl_ordering_identical(run):
     cat, _, sim = run
     spark_order = {
         (r["round"], r["host"], r["phase"], r["fetch_rank"]): r["url_hash"]
-        for r in cat.read_appended("crawl_order").collect()
+        for r in cat.read_committed("crawl_order", N_ROUNDS).collect()
     }
     sim_order = {(r, h, p, k): uh for (r, h, p, k, uh) in sim.crawl_order}
     assert spark_order == sim_order
@@ -49,12 +49,10 @@ def test_crawl_ordering_identical(run):
 
 
 def test_final_seen_set_identical(run):
-    from twawler_spark.plans.round import read_seen
-
     cat, _, sim = run
     spark_seen = {
         r["url_hash"]
-        for r in read_seen(cat, N_ROUNDS).select("url_hash").distinct().collect()
+        for r in cat.read_committed("seen", N_ROUNDS).select("url_hash").distinct().collect()
     }
     assert spark_seen == sim.seen
 
@@ -65,7 +63,7 @@ def test_span_sequences_identical(run):
         r["doc_id"]: [
             (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]
         ]
-        for r in cat.read_appended("documents").collect()
+        for r in cat.read_committed("documents", N_ROUNDS).collect()
     }
     assert len(docs) == len(sim.documents) > 500
     for doc_id, spans in docs.items():
@@ -79,7 +77,7 @@ def test_follow_edges_match(run):
     cat, _, sim = run
     spark_edges = {
         (r["src_hash"], r["dst_hash"])
-        for r in cat.read_appended("follow_edges").collect()
+        for r in cat.read_committed("follow_edges", N_ROUNDS).collect()
     }
     assert spark_edges == sim.edges
     assert len(spark_edges) > 100

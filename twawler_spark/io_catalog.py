@@ -13,18 +13,21 @@ implements the same contract on plain parquet dirs:
                                                counters") + the round's
                                                stats, committed together
 
-The tables the round writes (``schemas.CATALOG_TABLES``: frontier,
-frontier_v, seen) have declared schemas: every write is checked against
-the declaration on the driver, and reads pass it to the parquet reader,
-so no read runs a footer-inference job. External inputs
-(``read_input``) keep inference.
+Every table the round writes (``schemas.CATALOG_TABLES``: frontier,
+frontier_v, seen, documents, follow_edges, crawl_order) has a declared
+schema: every write is checked against the declaration on the driver,
+and reads pass it to the parquet reader, so no read runs a
+footer-inference job. A table without a declaration can be neither
+written nor read. External inputs (``read_input``) keep inference.
 
 Resume = read the highest committed snapshot (manifest written last, so
 a killed round leaves no committed-but-partial snapshot — the
 reference's "kill-safe, no corrupt state" invariant, README Stopping).
-Every snapshot read names its round. Expiry of old rounds belongs to
-the round driver (``plans.round.expire_frontier_history``), which knows
-which manifests a later round still reads.
+Every read names its round: ``read_snapshot`` one snapshot,
+``read_committed`` an appended table's rounds up to a bound, so the
+partial appends of a killed round stay invisible. Expiry of old rounds
+belongs to the round driver (``plans.round.expire_frontier_history``),
+which knows which manifests a later round still reads.
 
 ``write_bucketed``/``register_bucketed`` keep a hash-bucketed layout
 for whole-frontier dedup (``bench.py``'s bucketed tier); the crawl
@@ -155,10 +158,9 @@ def _check_schema(df: DataFrame, table: str) -> None:
     """Raise ``ValueError`` naming the first column where ``df`` departs
     from ``table``'s declared schema: missing, extra or retyped. Names
     and types only — parquet reads every column back nullable. Runs on
-    the driver (analysis only, no job); undeclared tables pass."""
-    want = CATALOG_TABLES.get(table)
-    if want is None:
-        return
+    the driver (analysis only, no job). An undeclared table raises
+    ``KeyError``."""
+    want = CATALOG_TABLES[table]
     got = {f.name: f.dataType for f in df.schema.fields}
     for f in want.fields:
         if f.name not in got:
@@ -199,7 +201,7 @@ class Catalog:
         _check_schema(df, table)
         path = self._snap_dir(table, round_no)
         df.write.mode("overwrite").parquet(path)
-        written = self._reader(table).parquet(path)
+        written = self.read_snapshot(table, round_no)
         lineage = (
             written.groupBy(F.spark_partition_id().alias("partition"))
             .count()
@@ -269,7 +271,9 @@ class Catalog:
         return rounds[-1] if rounds else None
 
     def read_snapshot(self, table: str, round_no: int) -> DataFrame:
-        return self._reader(table).parquet(self._snap_dir(table, round_no))
+        return self.spark.read.schema(CATALOG_TABLES[table]).parquet(
+            self._snap_dir(table, round_no)
+        )
 
     def read_manifest(self, table: str, round_no: int) -> dict:
         with open(self._manifest_path(table, round_no)) as f:
@@ -282,24 +286,31 @@ class Catalog:
             f"{self.root}/{table}/data/round={round_no}"
         )
 
-    def read_appended(self, table: str) -> DataFrame:
+    def read_committed(self, table: str, upto_round: int) -> DataFrame:
+        """Appended ``table`` as of ``upto_round``: the union of its
+        per-round partitions ``round <= upto_round``, read with the
+        declared schema and the ``round`` partition column last (the one
+        rule for every appended table; ``documents`` declares ``round``
+        itself and gets it once). The bound is a partition filter, so
+        later rounds are pruned, not scanned.
+
+        Crash safety: appends beyond the last COMMITTED round are
+        excluded by the bound, so a partial append from a killed round
+        is invisible until its frontier manifest commits. The reader
+        does not consult manifests: a caller outside the round names a
+        committed round (``latest_round("frontier")``). The round writer
+        names its own in-flight round on purpose where it reads what it
+        has just appended before that round's frontier manifest exists:
+        bootstrap's filter build, the filter rebuild and the compaction
+        snapshot."""
+        declared = [f for f in CATALOG_TABLES[table].fields if f.name != "round"]
+        schema = T.StructType(declared + [T.StructField("round", T.IntegerType())])
         return (
-            self._reader(table, appended=True)
+            self.spark.read.schema(schema)
             .option("basePath", f"{self.root}/{table}/data")
             .parquet(f"{self.root}/{table}/data")
+            .where(F.col("round") <= upto_round)
         )
-
-    def _reader(self, table: str, appended: bool = False):
-        """A parquet reader carrying ``table``'s declared schema (plus the
-        ``round`` partition column of an appended table), or an inferring
-        one for undeclared tables."""
-        reader = self.spark.read
-        want = CATALOG_TABLES.get(table)
-        if want is None:
-            return reader
-        if appended:
-            want = T.StructType(want.fields + [T.StructField("round", T.IntegerType())])
-        return reader.schema(want)
 
     # ------------------------------------------------------------- inputs
     def read_input(self, name: str) -> DataFrame:

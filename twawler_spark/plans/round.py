@@ -96,14 +96,18 @@ def read_frontier(catalog: Catalog, upto_round: int) -> DataFrame:
     The read plan is scale-friendly: the window runs only over the
     SMALL delta union; the base is touched by one anti-join against the
     changed-key set (broadcastable — it's bounded by rounds×plan size).
+
+    The deltas come from ``Catalog.read_committed("frontier_v",
+    upto_round)``, so a killed round's partial append stays out of the
+    view; only the rounds after the base snapshot are kept.
     """
     comps = [r for r in catalog.compaction_rounds("frontier") if r <= upto_round]
     base_round = comps[-1]
     base = catalog.read_snapshot("frontier", base_round)
     if base_round == upto_round:
         return base
-    deltas = catalog.read_appended("frontier_v").where(
-        (F.col("round") > base_round) & (F.col("round") <= upto_round)
+    deltas = catalog.read_committed("frontier_v", upto_round).where(
+        F.col("round") > base_round
     )
     w = Window.partitionBy("url_hash").orderBy(F.col("round").desc())
     latest = (
@@ -143,20 +147,6 @@ def expire_frontier_history(catalog: Catalog) -> list[int]:
     return expired
 
 
-def read_seen(catalog: Catalog, upto_round: int) -> DataFrame:
-    """The seen-set as of ``upto_round`` — union of per-round DELTAS.
-
-    The seen table is append-only (each round adds only its newly
-    tracked/dead keys), so the per-round write is O(|delta|), not
-    O(|seen|) — at the 10^10 design point rewriting the full set every
-    round would dominate. Crash safety: deltas beyond the last COMMITTED
-    frontier round are excluded by the ``round <= upto_round`` filter,
-    so a partial append from a killed round is invisible until its
-    frontier manifest commits.
-    """
-    return catalog.read_appended("seen").where(F.col("round") <= upto_round)
-
-
 def bootstrap(
     catalog: Catalog,
     frontier_seed: DataFrame,
@@ -186,7 +176,9 @@ def bootstrap(
     catalog.append(seen0.observe(obs, n), "seen", 0)
     n_seen = int(obs.get["n"])
     catalog.commit_round("seen", 0, n_seen)
-    bloom = BroadcastBloom.build(read_seen(catalog, 0).select("url_hash"), n_keys=n_seen)
+    bloom = BroadcastBloom.build(
+        catalog.read_committed("seen", 0).select("url_hash"), n_keys=n_seen
+    )
     bloom.save(bloom_prefix(catalog, 0))
     catalog.write_snapshot(frontier0, "frontier", 0)
 
@@ -455,7 +447,7 @@ def run_round(catalog: Catalog, round_no: int, n_hosts: int) -> RoundStats:
     spark = catalog.spark
     now = round_now_epoch(round_no)
     frontier = read_frontier(catalog, round_no - 1)
-    seen = read_seen(catalog, round_no - 1)
+    seen = catalog.read_committed("seen", round_no - 1)
     budgets = catalog.read_input("host_budget")
     robots = catalog.read_input("robots")
 
@@ -567,10 +559,11 @@ def run_round(catalog: Catalog, round_no: int, n_hosts: int) -> RoundStats:
         )
         writes.append(write(delta, "frontier_v"))
 
-        # append-only seen delta (O(|delta|)/round; see read_seen). The
-        # dead keys are the fetch's 404s: the merge is the only source
-        # of 'dead' and a frontier view never holds dead rows, so these
-        # are exactly the delta's op='delete' rows.
+        # append-only seen delta: O(|delta|) per round, never a rewrite
+        # of the full set (at the 10^10 design point that would
+        # dominate). The dead keys are the fetch's 404s: the merge is
+        # the only source of 'dead' and a frontier view never holds dead
+        # rows, so these are exactly the delta's op='delete' rows.
         dead_keys = results.where(F.col("status") == 404).select("url_hash")
         seen_delta = admitted.select(
             "url_hash", F.lit("tracked").alias("set_name"), F.lit(round_no).alias("added_round")
@@ -604,7 +597,7 @@ def run_round(catalog: Catalog, round_no: int, n_hosts: int) -> RoundStats:
     # round has its filter.
     if bloom.needs_rebuild:
         bloom = BroadcastBloom.build(
-            read_seen(catalog, round_no).select("url_hash"),
+            catalog.read_committed("seen", round_no).select("url_hash"),
             n_keys=bloom.n_keys,
             capacity=BLOOM_REBUILD_FACTOR * bloom.n_keys,
         )
@@ -653,6 +646,11 @@ def round_status(catalog: Catalog) -> dict:
 
 def run_rounds(catalog: Catalog, n_rounds: int, n_hosts: int) -> list[RoundStats]:
     """Run/resume rounds up to ``n_rounds`` from the latest committed
-    snapshot (the reference's kill-safe restart, README Stopping)."""
+    snapshot (the reference's kill-safe restart, README Stopping).
+
+    A round killed between its compaction snapshot and the end of
+    ``expire_frontier_history`` is committed with its history still on
+    disk; the expiry is idempotent, so the resume finishes it first."""
+    expire_frontier_history(catalog)
     start = (catalog.latest_round("frontier") or 0) + 1
     return [run_round(catalog, r, n_hosts) for r in range(start, n_rounds + 1)]

@@ -10,6 +10,7 @@ min-max pruning / column pruning work. Mapping (SURVEY.md §1.3):
   lastlimits / limits.py  -> host_budget (politeness)
   robots gating (new)     -> robots
   follow edges (addfollowers.py:39) -> follow_edges
+  scheduling plan (crawl-tweets.sh phases 1+2) -> crawl_order
 """
 
 from __future__ import annotations
@@ -113,7 +114,28 @@ FRONTIER_V = T.StructType(
     FRONTIER.fields + [T.StructField("op", T.StringType(), False)]
 )
 
-# the catalog tables the round itself writes: Catalog checks every write
-# against these and reads them without schema inference; appended tables
-# gain the ``round`` partition column on read
-CATALOG_TABLES = {"frontier": FRONTIER, "frontier_v": FRONTIER_V, "seen": SEEN}
+# the round's scheduling plan, one row per scheduled URL (the ordering
+# golden of the equivalence tests)
+CRAWL_ORDER = T.StructType(
+    [
+        T.StructField("url_hash", T.LongType(), False),
+        T.StructField("host", T.StringType(), False),
+        T.StructField("phase", T.StringType(), False),      # expected|late
+        T.StructField("expected", T.DoubleType(), False),
+        T.StructField("fetch_rank", T.LongType(), False),
+    ]
+)
+
+# every table the round writes: Catalog checks each write against its
+# declaration and reads it without schema inference, and a table missing
+# here can be neither written nor read. Appended tables are read with the
+# ``round`` partition column last (DOCUMENTS declares it; the partition
+# value is the same)
+CATALOG_TABLES = {
+    "frontier": FRONTIER,
+    "frontier_v": FRONTIER_V,
+    "seen": SEEN,
+    "documents": DOCUMENTS,
+    "follow_edges": FOLLOW_EDGES,
+    "crawl_order": CRAWL_ORDER,
+}

@@ -21,6 +21,11 @@ def default_driver_memory() -> str:
     return f"{max(1, min(16, phys // 2 // 2**30))}g"
 
 
+def default_cpus() -> int:
+    """Parallelism that fits the host: the CPUs this process may run on."""
+    return len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "twawler_spark",
     master: str | None = None,
@@ -34,7 +39,7 @@ def get_spark(
     if pkg_root not in pp.split(":"):
         os.environ["PYTHONPATH"] = f"{pkg_root}:{pp}" if pp else pkg_root
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
