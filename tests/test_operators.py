@@ -173,6 +173,18 @@ def test_pq_adc_retrieves_exact_twin(spark):
     assert [r["count"] for r in per_vec] == [8]
 
 
+def test_pq_adc_rejects_oversized_query_side(spark, monkeypatch):
+    """The query side is collected to the driver: one row over the cap
+    raises before any distance table is built."""
+    import pytest
+
+    monkeypatch.setattr(similarity, "PQ_MAX_QUERIES", 3)
+    e = _emb(spark)
+    q = e.where(F.col("vec_id") < 4)
+    with pytest.raises(ValueError, match="more than 3 rows"):
+        similarity.pq_adc_topk(q, e, k=1, codeword_mod=17)
+
+
 def test_multi_source_bfs_exact_distances(spark):
     from twawler_spark.operators.graph import multi_source_bfs
 

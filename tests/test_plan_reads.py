@@ -1,7 +1,9 @@
 """The round's plan never reads the URL string (README "Narrow ranking
 rows"): robots gating reads ``FRONTIER.path``, decomposed once at
 admission, and no scan under the plan has ``url`` in its read schema.
-``url_hash`` does not count."""
+``url_hash`` does not count. The plan ranks on the frontier's own
+columns, so no exchange under it gathers to a single partition, and the
+frontier view runs one latest-delta window."""
 
 from __future__ import annotations
 
@@ -9,6 +11,7 @@ import io
 import re
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from twawler_spark.io_catalog import Catalog
@@ -57,3 +60,44 @@ def test_round_plan_reads_no_url(spark, crawl_root, tmp_path):
     assert len(schemas) >= 4, schemas
     assert any("path" in fields for fields in schemas), schemas
     assert not any("url" in fields for fields in schemas), schemas
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def round1(spark, crawl_root, tmp_path_factory):
+    """A catalog with round 1 committed over the round-0 snapshot."""
+    root = str(tmp_path_factory.mktemp("round1"))
+    cat = Catalog(spark, root)
+    for name in ("frontier_seed", "seen_seed", "host_budget", "robots"):
+        spark.read.parquet(f"{crawl_root}/{name}").write.parquet(f"{root}/{name}")
+    bootstrap(cat, cat.read_input("frontier_seed"), cat.read_input("seen_seed"))
+    run_rounds(cat, 1, n_hosts=N_HOSTS)
+    return cat
+
+
+def test_round_plan_has_no_single_partition_exchange(round1):
+    """Both ranking stages partition on ``host`` and budgets join by
+    ``host``: no window without a partition key gathers the plan's rows
+    (or the budgets) onto one partition."""
+    cat = round1
+    # round 2's plan, built as run_round builds it
+    frontier = read_frontier(cat, 1)
+    active = frontier.where(F.col("state") == "active")
+    host_stats = active.groupBy("host").agg(F.count(F.lit(1)).alias("n_urls"))
+    plan = build_two_phase_plan(
+        active, cat.read_input("robots"), cat.read_input("host_budget"),
+        round_now_epoch(2), host_stats=host_stats,
+    )
+    text = _executed(plan)
+    assert "Exchange hashpartitioning(host" in text, text
+    assert "SinglePartition" not in text, text
+
+
+def test_frontier_view_runs_one_window(round1):
+    """The base anti-joins the raw delta keys; only the kept rows need
+    the latest-delta window, so the view's plan holds exactly one."""
+    text = _executed(read_frontier(round1, 1))
+    assert len(re.findall(r"\bWindow \[", text)) == 1, text

@@ -141,6 +141,27 @@ def test_committed_reads_submit_no_jobs(spark, uninterrupted):
         sc.setLocalProperty("spark.job.description", None)
 
 
+def test_unwritten_tables_read_empty(spark, crawl_root, tmp_path):
+    """A bootstrapped catalog has written only ``seen``: each other
+    appended table reads as an empty frame with its declared columns
+    (``round`` last), and building those reads submits no Spark job."""
+    cat = _setup(spark, crawl_root, str(tmp_path))
+    tables = ("documents", "follow_edges", "crawl_order", "frontier_v")
+    sc = spark.sparkContext
+    group = "test-unwritten-reads"
+    sc.setJobGroup(group, group)
+    try:
+        frames = {t: cat.read_committed(t, 0) for t in tables}
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    for table, df in frames.items():
+        declared = CATALOG_TABLES[table].fieldNames()
+        assert df.columns == [c for c in declared if c != "round"] + ["round"], table
+        assert df.collect() == [], table
+
+
 def test_delta_round_commits_stats_in_manifest(uninterrupted):
     cat, stats = uninterrupted
     for st in stats:

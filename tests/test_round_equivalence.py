@@ -8,6 +8,8 @@ sequential pure-Python simulator on the BASELINE.json correctness gates:
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
 from twawler_spark import reference_sim
@@ -160,11 +162,11 @@ def test_plan_invariant_under_repartitioning(spark, crawl_root):
 
 
 def test_null_first_id_rides_the_plan_intact(spark, crawl_root):
-    """Packing regression (ADVICE r3): first_id is nullable — a NULL
-    first_id must come out of the plan as NULL *without* nulling the
-    packed-alongside non-null `reached` bit (a plain first_id*2+reached
-    pack loses `reached` for those rows, and fetch_results would then
-    coerce it to False and resume backfill past an exhausted floor)."""
+    """first_id is nullable: a NULL first_id must come out of the plan
+    as NULL, and the non-null `reached` next to it must come out
+    unchanged (a lost `reached` would be coerced to False by
+    fetch_results, which would then resume backfill past an exhausted
+    floor). Both ride the ranking shuffles as plain columns."""
     from pyspark.sql import functions as F
 
     from twawler_spark.plans.round import build_two_phase_plan
@@ -193,11 +195,10 @@ def test_null_first_id_rides_the_plan_intact(spark, crawl_root):
 
 @pytest.mark.parametrize("case", ["missing_host", "null_budget"])
 def test_missing_budget_host_fails_fast(spark, crawl_root, case):
-    """Host dictionary-encoding regression (ADVICE r3): a frontier host absent
-    from the budgets dim must raise, not silently collapse all unmatched
-    hosts into one NULL-host ranking partition. A host whose
-    budget_per_round is NULL must raise too: the planner has no default
-    budget to give it."""
+    """A frontier host absent from the budgets dim must raise, not
+    silently drop out of the rank filters with a NULL budget. A host
+    whose budget_per_round is NULL must raise too: the planner has no
+    default budget to give it."""
     from pyspark.sql import functions as F
 
     from twawler_spark.plans.round import build_two_phase_plan
@@ -222,3 +223,29 @@ def test_missing_budget_host_fails_fast(spark, crawl_root, case):
     )
     with pytest.raises(Exception, match=match):
         plan.collect()
+
+
+@pytest.mark.parametrize("case", ["missing_host", "null_budget"])
+def test_sim_missing_budget_host_fails_fast(spark, crawl_root, tmp_path, case):
+    """The oracle keeps the planner's budget contract: a frontier host
+    missing from ``host_budget``, or with a NULL budget, raises; there
+    is no default budget."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "inputs")
+    for name in ("frontier_seed", "seen_seed", "robots"):
+        shutil.copytree(f"{crawl_root}/{name}", f"{root}/{name}")
+    budgets = spark.read.parquet(f"{crawl_root}/host_budget")
+    one_host = budgets.select("host").first()["host"]
+    if case == "missing_host":
+        holey = budgets.where(F.col("host") != one_host)
+        error, match = KeyError, one_host
+    else:
+        holey = budgets.withColumn(
+            "budget_per_round",
+            F.when(F.col("host") != one_host, F.col("budget_per_round")),
+        )
+        error, match = ValueError, "NULL budget_per_round"
+    holey.write.parquet(f"{root}/host_budget")
+    with pytest.raises(error, match=match):
+        reference_sim.run(root, 1, n_hosts=N_HOSTS)

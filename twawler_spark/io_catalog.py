@@ -302,13 +302,18 @@ class Catalog:
         names its own in-flight round on purpose where it reads what it
         has just appended before that round's frontier manifest exists:
         bootstrap's filter build, the filter rebuild and the compaction
-        snapshot."""
+        snapshot. A table with no round written yet reads as an empty
+        frame with the same columns."""
         declared = [f for f in CATALOG_TABLES[table].fields if f.name != "round"]
         schema = T.StructType(declared + [T.StructField("round", T.IntegerType())])
+        data = f"{self.root}/{table}/data"
+        if not os.path.isdir(data):
+            # no round written yet: the committed state is empty
+            return self.spark.createDataFrame([], schema)
         return (
             self.spark.read.schema(schema)
-            .option("basePath", f"{self.root}/{table}/data")
-            .parquet(f"{self.root}/{table}/data")
+            .option("basePath", data)
+            .parquet(data)
             .where(F.col("round") <= upto_round)
         )
 

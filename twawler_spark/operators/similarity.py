@@ -532,6 +532,13 @@ def pq_encode(
     )
 
 
+# pq_adc_topk collects its query side to the driver, and every Arrow
+# batch holds a (queries x batch rows) float64 ADC matrix: at 256
+# queries and 10k-row batches that is ~20 MB per task. A larger query
+# side raises instead of exhausting the driver or the workers.
+PQ_MAX_QUERIES = 256
+
+
 def pq_adc_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -545,12 +552,13 @@ def pq_adc_topk(
 ) -> DataFrame:
     """Asymmetric-distance top-k: queries score CODES, not vectors.
 
-    The query side precomputes its distance table (query-subvector ×
-    codeword — Q·m·K tiny rows, broadcast); each corpus code row joins
-    its table entry and the per-(q, c) sum of m lookups approximates
-    the true squared L2. One shuffle on (q_id, c_id) for the sum — the
-    corpus contributes only its 8-byte codes, never raw floats: the PQ
-    scan shape that makes billion-vector rescoring affordable."""
+    The query side (at most ``PQ_MAX_QUERIES`` rows; more raise
+    ``ValueError``) is collected and precomputes its distance table
+    (query-subvector × codeword, Q·m·K floats). The sum of m table
+    lookups at a corpus vector's codes approximates the true squared
+    L2. The scan is ONE Arrow pass over the corpus with no shuffle:
+    each batch encodes its vectors and keeps its per-query top-k; only
+    those candidates reach the final per-query rank window."""
     import numpy as np
     import pandas as pd
 
@@ -576,7 +584,12 @@ def pq_adc_topk(
                 np.array([r["cw"] for r in rows], dtype=np.float64),
             )
         )
-    q_rows = queries.select(id_col, vec_col).collect()
+    q_rows = queries.select(id_col, vec_col).limit(PQ_MAX_QUERIES + 1).collect()
+    if len(q_rows) > PQ_MAX_QUERIES:
+        raise ValueError(
+            f"pq_adc_topk: the query side has more than {PQ_MAX_QUERIES} rows; "
+            "it is collected to the driver, so split it into batches"
+        )
     q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
     q_vecs = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
     # dtab[mi]: (Q, K) squared L2 of each query subvector vs each

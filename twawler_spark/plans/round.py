@@ -93,9 +93,10 @@ def read_frontier(catalog: Catalog, upto_round: int) -> DataFrame:
     Per-round frontier writes are O(|changed rows|) (fetched, revived,
     admitted, dead-tombstoned), not O(|frontier|); every COMPACT_EVERY
     rounds the view is materialized so the delta chain stays bounded.
-    The read plan is scale-friendly: the window runs only over the
-    SMALL delta union; the base is touched by one anti-join against the
-    changed-key set (broadcastable — it's bounded by rounds×plan size).
+    The read plan is scale-friendly: the base is touched by one
+    anti-join against the raw delta keys (broadcastable — bounded by
+    rounds×plan size), and one ``url_hash`` window over the SMALL delta
+    union picks each key's latest delta; only its upserts are kept.
 
     The deltas come from ``Catalog.read_committed("frontier_v",
     upto_round)``, so a killed round's partial append stays out of the
@@ -109,15 +110,14 @@ def read_frontier(catalog: Catalog, upto_round: int) -> DataFrame:
     deltas = catalog.read_committed("frontier_v", upto_round).where(
         F.col("round") > base_round
     )
+    # a left anti join ignores duplicate keys, so the base only needs the
+    # raw delta keys; the latest-delta window runs once, for kept rows
+    survivors = base.join(deltas.select("url_hash"), "url_hash", "left_anti")
     w = Window.partitionBy("url_hash").orderBy(F.col("round").desc())
-    latest = (
+    keep = (
         deltas.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    survivors = base.join(latest.select("url_hash"), "url_hash", "left_anti")
-    keep = latest.where(F.col("op") == "upsert").select(
-        [f.name for f in FRONTIER.fields]
+        .where((F.col("__rn") == 1) & (F.col("op") == "upsert"))
+        .select([f.name for f in FRONTIER.fields])
     )
     return survivors.select([f.name for f in FRONTIER.fields]).unionByName(keep)
 
@@ -230,17 +230,15 @@ def build_two_phase_plan(
     gating reads the ``path`` column, decomposed once at admission, so
     the plan never reads ``url``.
 
-    The host string is dictionary-encoded into a dense int for the two
-    ranking exchanges (the host name is the second-widest column; ~20
-    bytes -> 8 through every shuffle and a cheaper partitioner hash)
-    and restored on the SMALL plan output via a broadcast join. The
-    dense id is derived once over the tiny ``budgets`` dim — the
-    engine's politeness/budget table IS the host dimension (per-host
-    crawl state exists for every host admitted to the frontier).
+    The ranking rows carry the frontier's own columns: both stages
+    partition on ``host``, and ``first_id``/``reached`` ride the two
+    ranking exchanges as they are (no ranking consumer reads them).
+    Budgets join by ``host`` in one broadcast join; no window in the
+    plan lacks a partition key, so none runs on a single partition.
 
-    ``host_stats`` (host, n_urls — per-host frontier row counts, e.g.
-    maintained incrementally in the host dimension, or one column-pruned
-    scan+partial-agg) turns the salting ADAPTIVE: only hosts above
+    ``host_stats`` (host, n_urls — per-host frontier row counts;
+    ``run_round`` computes them every round with a group-by over the
+    frontier view) turns the salting ADAPTIVE: only hosts above
     ``hot_threshold`` rows get ``salt_buckets``-way salting; cold hosts
     rank in a single stage-A bucket. With uniform salting and ~B rows
     kept per (host, salt), a host with fewer than ``salt_buckets * (2B
@@ -262,21 +260,8 @@ def build_two_phase_plan(
     )
     # rate_tph/latest_ts are consumed by score(); __path by the robots
     # gate — none of them may ride the ranking shuffles and sorts.
-    # first_id/reached are pure passengers (no ranking consumer): pack
-    # them into ONE long for the exchanges and unpack on the small plan
-    # output. FRONTIER.first_id is nullable (schemas.py) — a plain
-    # first_id*2+reached would go NULL and drag the non-null reached bit
-    # with it, so bit 1 carries an explicit null flag:
-    #   coalesce(first_id,0)*4 | is_null<<1 | reached   (ids < 2^61)
-    gated = (
-        gate_robots(scored, robots, path_col="__path")
-        .withColumn(
-            "__fi_r",
-            F.coalesce(F.col("first_id"), F.lit(0)) * 4
-            + F.col("first_id").isNull().cast("long") * 2
-            + F.col("reached").cast("long"),
-        )
-        .drop("__path", "rate_tph", "latest_ts", "first_id", "reached")
+    gated = gate_robots(scored, robots, path_col="__path").drop(
+        "__path", "rate_tph", "latest_ts"
     )
     if host_stats is not None:
         hot = (
@@ -284,33 +269,29 @@ def build_two_phase_plan(
             .select("host", F.lit(True).alias("__hot"))
         )
         gated = gated.join(F.broadcast(hot), "host", "left")
-    # one tiny single-partition window over the dim (n_hosts rows)
-    dim = budgets.select("host", "budget_per_round").withColumn(
-        "host_id", F.row_number().over(Window.orderBy("host")).cast("long")
-    )
 
     def fail(what: str) -> F.Column:
         return F.raise_error(F.concat(
             F.lit("build_two_phase_plan: frontier host '"), F.col("host"), F.lit(what),
-        )).cast("long")
+        ))
 
-    # budgets must give every frontier host a budget — a missing host
-    # would leave host_id NULL and silently merge all such hosts into
-    # ONE ranking partition (and a NULL host in the output); a NULL
-    # budget would drop the host's rows from the rank filters. Fail
-    # fast instead: the partition key raises on the first unmatched or
-    # unbudgeted row (CASE branches are tried in order).
+    # budgets must give every frontier host a budget — a missing host or
+    # a NULL budget would leave __b NULL and silently drop the host's
+    # rows from the rank filters. Fail fast instead: the budget column
+    # raises on the first unmatched or unbudgeted row (CASE branches
+    # are tried in order; __known tells a missing host from a NULL
+    # budget).
+    known = budgets.select("host", "budget_per_round", F.lit(True).alias("__known"))
     wb = (
-        gated.join(F.broadcast(dim), "host", "left")
+        gated.join(F.broadcast(known), "host", "left")
         .withColumn(
-            "host_id",
-            F.when(F.col("host_id").isNull(), fail("' missing from budgets dim"))
+            "__b",
+            F.when(F.col("__known").isNull(), fail("' missing from budgets dim"))
             .when(F.col("budget_per_round").isNull(), fail("' has a NULL budget_per_round"))
-            .otherwise(F.col("host_id")),
+            .otherwise(F.col("budget_per_round")),
         )
-        .withColumnRenamed("budget_per_round", "__b")
         .withColumn("__b2", F.greatest(F.floor(F.col("__b") / 2), F.lit(1)).cast("int"))
-        .drop("host")
+        .drop("budget_per_round", "__known")
     )
     salt = F.pmod(F.col("url_hash"), F.lit(salt_buckets)).cast("int")
     if host_stats is not None:
@@ -322,8 +303,8 @@ def build_two_phase_plan(
     wb = wb.withColumn("__salt", salt)
     if host_stats is not None:
         wb = wb.drop("__hot")
-    w_es = Window.partitionBy("host_id", "__salt").orderBy(*order_e)
-    w_hs = Window.partitionBy("host_id", "__salt").orderBy(*order_h)
+    w_es = Window.partitionBy("host", "__salt").orderBy(*order_e)
+    w_hs = Window.partitionBy("host", "__salt").orderBy(*order_h)
     pre = (
         wb.withColumn("__rne", F.row_number().over(w_es))
         .withColumn("__rnh", F.row_number().over(w_hs))
@@ -339,32 +320,23 @@ def build_two_phase_plan(
     # would run twice). Phase-2's rank among NON-phase-1 rows comes from a
     # mixed-order row_number (phase-1 rows first) minus the host's
     # phase-1 count — identical ordering semantics, half the sort work.
-    w_e = Window.partitionBy("host_id").orderBy(*order_e)
+    w_e = Window.partitionBy("host").orderBy(*order_e)
     ranked = pre.withColumn("__rank_e", F.row_number().over(w_e))
     is_p1 = F.col("__rank_e") <= F.col("__b")
-    w_mixed = Window.partitionBy("host_id").orderBy(
+    w_mixed = Window.partitionBy("host").orderBy(
         is_p1.cast("int").desc(), *order_h
     )
-    w_host = Window.partitionBy("host_id").orderBy(
+    w_host = Window.partitionBy("host").orderBy(
         is_p1.cast("int").desc(), *order_h
     ).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    keep = ["url_hash", "host", "last_id",
-            F.when(
-                F.col("__fi_r").bitwiseAND(F.lit(2)) == 0,
-                F.shiftright(F.col("__fi_r"), 2),
-            ).alias("first_id"),
-            (F.col("__fi_r").bitwiseAND(F.lit(1)) == 1).alias("reached"),
-            "expected", "hours_idle"]
     staged = (
         ranked.withColumn("__rn_mixed", F.row_number().over(w_mixed))
         .withColumn("__n_p1", F.sum(is_p1.cast("int")).over(w_host))
         .withColumn("__rank_h", F.col("__rn_mixed") - F.col("__n_p1"))
     )
     out = staged.where(is_p1 | (F.col("__rank_h") <= F.col("__b2")))
-    # restore the host string on the SMALL plan output only
-    out = out.join(F.broadcast(dim.select("host_id", "host")), "host_id", "left")
     return out.select(
-        *keep,
+        "url_hash", "host", "last_id", "first_id", "reached", "expected", "hours_idle",
         F.when(is_p1, F.col("__rank_e")).otherwise(F.col("__rank_h")).alias("fetch_rank"),
         F.when(is_p1, F.lit("expected")).otherwise(F.lit("late")).alias("phase"),
     )
@@ -378,9 +350,10 @@ def merge_fetch_results(
     transitions (404→dead, 403→protected, 429→suspended), checkpoint
     advances (dumpall.py:83-87 last_id; load-past.py:69-77
     first_id/reached) and the latest_ts touch on success. Unscheduled
-    rows pass through unchanged (status NULL). Extracted from
-    ``run_round`` so the driver-contract queries oracle the exact
-    engine code path."""
+    rows pass through unchanged (status NULL). ``run_round`` and the
+    ``crawl_round_states`` driver-contract query
+    (``crawl_queries.q_crawl_round_states``) both call it, so that
+    query's DuckDB oracle checks the engine's own MERGE."""
     res = F.broadcast(
         results.select("url_hash", "status", "new_last_id", "new_first_id", "new_reached")
     )

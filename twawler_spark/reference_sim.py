@@ -28,7 +28,6 @@ from .hashing import to_signed64, xxh64_str
 REVIVE_TTL_ROUNDS = 3
 ROUND_SECONDS = 3600
 NOW_EPOCH = 1767225600  # keep in sync with synth.NOW_EPOCH
-DEFAULT_BUDGET = 4
 
 
 BACKFILL_STEP = 3  # keep in sync with docspec.BACKFILL_STEP
@@ -126,11 +125,14 @@ def run(root: str, n_rounds: int, n_hosts: int) -> SimResult:
             per_host.setdefault(row["host"], []).append((row["rate"] * idle, idle, uh))
 
         # phase 1: budget-ranked by expected (DESC, url_hash ASC);
-        # phase 2 (--crawl-late): leftovers by staleness, half budget
+        # phase 2 (--crawl-late): leftovers by staleness, half budget.
+        # Every frontier host needs a budget: no default (as the planner)
         plan = []
         for host, cands in per_host.items():
-            b1 = budgets.get(host, DEFAULT_BUDGET)
-            b2 = max(b1 // 2, 1) if host in budgets else 2
+            b1 = budgets[host]
+            if b1 is None:
+                raise ValueError(f"host {host!r} has a NULL budget_per_round")
+            b2 = max(b1 // 2, 1)
             cands.sort(key=lambda t: (-t[0], t[2]))
             taken = cands[:b1]
             for rank, (_exp, _idle, uh) in enumerate(taken, 1):
@@ -185,9 +187,8 @@ def run(root: str, n_rounds: int, n_hosts: int) -> SimResult:
                 "last_id": 0, "first_id": 0, "reached": False,
                 "latest_epoch": now, "rate": 1.0,
             }
-        for uh in dead:
+        for uh in dead:  # dead keys are already in seen (were tracked)
             del frontier[uh]
-        seen.update({})  # dead keys already in seen (were tracked)
         stats.append(
             {"round": r, "n_scheduled": len(plan), "n_docs": n_doc_round,
              "n_candidates": len(new_cands), "n_admitted": admitted,
