@@ -1,27 +1,30 @@
 """Benchmark harness — prints ONE JSON line.
 
-Primary metric (BASELINE.json): frontier URLs scheduled+deduped per
-second per scheduling round — the count of active frontier rows pushed
-through score → robots gate → seen anti-join → per-host budget rank →
-plan emission, divided by round wall time (1 warmup + best of 3 timed
-rounds per variant — symmetric; JVM startup and input generation
-excluded).
+Primary metric (BASELINE.json): the crawl round's units of work per
+second, computed the way ``python -m twawler_spark crawl`` reports it —
+Σ(n_scheduled + n_candidates) over the RoundStats of ``run_rounds``,
+divided by its wall time. Each run bootstraps a fresh catalog over the
+cached synthetic inputs (untimed, reported as ``bootstrap_s``), then
+times ``run_rounds`` over CRAWL_ROUNDS rounds (``crawl_rounds_s``). The
+catalog stays at ``<inputs>/catalog`` until the next run, so
+``python -m twawler_spark status --root`` can read its RoundStats.
 
-Also times the headline operator queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1).
+Also times seen-set admission at the |seen| >> |candidates| shape and
+the headline operator queries at $SPARK_GRAFT_SF_DIR.
 
 Env knobs:
   SPARK_GRAFT_CPUS        parallelism (default: the CPUs this process may
                           use, session.default_cpus) -> local[N]
   SPARK_GRAFT_SF_DIR      driver-table dir for query timings
   SPARK_GRAFT_BENCH_URLS  synthetic frontier size (default 4_000_000)
-  SPARK_GRAFT_BENCH_SKIP_QUERIES  "1" -> scheduling bench only
+  SPARK_GRAFT_BENCH_SKIP_QUERIES  "1" -> crawl rounds and admission only
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -29,12 +32,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from twawler_spark.io_catalog import register_bucketed, write_bucketed
+from twawler_spark.io_catalog import Catalog
 from twawler_spark.operators.admission import admit
 from twawler_spark.operators.seen_filter import BroadcastBloom
-from twawler_spark.plans.round import build_two_phase_plan
+from twawler_spark.plans.round import bootstrap, run_rounds
 from twawler_spark.session import default_cpus, get_spark
-from twawler_spark.synth import NOW_EPOCH, write_inputs
+from twawler_spark.synth import write_inputs
 
 HEADLINE_QUERIES = (
     "crawl_budget_rank",
@@ -230,9 +233,6 @@ def log(*a):
     print(*a, file=sys.stderr, flush=True)
 
 
-N_BUCKETS = 64
-
-
 INPUT_LAYOUT_VERSION = 2  # v2: FRONTIER.path decomposed at generation
 
 
@@ -242,8 +242,6 @@ def ensure_inputs(spark, n_urls: int, n_hosts: int) -> str:
     marker_want = f"v{INPUT_LAYOUT_VERSION}"
     if os.path.exists(marker) and open(marker).read() != marker_want:
         log("stale input layout -> regenerating")
-        import shutil
-
         shutil.rmtree(root, ignore_errors=True)
     if not os.path.exists(marker):
         log(f"generating bench frontier: {n_urls} urls, {n_hosts} hosts -> {root}")
@@ -254,97 +252,22 @@ def ensure_inputs(spark, n_urls: int, n_hosts: int) -> str:
         write_inputs(spark, root, n_urls, n_hosts, noise=False)
         open(marker, "w").write(marker_want)
         log(f"generated in {time.time()-t0:.1f}s")
-    bmarker = f"{root}/.bucketed"
-    # marker content encodes the layout contract; a marker written for a
-    # different N_BUCKETS or writer version is stale -> rewrite the layout
-    from twawler_spark.io_catalog import BUCKET_LAYOUT_VERSION
-    bmarker_want = f"v{BUCKET_LAYOUT_VERSION}:n_buckets={N_BUCKETS}"
-    if os.path.exists(bmarker) and open(bmarker).read() != bmarker_want:
-        log("stale bucketed layout marker -> rewriting bucketed tables")
-        os.remove(bmarker)
-    if not os.path.exists(bmarker):
-        # the production storage layout: frontier AND seen hash-bucketed
-        # + sorted on url_hash at write time, so the whole-frontier dedup
-        # anti-join is a zero-exchange zero-sort per-bucket merge.
-        # repartition(N, key) aligns with bucketBy's murmur3 pmod, so each
-        # task holds exactly one bucket -> one file per bucket -> the
-        # planner trusts the SORTED BY metadata (no Sort node either).
-        log("writing bucketed frontier/seen layout…")
-        t0 = time.time()
-        for src, name in (("frontier_seed", "frontier_b"), ("seen_seed", "seen_b")):
-            write_bucketed(
-                spark.read.parquet(f"{root}/{src}"),
-                f"{root}/{src}_bucketed",
-                f"{name}_gen",
-                n_buckets=N_BUCKETS,
-            )
-        open(bmarker, "w").write(bmarker_want)
-        log(f"bucketed in {time.time()-t0:.1f}s")
-    register_bucketed(spark, "frontier_b", f"{root}/frontier_seed_bucketed", n_buckets=N_BUCKETS)
-    register_bucketed(spark, "seen_b", f"{root}/seen_seed_bucketed", n_buckets=N_BUCKETS)
     return root
 
 
-def sched_round_once(
-    spark,
-    root: str,
-    bloom: BroadcastBloom | None,
-    exact_broadcast: bool = False,
-    bucketed: bool = False,
-) -> tuple[int, float]:
-    """One scheduling round (no fetch, no writes): returns (n_active, sec).
+CRAWL_ROUNDS = 3  # the CLI's default `crawl --rounds`
+CATALOG_INPUTS = ("frontier_seed", "seen_seed", "host_budget", "robots")
 
-    Production/headline shape at the 10^10 design point (``bucketed``):
-    frontier and seen are both stored hash-bucketed + sorted on
-    ``url_hash``, so the whole-frontier dedup anti-join is a
-    zero-exchange zero-sort per-bucket merge — no shuffle ever touches
-    either 10^10-row table, and scaling is bounded only by scan
-    bandwidth. The wide ``url`` column is never read (robots gating
-    reads ``FRONTIER.path``), so no shuffle carries the URL string.
-    Comparison variants: exact SMJ anti-join over unbucketed storage
-    (shuffles both sides), exact broadcast anti-join (valid only while
-    seen keys fit executor memory — cannot exist at 10^10), and the
-    persisted-bloom probe + co-partitioned confirm (the tier built for
-    |seen| >> |candidates| admission, timed here for completeness)."""
-    if bucketed:
-        frontier = spark.table("frontier_b")
-        seen = spark.table("seen_b")
-    else:
-        frontier = spark.read.parquet(f"{root}/frontier_seed")
-        seen = spark.read.parquet(f"{root}/seen_seed")
-    budgets = spark.read.parquet(f"{root}/host_budget")
-    robots = spark.read.parquet(f"{root}/robots")
 
-    t0 = time.time()
-    # FRONTIER.path was decomposed at generation: the round never reads
-    # the wide url column (the largest column in the table)
-    narrow = frontier.where(F.col("state") == "active").select(
-        "url_hash", "host", "last_id", "first_id", "reached", "rate_tph",
-        "latest_ts", "path",
-    )
-    if bloom is None and exact_broadcast:
-        admitted = narrow.join(
-            F.broadcast(seen.select("url_hash")), "url_hash", "left_anti"
-        )
-    else:
-        admitted = admit(narrow, seen, bloom=bloom, confirm_broadcast=False)
-    # adaptive-salt stats: column-pruned scan + partial agg on the
-    # frontier (timed inside the round — production maintains these
-    # incrementally in the host dim)
-    host_stats = frontier.where(F.col("state") == "active").groupBy("host").agg(
-        F.count(F.lit(1)).alias("n_urls")
-    )
-    plan = build_two_phase_plan(
-        admitted, robots, budgets, NOW_EPOCH + 3600, salt_buckets=16,
-        host_stats=host_stats,
-    )
-    n_planned = plan.count()
-    dt = time.time() - t0
-    n_active = frontier.where(F.col("state") == "active").count()
-    log(f"  round: {n_active} active -> {n_planned} planned in {dt:.2f}s "
-        f"(bloom={'on' if bloom else 'off'}, bcast={exact_broadcast}, "
-        f"bucketed={bucketed})")
-    return n_active, dt
+def fresh_catalog(spark, root: str) -> Catalog:
+    """An empty catalog at ``<root>/catalog`` whose inputs link to the
+    cached ones (any catalog of an earlier run is removed first)."""
+    cat_root = f"{root}/catalog"
+    shutil.rmtree(cat_root, ignore_errors=True)
+    os.makedirs(cat_root)
+    for name in CATALOG_INPUTS:
+        os.symlink(f"{root}/{name}", f"{cat_root}/{name}")
+    return Catalog(spark, cat_root)
 
 
 IVF_N = 500_000
@@ -461,11 +384,10 @@ def main() -> int:
     n_hosts = max(100, n_urls // 200)
     # Confs scale with the INPUT, not just the core count. The 100M-URL
     # sweep wants many small tasks (stage tails idle a bounded fraction of
-    # the machine; AQE coalesces the excess), but at the driver's 4M-URL
-    # config those same knobs add fixed per-task scheduling overhead to
-    # ~3-second rounds and regress the headline (r2: 1.11M -> 680k
-    # urls/sec). Below the 10M-URL tier, use one shuffle partition per
-    # core and the default 128 MB splits (the r1-proven values).
+    # the machine; AQE coalesces the excess), but at smaller inputs those
+    # same knobs add fixed per-task scheduling overhead. Below the
+    # 10M-URL tier, use one shuffle partition per core and the default
+    # 128 MB splits.
     big_input = n_urls >= 10_000_000
     if big_input:
         # 4x cores: a straggler task idles 1/(4*cpus) of capacity instead
@@ -486,59 +408,27 @@ def main() -> int:
         "bench",
         master=f"local[{cpus}]",
         shuffle_partitions=shuffle_parts,
-        # seen keys at 20% of the frontier fit a (raised) broadcast: the
-        # exact dedup tier then needs no shuffle at all. On a cluster the
-        # same conf trades executor memory for shuffle elimination.
-        extra_conf={"spark.sql.autoBroadcastJoinThreshold": str(512 * 1024 * 1024),
-                    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-                    **size_conf,
-                    # safe because ensure_inputs writes EXACTLY one file
-                    # per bucket (repartition(N, key) aligned with
-                    # bucketBy's hash): the bucketed scan then reports
-                    # its SORTED BY ordering and the co-bucketed
-                    # anti-join needs neither Exchange nor Sort
-                    "spark.sql.legacy.bucketedTableScan.outputOrdering": "true"},
+        extra_conf=size_conf,
     )
 
     root = ensure_inputs(spark, n_urls, n_hosts)
 
-    # ------------------------------------------------- scheduling round
-    # Protocol: every variant gets exactly 1 warmup (codegen + worker
-    # spawn) + 3 timed rounds, best-of-3 — symmetric across variants so
-    # no variant gets extra draws against sandbox timing noise.
-    seen_for_bloom = spark.read.parquet(f"{root}/seen_seed").select("url_hash")
+    # ------------------------------------------------------ crawl rounds
+    # `python -m twawler_spark crawl --rounds 3` on a fresh catalog, under
+    # the session's own broadcast threshold: bootstrap untimed, then the
+    # CLI's units of work (scheduled + candidates) over run_rounds' time
+    cat = fresh_catalog(spark, root)
     t0 = time.time()
-    n_seen = seen_for_bloom.count()
-    round_bloom = BroadcastBloom.build(seen_for_bloom, n_keys=n_seen)
-    log(f"persisted seen-filter (one-time bootstrap build): {n_seen} keys, "
-        f"{round_bloom.m_bits >> 23} MiB in {time.time()-t0:.1f}s")
-    K_TIMED = 3
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    log("warmup…")
-    sched_round_once(spark, root, round_bloom)
-    times_bloom, n_active = [], 0
-    for _ in range(K_TIMED):
-        n_active, dt = sched_round_once(spark, root, round_bloom)
-        times_bloom.append(dt)
-    sched_round_once(spark, root, None)
-    dt_smj = min(sched_round_once(spark, root, None)[1] for _ in range(K_TIMED))
-    # production storage layout: co-bucketed anti-join, no exchange/sort
-    sched_round_once(spark, root, None, bucketed=True)
-    dt_bucketed = min(
-        sched_round_once(spark, root, None, bucketed=True)[1] for _ in range(K_TIMED)
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(512 * 1024 * 1024))
-    sched_round_once(spark, root, None, exact_broadcast=True)
-    dt_bcast = min(
-        sched_round_once(spark, root, None, exact_broadcast=True)[1]
-        for _ in range(K_TIMED)
-    )
-    # headline = the engine's storage/tier choice: fastest correct
-    # variant at THIS scale. The co-bucketed layout is the production
-    # answer for whole-frontier dedup (zero-shuffle at any scale); bloom
-    # is the per-round admission tier (|seen| >> |candidates|).
-    med = min(min(times_bloom), dt_smj, dt_bcast, dt_bucketed)
-    throughput = n_active / med
+    bootstrap(cat, cat.read_input("frontier_seed"), cat.read_input("seen_seed"))
+    bootstrap_dt = time.time() - t0
+    log(f"bootstrap of {cat.root}: {bootstrap_dt:.2f}s")
+    t0 = time.time()
+    stats = run_rounds(cat, CRAWL_ROUNDS, n_hosts)
+    rounds_dt = time.time() - t0
+    done = sum(st.n_scheduled + st.n_candidates for st in stats)
+    throughput = done / rounds_dt
+    log(f"{len(stats)} crawl rounds: {done} scheduled + candidates in "
+        f"{rounds_dt:.2f}s")
 
     # -------------------------------- admission at the 10^10-seen shape
     # seen = EVERY frontier key (the tracked set); candidates = ~2% of
@@ -561,8 +451,6 @@ def main() -> int:
         )
     ).localCheckpoint(eager=True)
 
-    from twawler_spark.operators.admission import admit as admit_op
-
     t0 = time.time()
     bloom = BroadcastBloom.build(seen_big, n_keys=n_urls)
     log(f"one-time persisted-filter build: {n_urls} keys, "
@@ -579,13 +467,13 @@ def main() -> int:
 
     # warmup both variants (python-UDF worker spawn, code paths), then time
     cands.join(seen_big, "url_hash", "left_anti").count()
-    admit_op(cands, seen_big, bloom=bloom).count()
+    admit(cands, seen_big, bloom=bloom).count()
     t0 = time.time()
     n_admit_exact = cands.join(seen_big, "url_hash", "left_anti").count()
     admit_exact_dt = time.time() - t0
     log(f"admit exact anti-join (SMJ): {n_admit_exact} admitted in {admit_exact_dt:.2f}s")
     t0 = time.time()
-    n_admit_bloom = admit_op(cands, seen_big, bloom=bloom).count()
+    n_admit_bloom = admit(cands, seen_big, bloom=bloom).count()
     admit_bloom_dt = time.time() - t0 + update_dt
     log(f"admit bloom probe+confirm (+delta update): {n_admit_bloom} admitted "
         f"in {admit_bloom_dt:.2f}s")
@@ -611,9 +499,9 @@ def main() -> int:
     cuckoo.insert_keys(retract)
     retract_dt = time.time() - t0
     log(f"cuckoo retract+reinsert ({len(retract)} keys): {retract_dt:.2f}s")
-    admit_op(cands, seen_big, bloom=cuckoo).count()
+    admit(cands, seen_big, bloom=cuckoo).count()
     t0 = time.time()
-    n_admit_cuckoo = admit_op(cands, seen_big, bloom=cuckoo).count()
+    n_admit_cuckoo = admit(cands, seen_big, bloom=cuckoo).count()
     admit_cuckoo_dt = time.time() - t0 + retract_dt
     log(f"admit cuckoo probe+confirm (+retraction cycle): {n_admit_cuckoo} "
         f"admitted in {admit_cuckoo_dt:.2f}s")
@@ -622,11 +510,8 @@ def main() -> int:
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(512 * 1024 * 1024))
 
     queries: dict[str, float] = {
-        "sched_round_bloom": round(min(times_bloom), 3),
-        "sched_round_exact": round(dt_smj, 3),
-        "sched_round_exact_bcast": round(dt_bcast, 3),
-        "sched_round_bucketed": round(dt_bucketed, 3),
-        "sched_round_headline": round(med, 3),
+        "bootstrap_s": round(bootstrap_dt, 3),
+        "crawl_rounds_s": round(rounds_dt, 3),
         "admit_seenbig_exact": round(admit_exact_dt, 3),
         "admit_seenbig_bloom": round(admit_bloom_dt, 3),
         "admit_seenbig_cuckoo": round(admit_cuckoo_dt, 3),
@@ -654,8 +539,8 @@ def main() -> int:
             "cpus": cpus,
             "frontier_urls": n_urls,
             "hosts": n_hosts,
-            "n_active": n_active,
-            "iterations": 3,
+            "n_active": stats[0].n_active,
+            "iterations": len(stats),
         },
     }
     spark.stop()

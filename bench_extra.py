@@ -44,10 +44,8 @@ def main() -> int:
         shuffle_partitions=cpus,
         extra_conf={
             "spark.sql.autoBroadcastJoinThreshold": str(512 * 1024 * 1024),
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
             "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(64 * 1024 * 1024),
-            "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
         },
     )
     queries: dict[str, float] = {}

@@ -296,7 +296,9 @@ def main():
         rows.append(audit(name, txt))
         details[name] = txt
 
-    # the flagship round plan (bench shape, narrow projection + broadcast anti)
+    # the flagship round plan: the one run_round builds — the two-phase
+    # rank over the active frontier with its per-host stats (admission
+    # happens later in the round, against outlinks only)
     from pyspark.sql import functions as F
 
     from twawler_spark.plans.round import build_two_phase_plan
@@ -306,50 +308,14 @@ def main():
     if not os.path.exists(f"{root}/frontier_seed"):
         write_inputs(spark, root, 100_000, 1_000, noise=False)
     frontier = spark.read.parquet(f"{root}/frontier_seed")
-    seen = spark.read.parquet(f"{root}/seen_seed").select("url_hash")
     budgets = spark.read.parquet(f"{root}/host_budget")
     robots = spark.read.parquet(f"{root}/robots")
-    narrow = frontier.where(F.col("state") == "active").select(
-        "url_hash", "host", "last_id", "first_id", "reached", "rate_tph",
-        "latest_ts", "path",
+    active = frontier.where(F.col("state") == "active")
+    host_stats = active.groupBy("host").agg(F.count(F.lit(1)).alias("n_urls"))
+    round_txt = plan_text(
+        build_two_phase_plan(active, robots, budgets, NOW_EPOCH + 3600, host_stats=host_stats)
     )
-    adm = narrow.join(F.broadcast(seen), "url_hash", "left_anti")
-    round_plan = build_two_phase_plan(adm, robots, budgets, NOW_EPOCH + 3600, 16)
-    round_txt = plan_text(round_plan)
-    rows.append(audit("sched_round (bcast dedup)", round_txt))
-
-    # the production storage layout: co-bucketed frontier/seen dedup —
-    # the anti-join must show ZERO exchanges and ZERO sorts of its own
-    from twawler_spark.io_catalog import register_bucketed, write_bucketed
-
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    # per-dir guard on the spec file (written last), so a crash between
-    # the two writes never leaves a half-built layout that gets reused
-    if not os.path.exists(f"{root}/frontier_bucketed/_bucket_spec.json"):
-        write_bucketed(frontier, f"{root}/frontier_bucketed", "audit_frontier_gen", n_buckets=8)
-    if not os.path.exists(f"{root}/seen_bucketed/_bucket_spec.json"):
-        write_bucketed(
-            spark.read.parquet(f"{root}/seen_seed"),
-            f"{root}/seen_bucketed", "audit_seen_gen", n_buckets=8,
-        )
-    register_bucketed(spark, "audit_frontier_b", f"{root}/frontier_bucketed", n_buckets=8)
-    register_bucketed(spark, "audit_seen_b", f"{root}/seen_bucketed", n_buckets=8)
-    fb = spark.table("audit_frontier_b")
-    narrow_b = fb.where(F.col("state") == "active").select(
-        "url_hash", "host", "last_id", "first_id", "reached", "rate_tph",
-        "latest_ts", "path",
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    adm_b = narrow_b.join(
-        spark.table("audit_seen_b").select("url_hash"), "url_hash", "left_anti"
-    )
-    dedup_txt = plan_text(adm_b)
-    rows.append(audit("frontier dedup (co-bucketed)", dedup_txt))
-    round_b_txt = plan_text(
-        build_two_phase_plan(adm_b, robots, budgets, NOW_EPOCH + 3600, 16)
-    )
-    rows.append(audit("sched_round (bucketed dedup)", round_b_txt))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    rows.append(audit("sched_round", round_txt))
 
     # dialogues level-join: with the reply-edge table repartitioned on
     # `parent` ONCE and persisted, every BFS level's join must show ONE
@@ -407,17 +373,16 @@ def main():
         )
         f.write(f"Current hits: {sp_hits if sp_hits else 'none'}\n")
         f.write("\nNotes:\n")
-        f.write("- `sched_round`: THREE hash exchanges — stage A by (host, salt),\n")
-        f.write("  stage B by host over stage-A survivors only, plus the tiny robots\n")
-        f.write("  deny-map groupBy; both ranking phases come out of ONE stage-B pass\n")
-        f.write("  (mixed-order row_number — no union, no duplicated subtree). The\n")
-        f.write("  dedup anti-join and robots gate are broadcast — the frontier is\n")
-        f.write("  never reshuffled for them; the wide `url` string is never read\n")
-        f.write("  (robots gating reads `FRONTIER.path`).\n")
-        f.write("- `frontier dedup (co-bucketed)`: ZERO exchanges, ZERO sorts — the\n")
-        f.write("  production storage layout (frontier and seen bucketBy+sortBy on\n")
-        f.write("  url_hash, one file per bucket) turns whole-frontier dedup into a\n")
-        f.write("  per-bucket streaming merge; neither 10^10 table is ever shuffled.\n")
+        f.write("- `sched_round`: the plan `run_round` builds over the active\n")
+        f.write("  frontier. FOUR hash exchanges — the `host_stats` per-host count\n")
+        f.write("  over the frontier and the tiny robots deny-map groupBy, then\n")
+        f.write("  stage A by (host, salt) and stage B by host over stage-A survivors\n")
+        f.write("  only; both ranking phases come out of ONE stage-B pass (mixed-order\n")
+        f.write("  row_number — no union, no duplicated subtree). The hot-host set,\n")
+        f.write("  the deny map and the budget dim are broadcast, so the frontier is\n")
+        f.write("  never reshuffled for them. No seen anti-join: the round admits\n")
+        f.write("  only its outlinks, later, against the seen filter. The wide `url`\n")
+        f.write("  string is never read (robots gating reads `FRONTIER.path`).\n")
         f.write("- `dedup_minhash_lsh`/`dedup_jaccard`: the LSH band self-join is one\n")
         f.write("  shuffle on (band_idx, band_val); verification joins only the\n")
         f.write("  candidate pairs back to doc metadata.\n")
@@ -450,10 +415,11 @@ def main():
         f.write("  edge set — O(log n) rounds total, no per-node adjacency\n")
         f.write("  materialization, so skewed high-degree nodes stream through the\n")
         f.write("  min aggregate.\n")
-        f.write("- `ann_pq_topk`: codebook + query distance-table both ride\n")
-        f.write("  broadcasts; the corpus side reaches the scoring join carrying\n")
-        f.write("  only (id, m, code); one shuffle on (q_id, c_id) for the\n")
-        f.write("  M-lookup sum.\n")
+        f.write("- `ann_pq_topk`: the codebooks and the query distance table\n")
+        f.write("  ship in the task closure, so the corpus scan is ONE Arrow pass\n")
+        f.write("  (encode the batch, keep its per-query top-k) with no (q_id, c_id)\n")
+        f.write("  shuffle; only the per-batch candidates reach the final per-query\n")
+        f.write("  rank window.\n")
         f.write("- `token_budget_select`: NO global window — per-bucket token\n")
         f.write("  totals aggregate distributed, the bucket running total is a\n")
         f.write("  window over the <=10^4-row bucket dim, and per-doc cumsums\n")
@@ -820,9 +786,7 @@ def main():
         f.write("  column + a 1-row head broadcast.\n")
         f.write("- `id_gap_islands`: one ordered window scan inside the\n")
         f.write("  partition + an island rollup to a single summary row.\n")
-        f.write("- `snapshot_diff`: one full-outer shuffle join at worst; in the\n")
-        f.write("  production bucketed layout the same diff is the zero-shuffle\n")
-        f.write("  per-bucket merge audited as `frontier dedup (co-bucketed)`.\n")
+        f.write("- `snapshot_diff`: one full-outer shuffle join at worst.\n")
         f.write("- python stages are zero everywhere except queries whose semantics\n")
         f.write("  need Arrow (url canonicalization, bloom probe, multimodal)\n")
         f.write("  — none of the audited analytics queries cross into Python.\n")

@@ -1,8 +1,9 @@
 """Two-cluster-size scaling evidence (BASELINE.json north rule).
 
 No real cluster exists in this sandbox, so the N -> 4N executor
-criterion is evidenced by running the identical scheduling-round bench
-at two parallelism levels (one JVM subprocess per level) on the same
+criterion is evidenced by running bench.py's crawl rounds (bootstrap a
+fresh catalog, then ``run_rounds`` over bench.CRAWL_ROUNDS rounds) at
+two parallelism levels (one JVM subprocess per level) on the same
 input. Default pairs: 8:32 (the driver-suggested proxy) and 4:16 (a 4x
 pair that does not saturate the 32-vcore box's shared memory bus, so it
 isolates the ENGINE's scalability from single-host bandwidth limits —
@@ -72,11 +73,9 @@ def run_level(cpus: int, n_urls: int) -> dict:
     res["wall_sec"] = round(time.time() - t0, 1)
     os.makedirs(os.path.dirname(cache), exist_ok=True)
     json.dump(res, open(cache, "w"))
-    print(f"local[{cpus}]: {res['value']} urls/sec "
-          f"(headline {res['queries']['sched_round_headline']}s, "
-          f"bucketed {res['queries']['sched_round_bucketed']}s, "
-          f"bloom {res['queries']['sched_round_bloom']}s, "
-          f"exact {res['queries']['sched_round_exact']}s)", file=sys.stderr)
+    print(f"local[{cpus}]: {res['value']} scheduled+candidates/sec "
+          f"(crawl rounds {res['queries']['crawl_rounds_s']}s, "
+          f"bootstrap {res['queries']['bootstrap_s']}s)", file=sys.stderr)
     return res
 
 
@@ -97,10 +96,10 @@ def main() -> int:
         tables.append(f"""
 ### local[{n}] -> local[{n4}]
 
-| parallelism | headline round sec (best) | bucketed sec | exact-SMJ sec | bloom sec | frontier URLs scheduled+deduped/sec |
-|---|---|---|---|---|---|
-| local[{n}]  (N)  | {rn["queries"]["sched_round_headline"]} | {rn["queries"]["sched_round_bucketed"]} | {rn["queries"]["sched_round_exact"]} | {rn["queries"]["sched_round_bloom"]} | {rn["value"]:,.0f} |
-| local[{n4}] (4N) | {r4["queries"]["sched_round_headline"]} | {r4["queries"]["sched_round_bucketed"]} | {r4["queries"]["sched_round_exact"]} | {r4["queries"]["sched_round_bloom"]} | {r4["value"]:,.0f} |
+| parallelism | crawl rounds sec | bootstrap sec | scheduled+candidates/sec |
+|---|---|---|---|
+| local[{n}]  (N)  | {rn["queries"]["crawl_rounds_s"]} | {rn["queries"]["bootstrap_s"]} | {rn["value"]:,.0f} |
+| local[{n4}] (4N) | {r4["queries"]["crawl_rounds_s"]} | {r4["queries"]["bootstrap_s"]} | {r4["value"]:,.0f} |
 
 **speedup {n}→{n4} = {speedup:.2f}x, scaling efficiency = {eff:.2f}**
 """)
@@ -108,58 +107,29 @@ def main() -> int:
     md = f"""# BENCH — scaling evidence (N vs 4N parallelism)
 
 North-rule criterion: throughput scaling efficiency >= 0.8 from N to 4N
-executors. Sandbox proxy (per driver instruction): the same scheduling-
-round job at two parallelism levels on the identical input
-({n_urls:,} synthetic frontier URLs, {max(100, n_urls // 200):,} hosts,
-log-uniform host skew), best of 3 warm rounds per variant (symmetric
-across variants), JVM startup and input generation excluded. Shuffle
-partitions are proportional to cores at every level (4x cores at the
->=10M-URL tier — AQE coalesces), so per-task tail latency idles the
-same fraction of each level's capacity. Each level is pinned with
-`taskset` to exactly N cores, so "local[N]" is a true N-core machine —
-an unpinned N-thread JVM would still spread GC and shuffle-IO threads
-over all 32 cores and overstate the small level.
+executors. Single-host proxy: bench.py's crawl rounds at two parallelism
+levels on the identical input ({n_urls:,} synthetic frontier URLs,
+{max(100, n_urls // 200):,} hosts, log-uniform host skew). Each level
+bootstraps a fresh catalog (untimed) and times `run_rounds` over
+{some["config"]["iterations"]} rounds — fetch, admission, the per-round
+appends and commits, as `python -m twawler_spark crawl` runs them. The
+throughput is Σ(n_scheduled + n_candidates) over that wall time; JVM
+startup and input generation are excluded. Shuffle partitions are
+proportional to cores at every level (4x cores at the >=10M-URL tier —
+AQE coalesces). Each level is pinned with `taskset` to exactly N cores,
+so "local[N]" is a true N-core machine.
 {"".join(tables)}
 The 4→16 pair is reported alongside 8→32 because the sandbox is ONE
 32-vcore host: at local[32] every core is claimed, so the run measures
-the machine's shared memory-bus saturation on shuffle/sort-heavy
-stages as much as the engine's plan. On a real cluster (the north
-rule's setting) 4N executors bring 4N memory buses; the 4→16 pair,
-which leaves headroom on the box, is the closer proxy for that.
+the machine's shared memory-bus saturation as much as the engine's
+plan. On a real cluster 4N executors bring 4N memory buses; the 4→16
+pair, which leaves headroom on the box, is the closer proxy for that.
 
-The headline is the engine's storage/tier choice — the fastest CORRECT
-variant at this scale. `bucketed` is the production layout for
-whole-frontier dedup: frontier and seen are stored hash-bucketed +
-sorted on url_hash, so the anti-join is a zero-exchange zero-sort
-per-bucket merge that never shuffles either table at ANY scale.
-`exact-SMJ` is the same join over unbucketed storage (shuffles both
-sides). Exact-broadcast ({some["queries"]["sched_round_exact_bcast"]}s
-at local[{max(levels)}]) is valid only while the seen key set fits
-executor memory — it cannot exist at the 10^10 design point. The
-persisted bloom filter is the admission tier (next paragraph), not the
-whole-frontier tier: when |candidates| ≈ |frontier| ≥ |seen| a
-prefilter cannot beat a co-bucketed merge, and the bench shows that
-honestly.
-
-Admission at the production per-round shape (|seen| >> |candidates|,
-SMJ pinned — no broadcast tier exists at 80 GB of keys), local[{max(levels)}]:
+Admission at the |seen| >> |candidates| shape (SMJ pinned), local[{max(levels)}]:
 exact {some["queries"]["admit_seenbig_exact"]}s vs persisted-bloom
 {some["queries"]["admit_seenbig_bloom"]}s (incl. the per-round O(delta)
-filter update of {some["queries"]["bloom_delta_update"]}s) vs
-sharded-cogroup {some["queries"].get("admit_seenbig_sharded", "n/a")}s
-(the >=10^9-key tier where the filter no longer broadcasts: bits stay
-co-partitioned with the candidates, probe is an Arrow cogroup, confirm
-is a shuffle join — measured here at the same shape so the tier choice
-is empirical).
-
-Scaling law to the 10^10 design point: the round is a linear scan +
-hash-partitioned shuffles (score: narrow; robots gate: broadcast join;
-seen dedup: co-bucketed storage merge, zero exchange; budget rank:
-two-phase salted window, so no single host serializes a task). Work
-per round is O(|active frontier| / executors) with constant-size
-broadcasts; the only super-linear term is the ranking shuffle write,
-which AQE coalesces. At 10^10 URLs / 1000 executors each executor
-processes the same ~10^7-row partitions exercised here.
+filter update of {some["queries"]["bloom_delta_update"]}s) vs cuckoo
+{some["queries"]["admit_seenbig_cuckoo"]}s.
 
 Raw results:
 ```json

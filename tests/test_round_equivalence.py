@@ -126,6 +126,21 @@ def test_checkpoints_match(run):
     assert spark_cp == sim_cp
 
 
+def test_frontier_is_subset_of_seen(run):
+    """Bootstrap puts every frontier key into seen and admission adds
+    each new key to both tables, so no frontier row survives an
+    anti-join with seen — across compaction and TTL revival. This is
+    why the round admits only outlinks and never dedups the whole
+    frontier against seen."""
+    from twawler_spark.plans.round import read_frontier
+
+    cat, _, _ = run
+    frontier = read_frontier(cat, N_ROUNDS).select("url_hash")
+    seen = cat.read_committed("seen", N_ROUNDS).select("url_hash")
+    assert frontier.count() > 100
+    assert frontier.join(seen, "url_hash", "left_anti").collect() == []
+
+
 def test_plan_invariant_under_repartitioning(spark, crawl_root):
     """Determinism under parallelism: the scheduling plan is a pure
     function of the snapshot — any physical repartitioning of the input

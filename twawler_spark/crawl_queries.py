@@ -126,7 +126,7 @@ def _crawl_fixture(
         F.lit("active").alias("state"),
         F.lit(0).alias("state_round"),
         (uid * 10).cast("long").alias("last_id"),
-        # nullable backfill checkpoint — exercises the null-flag packing
+        # nullable backfill checkpoint — a NULL first_id must ride the plan intact
         F.when(F.pmod(uid, F.lit(7)) != 0, uid.cast("long")).alias("first_id"),
         (F.pmod(uid, F.lit(3)) == 0).alias("reached"),
         F.col("latest_ts"),
@@ -219,7 +219,7 @@ plan AS (
 def q_crawl_round_plan(spark: SparkSession, sf: str) -> DataFrame:
     """S1/S5/O1/J5/P5: one scheduling round's fetch plan — score
     (freq.py:103,133), robots gate, salted two-phase per-host budget
-    rank (dumpall.py:106-111 + --crawl-late), dict-encoded hosts."""
+    rank (dumpall.py:106-111 + --crawl-late), keyed by host name."""
     _, plan = _plan(spark, sf)
     return plan.select(
         "url_hash",

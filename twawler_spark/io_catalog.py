@@ -28,17 +28,12 @@ Every read names its round: ``read_snapshot`` one snapshot,
 partial appends of a killed round stay invisible. Expiry of old rounds
 belongs to the round driver (``plans.round.expire_frontier_history``),
 which knows which manifests a later round still reads.
-
-``write_bucketed``/``register_bucketed`` keep a hash-bucketed layout
-for whole-frontier dedup (``bench.py``'s bucketed tier); the crawl
-round writes neither table bucketed.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,112 +41,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .schemas import CATALOG_TABLES
-
-# bump when the bucketed on-disk contract changes (file-per-bucket layout,
-# sort order, hash placement); markers written by other versions are stale
-BUCKET_LAYOUT_VERSION = 2
-
-
-def _scan_bucket_files(path: str) -> dict[int, int]:
-    """Map bucket id -> file count by parsing the ``_NNNNN`` suffix Spark
-    encodes in bucketed part file names (``part-*-<uuid>_00042[.c000]...``)."""
-    counts: dict[int, int] = {}
-    pat = re.compile(r"^part-.*_(\d{5})(?:\.c\d+)?\..*parquet$")
-    for f in os.listdir(path):
-        m = pat.match(f)
-        if m:
-            b = int(m.group(1))
-            counts[b] = counts.get(b, 0) + 1
-    return counts
-
-
-def write_bucketed(
-    df: DataFrame,
-    path: str,
-    table_name: str,
-    key: str = "url_hash",
-    n_buckets: int = 64,
-) -> None:
-    """Persist ``df`` hash-bucketed + sorted on ``key`` (the co-located
-    layout of ``bench.py``'s whole-frontier dedup tier over copies of
-    frontier and seen: a join between tables bucketed alike needs NO
-    exchange — Iceberg's ``bucket(N, key)`` partition transform +
-    storage-partitioned joins).
-
-    ``repartition(n, key)`` uses the same murmur3-pmod placement as
-    ``bucketBy``, so each task holds exactly one bucket and writes
-    exactly ONE file — which is what lets the scan also report its
-    SORTED BY ordering (no Sort before a merge join) when
-    ``spark.sql.legacy.bucketedTableScan.outputOrdering`` is on."""
-    (
-        df.repartition(n_buckets, key)
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .saveAsTable(table_name)
-    )
-    spec = {"n_buckets": n_buckets, "key": key, "version": BUCKET_LAYOUT_VERSION}
-    with open(f"{path}/_bucket_spec.json", "w") as f:
-        json.dump(spec, f)
-
-
-def register_bucketed(
-    spark: SparkSession,
-    name: str,
-    path: str,
-    key: str = "url_hash",
-    n_buckets: int = 64,
-) -> None:
-    """(Re-)attach an existing bucketed-files dir as a catalog table.
-
-    Bucketed writes need ``saveAsTable``; the in-memory catalog forgets
-    the entry across JVMs, so each session re-declares the external
-    table over the already-bucketed files (bucket ids are encoded in
-    the file names, which the bucketed scan reads back).
-
-    The CLUSTERED/SORTED declaration (plus the session-wide
-    ``legacy.bucketedTableScan.outputOrdering``) is only sound if the
-    on-disk layout actually matches: re-registering stale files under a
-    mismatched bucket spec would make bucketed joins silently WRONG, so
-    validate before CREATE TABLE — the ``_bucket_spec.json`` written by
-    :func:`write_bucketed` must agree on (n_buckets, key, layout
-    version), every part file's bucket id must be < n_buckets, and no
-    bucket may hold more than one file (the one-file-per-bucket
-    invariant that lets the scan report its SORTED BY ordering)."""
-    spec_path = f"{path}/_bucket_spec.json"
-    if not os.path.exists(spec_path):
-        raise ValueError(
-            f"bucketed layout at {path} has no _bucket_spec.json — "
-            "written by an older writer or not via write_bucketed(); rewrite it"
-        )
-    with open(spec_path) as f:
-        spec = json.load(f)
-    expected = {"n_buckets": n_buckets, "key": key, "version": BUCKET_LAYOUT_VERSION}
-    if spec != expected:
-        raise ValueError(
-            f"bucketed layout mismatch at {path}: on-disk spec {spec} != "
-            f"requested {expected}; rewrite with write_bucketed()"
-        )
-    counts = _scan_bucket_files(path)
-    if not counts:
-        raise ValueError(f"no bucketed part files found at {path}")
-    bad_ids = [b for b in counts if b >= n_buckets]
-    multi = {b: c for b, c in counts.items() if c > 1}
-    if bad_ids or multi:
-        raise ValueError(
-            f"bucketed layout at {path} violates the spec: "
-            f"bucket ids >= {n_buckets}: {sorted(bad_ids)}; "
-            f"buckets with >1 file: {multi}"
-        )
-    schema = spark.read.parquet(path).schema
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(
-        f"CREATE TABLE {name} ({cols}) USING PARQUET "
-        f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-        f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-    )
 
 
 def _check_schema(df: DataFrame, table: str) -> None:

@@ -31,7 +31,6 @@ def admit(
     seen: DataFrame,
     bloom: BroadcastBloom | BroadcastCuckoo | None = None,
     key_col: str = "url_hash",
-    confirm_broadcast: bool = True,
 ) -> DataFrame:
     """Rows of ``candidates`` whose key is NOT in ``seen``.
 
@@ -52,8 +51,6 @@ def admit(
       3. anti-join candidates against the broadcast CONFIRMED set —
          sized |seen ∩ candidates| + fpp, bounded by the round's
          candidate count, never by |seen|.
-    ``confirm_broadcast=False`` confirms with a co-partitioned shuffle
-    join instead, for frontier-scale candidate sets.
     """
     seen_keys = seen.select(key_col)
     if bloom is None:
@@ -71,17 +68,10 @@ def admit(
         candidates.select(key_col), key_col=key_col, flag_col="__maybe_seen"
     )
     maybe = flagged.where(F.col("__maybe_seen")).select(key_col)
-    if confirm_broadcast:
-        # plan-bounded candidate sets (run_round's outlinks): seen is
-        # the stream side — scanned (pruned to the key column), never
-        # shuffled; dupes in `confirmed` dedupe inside the hash relation
-        confirmed = seen_keys.join(F.broadcast(maybe), key_col, "left_semi")
-        return candidates.join(F.broadcast(confirmed), key_col, "left_anti")
-    # frontier-scale candidate sets (whole-frontier dedup): the maybe
-    # set is a constant fraction of the candidates — confirm with a
-    # co-partitioned shuffle join instead of a driver-built broadcast
-    confirmed = maybe.join(seen_keys, key_col, "left_semi")
-    return candidates.join(confirmed, key_col, "left_anti")
+    # seen is the stream side — scanned (pruned to the key column), never
+    # shuffled; dupes in `confirmed` dedupe inside the hash relation
+    confirmed = seen_keys.join(F.broadcast(maybe), key_col, "left_semi")
+    return candidates.join(F.broadcast(confirmed), key_col, "left_anti")
 
 
 def robots_deny_map(robots: DataFrame) -> DataFrame:

@@ -3776,8 +3776,7 @@ def q_inverted_index_export(spark, sf):
     at warehouse scale the postings are written
     bucketBy(term)/sortBy(doc_id) so query-time term lookups are
     partition-pruned single-bucket scans and merges of sorted posting
-    runs never re-sort — the same co-bucketed discipline as the
-    frontier/seen layout (X5). Low-df long tail dominates the row
+    runs never re-sort. Low-df long tail dominates the row
     count but NOT the bytes; the df gate models the index's stopword/
     minimum-support policy, applied AFTER the aggregation (it cannot
     push below the groupBy).

@@ -744,12 +744,11 @@ N_SHARD_BUCKETS = 64
 
 
 def q_frontier_shard_balance(spark: SparkSession, sf: str) -> DataFrame:
-    """Shard-balance audit of the production frontier layout: the
-    whole-frontier dedup tier stores frontier and seen hash-bucketed
-    on url_hash (BENCH.md's zero-exchange merge), and that layout's
-    premise is that pmod(url_hash, B) is uniform — a skewed bucket
-    turns the per-bucket merge into a straggler. This query measures
-    it: per-bucket URL count, distinct-host count, share of total, and
+    """Shard-balance audit of a hash-sharded frontier: splitting the
+    frontier into B shards by pmod(url_hash, B) (hash partitions,
+    per-fetcher work splits) assumes the split is uniform — a skewed
+    bucket turns its shard into a straggler. This query measures it:
+    per-bucket URL count, distinct-host count, share of total, and
     load factor vs the uniform expectation (the same index-health
     shape as ivf_balance, over the frontier's buckets instead of IVF
     cells).
@@ -759,7 +758,7 @@ def q_frontier_shard_balance(spark: SparkSession, sf: str) -> DataFrame:
     agg exchange regardless of frontier size; the load-factor window
     runs over the B-row result only. Reference analog: twAwler's
     per-crawler work-split sanity checks (twkit/crawler/crawl.py round
-    accounting), generalized to the bucketed storage layout."""
+    accounting), generalized to hash shards of the frontier."""
     e = _t(spark, sf, "events")
     uid = F.col("user_id")
     # bucket/host derive BEFORE the dedup, so one (bucket, host) exchange
@@ -1731,12 +1730,8 @@ def q_snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
     (purged rows), and id % {SNAP_CHANGE} = 0 rows flip their md5-derived
     state hash between snapshots, so all four verdicts appear.
 
-    100 TB shape: ONE full-outer shuffle join on the url key at worst;
-    with snapshots written in the production layout (hash-bucketed +
-    sorted on url_hash, like frontier/seen), the diff is a zero-shuffle
-    per-bucket streaming merge — identical discipline to the
-    co-bucketed frontier dedup audited in PLANS.md. The rollup output
-    is 4 rows regardless of scale."""
+    100 TB shape: ONE full-outer shuffle join on the url key at worst.
+    The rollup output is 4 rows regardless of scale."""
     e = _t(spark, sf, "events")
     key = F.col("event_id")
     state_a = F.pmod(
