@@ -233,7 +233,7 @@ def log(*a):
     print(*a, file=sys.stderr, flush=True)
 
 
-INPUT_LAYOUT_VERSION = 2  # v2: FRONTIER.path decomposed at generation
+INPUT_LAYOUT_VERSION = 3  # v3: no bucketed copies (v2: FRONTIER.path decomposed)
 
 
 def ensure_inputs(spark, n_urls: int, n_hosts: int) -> str:

@@ -18,7 +18,6 @@ from twawler_spark.io_catalog import Catalog
 from twawler_spark.plans.round import (
     bootstrap,
     build_two_phase_plan,
-    read_frontier,
     round_now_epoch,
     run_rounds,
 )
@@ -48,7 +47,7 @@ def test_round_plan_reads_no_url(spark, crawl_root, tmp_path):
 
     # round 2's plan, built as run_round builds it: the view over the
     # round-0 snapshot and the round-1 frontier_v deltas
-    frontier = read_frontier(cat, 1)
+    frontier = cat.read_frontier(1)
     active = frontier.where(F.col("state") == "active")
     host_stats = active.groupBy("host").agg(F.count(F.lit(1)).alias("n_urls"))
     plan = build_two_phase_plan(
@@ -84,7 +83,7 @@ def test_round_plan_has_no_single_partition_exchange(round1):
     (or the budgets) onto one partition."""
     cat = round1
     # round 2's plan, built as run_round builds it
-    frontier = read_frontier(cat, 1)
+    frontier = cat.read_frontier(1)
     active = frontier.where(F.col("state") == "active")
     host_stats = active.groupBy("host").agg(F.count(F.lit(1)).alias("n_urls"))
     plan = build_two_phase_plan(
@@ -99,5 +98,5 @@ def test_round_plan_has_no_single_partition_exchange(round1):
 def test_frontier_view_runs_one_window(round1):
     """The base anti-joins the raw delta keys; only the kept rows need
     the latest-delta window, so the view's plan holds exactly one."""
-    text = _executed(read_frontier(round1, 1))
+    text = _executed(round1.read_frontier(1))
     assert len(re.findall(r"\bWindow \[", text)) == 1, text

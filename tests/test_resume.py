@@ -32,10 +32,8 @@ def test_resume_equals_uninterrupted(spark, crawl_root, tmp_path_factory):
     assert b2.latest_round("frontier") == 2
     run_rounds(b2, 4, n_hosts=N_HOSTS)
 
-    from twawler_spark.plans.round import read_frontier
-
-    left = {tuple(r) for r in read_frontier(a, 4).collect()}
-    right = {tuple(r) for r in read_frontier(b2, 4).collect()}
+    left = {tuple(r) for r in a.read_frontier(4).collect()}
+    right = {tuple(r) for r in b2.read_frontier(4).collect()}
     assert left == right
     seen_a = {tuple(r) for r in a.read_committed("seen", 4).collect()}
     seen_b = {tuple(r) for r in b2.read_committed("seen", 4).collect()}
@@ -49,7 +47,7 @@ def test_resume_equals_uninterrupted(spark, crawl_root, tmp_path_factory):
 def test_compaction_and_history_expiry(spark, crawl_root, tmp_path_factory):
     """COMPACT_EVERY=4: round 4 writes a compaction snapshot and expires
     earlier manifests/deltas; reads and resume still work after."""
-    from twawler_spark.plans.round import read_frontier, round_status
+    from twawler_spark.plans.round import round_status
 
     cat = _setup(spark, crawl_root, str(tmp_path_factory.mktemp("e")))
     stats = run_rounds(cat, 5, n_hosts=N_HOSTS)
@@ -60,9 +58,9 @@ def test_compaction_and_history_expiry(spark, crawl_root, tmp_path_factory):
         "4.bits", "4.json", "5.bits", "5.json"
     ]
     assert sorted(os.listdir(f"{cat.root}/seen/_manifests")) == ["4.json", "5.json"]
-    assert read_frontier(cat, 5).count() > 0
+    assert cat.read_frontier(5).count() > 0
     # manifest arithmetic matches the materialized view
-    assert cat.read_manifest("frontier", 5)["n_rows"] == read_frontier(cat, 5).count()
+    assert cat.read_manifest("frontier", 5)["n_rows"] == cat.read_frontier(5).count()
     # RoundStats commit with the round: the compaction snapshot's (its
     # n_frontier is the snapshot count) and the next delta round's;
     # stats of expired rounds went with their manifests

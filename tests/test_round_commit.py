@@ -29,7 +29,6 @@ from twawler_spark.plans import round as round_mod
 from twawler_spark.plans.round import (
     COMPACT_EVERY,
     bootstrap,
-    read_frontier,
     round_status,
     run_round,
     run_rounds,
@@ -61,7 +60,7 @@ def uninterrupted(spark, crawl_root, tmp_path_factory):
 
 def _state(cat: Catalog, upto: int):
     return (
-        {tuple(r) for r in read_frontier(cat, upto).collect()},
+        {tuple(r) for r in cat.read_frontier(upto).collect()},
         {tuple(r) for r in cat.read_committed("seen", upto).collect()},
         {r["doc_id"] for r in cat.read_committed("documents", upto).collect()},
     )
@@ -124,7 +123,7 @@ def test_committed_reads_submit_no_jobs(spark, uninterrupted):
     group = "test-committed-reads"
     sc.setJobGroup(group, group)
     try:
-        frontier = read_frontier(cat, N_ROUNDS)
+        frontier = cat.read_frontier(N_ROUNDS)
         seen = cat.read_committed("seen", N_ROUNDS)
         assert frontier.columns == CATALOG_TABLES["frontier"].fieldNames()
         assert seen.columns == CATALOG_TABLES["seen"].fieldNames() + ["round"]
@@ -217,6 +216,21 @@ def test_undeclared_table_raises(spark, tmp_path):
     assert not os.path.exists(f"{cat.root}/seen_copy")
 
 
+def test_manifest_without_kind_raises(spark, tmp_path):
+    """Both manifest writers set ``kind``: a manifest without one is
+    corrupt and fails the compaction listing, not a later read."""
+    cat = Catalog(spark, str(tmp_path))
+    cat.commit_round("frontier", 0, 0)
+    path = f"{cat.root}/frontier/_manifests/0.json"
+    with open(path) as f:
+        manifest = json.load(f)
+    del manifest["kind"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(KeyError, match="kind"):
+        cat.compaction_rounds("frontier")
+
+
 # --------------------------------------------------- commit boundaries
 @pytest.fixture(scope="module")
 def committed_through(spark, crawl_root, tmp_path_factory):
@@ -263,7 +277,7 @@ def _rows(df) -> list[str]:
 
 def _tables(cat: Catalog, upto: int) -> dict:
     return {
-        "frontier": _rows(read_frontier(cat, upto)),
+        "frontier": _rows(cat.read_frontier(upto)),
         **{t: _rows(cat.read_committed(t, upto)) for t in APPENDED},
     }
 
@@ -283,7 +297,7 @@ def _history(cat: Catalog) -> tuple:
 def _as_sim(cat: Catalog, upto: int) -> tuple:
     """The round tables keyed as ``reference_sim.SimResult`` keys them
     (test_round_equivalence's comparisons)."""
-    frontier = read_frontier(cat, upto).collect()
+    frontier = cat.read_frontier(upto).collect()
     return (
         {
             (r["round"], r["host"], r["phase"], r["fetch_rank"], r["url_hash"])
@@ -321,10 +335,16 @@ def _manifest_of(table: str, round_no: int):
     return lambda self, t, r, manifest: (t, r) == (table, round_no)
 
 
+def _path_of(suffix: str):
+    return lambda path, *args, **kwargs: str(path).endswith(suffix)
+
+
 # boundary -> (failing round, owner, attribute, which call fails). The
 # manifest cases fail inside commit_round / write_snapshot at the rename
 # that commits them (a compaction's snapshot files are already written);
-# the expiry case fails after round 4's snapshot committed.
+# the expiry cases fail after round 4's snapshot committed: before the
+# expiry, or inside it while it removes round 0's filter files or round
+# 0's frontier snapshot.
 BOUNDARIES = {
     "seen_manifest": (1, Catalog, "_write_manifest", _manifest_of("seen", 1)),
     "filter_save": (1, BroadcastBloom, "save", lambda self, prefix: prefix.endswith("/1")),
@@ -333,6 +353,8 @@ BOUNDARIES = {
         COMPACT_EVERY, Catalog, "_write_manifest", _manifest_of("frontier", COMPACT_EVERY),
     ),
     "expiry": (COMPACT_EVERY, round_mod, "expire_frontier_history", lambda cat: True),
+    "expiry_filter_file": (COMPACT_EVERY, os, "remove", _path_of("/bloom/0.bits")),
+    "expiry_snapshot": (COMPACT_EVERY, shutil, "rmtree", _path_of("/frontier/snap=0")),
 }
 
 
@@ -341,7 +363,8 @@ def test_failed_commit_resumes_to_uninterrupted(
     spark, tmp_path, monkeypatch, committed_through, whole, boundary
 ):
     """A failure at each commit boundary leaves the round uncommitted
-    (the expiry's round stays committed, with its history on disk); a
+    (the expiry's round stays committed, with its history on disk and
+    every round it has not finished still listed); a
     resume reaches the uninterrupted run, the reference simulator's
     tables, and the uninterrupted history (an interrupted expiry is
     finished)."""
@@ -350,16 +373,17 @@ def test_failed_commit_resumes_to_uninterrupted(
     cat = committed_through(r - 1, str(tmp_path / "cat"))
     raw = getattr(owner, name)
 
-    def failing(*args):
-        if fails(*args):
+    def failing(*args, **kwargs):
+        if fails(*args, **kwargs):
             raise OSError(f"injected failure at {boundary}")
-        return raw(*args)
+        return raw(*args, **kwargs)
 
     monkeypatch.setattr(owner, name, failing)
     with pytest.raises(OSError, match=f"injected failure at {boundary}"):
         run_round(cat, r, N_HOSTS)
     monkeypatch.undo()
-    if boundary == "expiry":
+    if boundary.startswith("expiry"):
+        # every round the expiry has not finished keeps its manifest
         assert cat.latest_round("frontier") == r
         assert cat.committed_rounds("frontier") == list(range(r + 1))
     else:
@@ -381,5 +405,5 @@ def test_failed_commit_resumes_to_uninterrupted(
         assert sorted(os.listdir(f"{resumed.root}/seen/_manifests")) == ["4.json", "5.json"]
         assert (
             resumed.read_manifest("frontier", 5)["n_rows"]
-            == read_frontier(resumed, 5).count()
+            == resumed.read_frontier(5).count()
         )

@@ -97,12 +97,10 @@ def test_round_stats_match(run):
 
 
 def test_frontier_states_match(run):
-    from twawler_spark.plans.round import read_frontier
-
     cat, _, sim = run
     spark_states = {
         r["url_hash"]: r["state"]
-        for r in read_frontier(cat, N_ROUNDS).select("url_hash", "state").collect()
+        for r in cat.read_frontier(N_ROUNDS).select("url_hash", "state").collect()
     }
     assert spark_states == sim.frontier_states
 
@@ -110,12 +108,10 @@ def test_frontier_states_match(run):
 def test_checkpoints_match(run):
     """Forward (last_id) and backfill (first_id/reached) checkpoints —
     dumpall.py:83-87 + load-past.py:69-77 semantics."""
-    from twawler_spark.plans.round import read_frontier
-
     cat, _, sim = run
     spark_cp = {
         r["url_hash"]: (r["last_id"], r["first_id"], r["reached"])
-        for r in read_frontier(cat, N_ROUNDS)
+        for r in cat.read_frontier(N_ROUNDS)
         .select("url_hash", "last_id", "first_id", "reached")
         .collect()
     }
@@ -132,10 +128,8 @@ def test_frontier_is_subset_of_seen(run):
     anti-join with seen — across compaction and TTL revival. This is
     why the round admits only outlinks and never dedups the whole
     frontier against seen."""
-    from twawler_spark.plans.round import read_frontier
-
     cat, _, _ = run
-    frontier = read_frontier(cat, N_ROUNDS).select("url_hash")
+    frontier = cat.read_frontier(N_ROUNDS).select("url_hash")
     seen = cat.read_committed("seen", N_ROUNDS).select("url_hash")
     assert frontier.count() > 100
     assert frontier.join(seen, "url_hash", "left_anti").collect() == []

@@ -23,24 +23,32 @@ written nor read. External inputs (``read_input``) keep inference.
 Resume = read the highest committed snapshot (manifest written last, so
 a killed round leaves no committed-but-partial snapshot — the
 reference's "kill-safe, no corrupt state" invariant, README Stopping).
-Every read names its round: ``read_snapshot`` one snapshot,
+Every read names its round: ``read_frontier`` the frontier's current
+view (latest compaction snapshot plus later ``frontier_v`` deltas),
 ``read_committed`` an appended table's rounds up to a bound, so the
-partial appends of a killed round stay invisible. Expiry of old rounds
-belongs to the round driver (``plans.round.expire_frontier_history``),
-which knows which manifests a later round still reads.
+partial appends of a killed round stay invisible.
+
+Only this module knows the layout above. The frontier's history below
+its latest compaction (``frontier_history``) expires one round at a
+time (``expire_frontier_round``): the round's seen manifest, snapshot
+and delta partition go first and its frontier manifest last, so a
+round killed mid-expiry stays listed and the next expiry finishes it.
+The round driver (``plans.round.expire_frontier_history``) removes the
+files it owns itself (the seen-filter files) before calling it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .schemas import CATALOG_TABLES
+from .schemas import CATALOG_TABLES, FRONTIER
 
 
 def _check_schema(df: DataFrame, table: str) -> None:
@@ -90,7 +98,7 @@ class Catalog:
         _check_schema(df, table)
         path = self._snap_dir(table, round_no)
         df.write.mode("overwrite").parquet(path)
-        written = self.read_snapshot(table, round_no)
+        written = self._read_snapshot(table, round_no)
         lineage = (
             written.groupBy(F.spark_partition_id().alias("partition"))
             .count()
@@ -140,12 +148,13 @@ class Catalog:
         os.replace(tmp, mp)  # commit point
 
     def compaction_rounds(self, table: str) -> list[int]:
-        """Rounds whose manifest carries full snapshot data."""
-        out = []
-        for r in self.committed_rounds(table):
-            if self.read_manifest(table, r).get("kind", "compaction") == "compaction":
-                out.append(r)
-        return out
+        """Rounds whose manifest carries full snapshot data. Both
+        manifest writers set ``kind``, so a manifest without one is
+        corrupt and raises ``KeyError``."""
+        return [
+            r for r in self.committed_rounds(table)
+            if self.read_manifest(table, r)["kind"] == "compaction"
+        ]
 
     def committed_rounds(self, table: str) -> list[int]:
         d = f"{self.root}/{table}/_manifests"
@@ -159,7 +168,7 @@ class Catalog:
         rounds = self.committed_rounds(table)
         return rounds[-1] if rounds else None
 
-    def read_snapshot(self, table: str, round_no: int) -> DataFrame:
+    def _read_snapshot(self, table: str, round_no: int) -> DataFrame:
         return self.spark.read.schema(CATALOG_TABLES[table]).parquet(
             self._snap_dir(table, round_no)
         )
@@ -168,12 +177,72 @@ class Catalog:
         with open(self._manifest_path(table, round_no)) as f:
             return json.load(f)
 
+    # ------------------------------------------------------ frontier view
+    def read_frontier(self, upto_round: int) -> DataFrame:
+        """Current frontier as of ``upto_round``: latest compaction
+        snapshot + versioned deltas (SCD2 current view — Iceberg MERGE
+        semantics on the parquet fallback).
+
+        Per-round frontier writes are O(|changed rows|) (fetched,
+        revived, admitted, dead-tombstoned), not O(|frontier|); every
+        few rounds the round driver materializes the view as a
+        snapshot so the delta chain stays bounded. The read plan is
+        scale-friendly: the base is touched by one anti-join against
+        the raw delta keys (broadcastable — bounded by rounds×plan
+        size), and one ``url_hash`` window over the SMALL delta union
+        picks each key's latest delta; only its upserts are kept.
+
+        The deltas come from ``read_committed("frontier_v",
+        upto_round)``, so a killed round's partial append stays out of
+        the view; only the rounds after the base snapshot are kept.
+        """
+        comps = [r for r in self.compaction_rounds("frontier") if r <= upto_round]
+        base_round = comps[-1]
+        base = self._read_snapshot("frontier", base_round)
+        if base_round == upto_round:
+            return base
+        deltas = self.read_committed("frontier_v", upto_round).where(
+            F.col("round") > base_round
+        )
+        # a left anti join ignores duplicate keys, so the base only needs
+        # the raw delta keys; the latest-delta window runs once, for kept rows
+        survivors = base.join(deltas.select("url_hash"), "url_hash", "left_anti")
+        w = Window.partitionBy("url_hash").orderBy(F.col("round").desc())
+        keep = (
+            deltas.withColumn("__rn", F.row_number().over(w))
+            .where((F.col("__rn") == 1) & (F.col("op") == "upsert"))
+            .select([f.name for f in FRONTIER.fields])
+        )
+        return survivors.select([f.name for f in FRONTIER.fields]).unionByName(keep)
+
+    def frontier_history(self) -> list[int]:
+        """Committed frontier rounds below the latest compaction: no
+        read needs them (a view reads the latest compaction and later
+        deltas, a round reads the previous round's seen manifest)."""
+        latest_comp = self.compaction_rounds("frontier")[-1]
+        return [r for r in self.committed_rounds("frontier") if r < latest_comp]
+
+    def expire_frontier_round(self, round_no: int) -> None:
+        """Remove round ``round_no``'s seen manifest, frontier snapshot
+        and ``frontier_v`` partition, then its frontier manifest LAST:
+        until that manifest goes, ``frontier_history`` still lists the
+        round, so an expiry killed at any step is finished by the next
+        one; the steps before it skip what is already gone. The
+        ``seen/data`` partitions stay: they are the seen set."""
+        seen_manifest = self._manifest_path("seen", round_no)
+        if os.path.exists(seen_manifest):
+            os.remove(seen_manifest)
+        shutil.rmtree(self._snap_dir("frontier", round_no), ignore_errors=True)
+        shutil.rmtree(self._append_dir("frontier_v", round_no), ignore_errors=True)
+        os.remove(self._manifest_path("frontier", round_no))
+
     # ------------------------------------------------------- append tables
+    def _append_dir(self, table: str, round_no: int) -> str:
+        return f"{self.root}/{table}/data/round={round_no}"
+
     def append(self, df: DataFrame, table: str, round_no: int) -> None:
         _check_schema(df, table)
-        df.write.mode("overwrite").parquet(
-            f"{self.root}/{table}/data/round={round_no}"
-        )
+        df.write.mode("overwrite").parquet(self._append_dir(table, round_no))
 
     def read_committed(self, table: str, upto_round: int) -> DataFrame:
         """Appended ``table`` as of ``upto_round``: the union of its

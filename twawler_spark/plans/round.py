@@ -35,6 +35,7 @@ State machine (reference utils.py:351-446 set-mutation protocol):
 
 from __future__ import annotations
 
+import glob
 import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
@@ -85,65 +86,19 @@ COMPACT_EVERY = 4  # frontier compaction cadence (rounds)
 SALT_BUCKETS = 16  # stage-A salting of hot hosts in the round's plan
 
 
-def read_frontier(catalog: Catalog, upto_round: int) -> DataFrame:
-    """Current frontier as of ``upto_round``: latest compaction snapshot
-    + versioned deltas (SCD2 current view — Iceberg MERGE semantics on
-    the parquet fallback).
-
-    Per-round frontier writes are O(|changed rows|) (fetched, revived,
-    admitted, dead-tombstoned), not O(|frontier|); every COMPACT_EVERY
-    rounds the view is materialized so the delta chain stays bounded.
-    The read plan is scale-friendly: the base is touched by one
-    anti-join against the raw delta keys (broadcastable — bounded by
-    rounds×plan size), and one ``url_hash`` window over the SMALL delta
-    union picks each key's latest delta; only its upserts are kept.
-
-    The deltas come from ``Catalog.read_committed("frontier_v",
-    upto_round)``, so a killed round's partial append stays out of the
-    view; only the rounds after the base snapshot are kept.
-    """
-    comps = [r for r in catalog.compaction_rounds("frontier") if r <= upto_round]
-    base_round = comps[-1]
-    base = catalog.read_snapshot("frontier", base_round)
-    if base_round == upto_round:
-        return base
-    deltas = catalog.read_committed("frontier_v", upto_round).where(
-        F.col("round") > base_round
-    )
-    # a left anti join ignores duplicate keys, so the base only needs the
-    # raw delta keys; the latest-delta window runs once, for kept rows
-    survivors = base.join(deltas.select("url_hash"), "url_hash", "left_anti")
-    w = Window.partitionBy("url_hash").orderBy(F.col("round").desc())
-    keep = (
-        deltas.withColumn("__rn", F.row_number().over(w))
-        .where((F.col("__rn") == 1) & (F.col("op") == "upsert"))
-        .select([f.name for f in FRONTIER.fields])
-    )
-    return survivors.select([f.name for f in FRONTIER.fields]).unionByName(keep)
-
-
 def expire_frontier_history(catalog: Catalog) -> list[int]:
-    """Drop frontier manifests/snapshots/deltas, seen manifests and
-    seen-filter files older than the latest compaction (safe: reads
-    only ever need the latest compaction + later deltas, a round reads
-    only the previous round's seen manifest, and a resume loads the
-    filter of the latest committed round). The ``seen/data`` partitions
-    stay: they are the seen set."""
-    import glob
-    import shutil
-
-    comps = catalog.compaction_rounds("frontier")
-    latest_comp = comps[-1]
-    expired = [r for r in catalog.committed_rounds("frontier") if r < latest_comp]
+    """Expire every committed frontier round below the latest compaction
+    (``Catalog.frontier_history``), oldest first: first the files the
+    round owns (its seen-filter files; a resume loads only the latest
+    committed round's filter), then the catalog's part of the round
+    (``Catalog.expire_frontier_round``), which removes the round's
+    frontier manifest last. A kill at any step leaves that manifest in
+    place, so the next call finishes the round."""
+    expired = catalog.frontier_history()
     for r in expired:
-        seen_manifest = catalog._manifest_path("seen", r)
-        if os.path.exists(seen_manifest):
-            os.remove(seen_manifest)
-        os.remove(catalog._manifest_path("frontier", r))
-        shutil.rmtree(catalog._snap_dir("frontier", r), ignore_errors=True)
-        shutil.rmtree(f"{catalog.root}/frontier_v/data/round={r}", ignore_errors=True)
         for path in glob.glob(bloom_prefix(catalog, r) + ".*"):
             os.remove(path)
+        catalog.expire_frontier_round(r)
     return expired
 
 
@@ -419,7 +374,7 @@ def run_round(catalog: Catalog, round_no: int, n_hosts: int) -> RoundStats:
     """
     spark = catalog.spark
     now = round_now_epoch(round_no)
-    frontier = read_frontier(catalog, round_no - 1)
+    frontier = catalog.read_frontier(round_no - 1)
     seen = catalog.read_committed("seen", round_no - 1)
     budgets = catalog.read_input("host_budget")
     robots = catalog.read_input("robots")
@@ -595,7 +550,7 @@ def run_round(catalog: Catalog, round_no: int, n_hosts: int) -> RoundStats:
     if round_no % COMPACT_EVERY == 0:
         # a snapshot commits its own row count as n_frontier
         fm = catalog.write_snapshot(
-            read_frontier(catalog, round_no), "frontier", round_no,
+            catalog.read_frontier(round_no), "frontier", round_no,
             stats=lambda n_rows: vars(replace(stats, n_frontier=n_rows)),
         )
         stats = RoundStats(**fm["stats"])
@@ -623,7 +578,9 @@ def run_rounds(catalog: Catalog, n_rounds: int, n_hosts: int) -> list[RoundStats
 
     A round killed between its compaction snapshot and the end of
     ``expire_frontier_history`` is committed with its history still on
-    disk; the expiry is idempotent, so the resume finishes it first."""
+    disk. The expiry removes each expired round's frontier manifest
+    after the round's other files, so every partly expired round is
+    still listed, and the resume finishes the expiry first."""
     expire_frontier_history(catalog)
     start = (catalog.latest_round("frontier") or 0) + 1
     return [run_round(catalog, r, n_hosts) for r in range(start, n_rounds + 1)]
