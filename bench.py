@@ -9,6 +9,10 @@ times ``run_rounds`` over CRAWL_ROUNDS rounds (``crawl_rounds_s``). The
 catalog stays at ``<inputs>/catalog`` until the next run, so
 ``python -m twawler_spark status --root`` can read its RoundStats.
 
+The inputs of one size are cached under ``/tmp/twawler_bench/u<N>_h<H>``;
+generating a size removes the cached inputs of every other size (the
+``ivf_*`` corpus caches stay).
+
 Also times seen-set admission at the |seen| >> |candidates| shape and
 the headline operator queries at $SPARK_GRAFT_SF_DIR.
 
@@ -22,6 +26,7 @@ Env knobs:
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -236,14 +241,28 @@ def log(*a):
 INPUT_LAYOUT_VERSION = 3  # v3: no bucketed copies (v2: FRONTIER.path decomposed)
 
 
+BENCH_DIR = "/tmp/twawler_bench"
+
+
+def drop_other_inputs(keep: str) -> None:
+    """Remove every cached ``u*_h*`` input dir under BENCH_DIR but
+    ``keep``: one size's inputs are cached at a time (the default size
+    alone is ~1 GB). The ``ivf_*`` corpus caches stay."""
+    for path in sorted(glob.glob(f"{BENCH_DIR}/u*_h*")):
+        if path != keep:
+            log(f"removing cached inputs of another size: {path}")
+            shutil.rmtree(path, ignore_errors=True)
+
+
 def ensure_inputs(spark, n_urls: int, n_hosts: int) -> str:
-    root = f"/tmp/twawler_bench/u{n_urls}_h{n_hosts}"
+    root = f"{BENCH_DIR}/u{n_urls}_h{n_hosts}"
     marker = f"{root}/.complete"
     marker_want = f"v{INPUT_LAYOUT_VERSION}"
     if os.path.exists(marker) and open(marker).read() != marker_want:
         log("stale input layout -> regenerating")
         shutil.rmtree(root, ignore_errors=True)
     if not os.path.exists(marker):
+        drop_other_inputs(root)
         log(f"generating bench frontier: {n_urls} urls, {n_hosts} hosts -> {root}")
         t0 = time.time()
         # noise=False: canonical URLs straight from JVM expressions — the
@@ -304,7 +323,7 @@ def bench_ivf_storage(spark) -> dict[str, float]:
     )
 
     centroid_mod = IVF_N // IVF_CELLS
-    root = f"/tmp/twawler_bench/ivf_{IVF_N}x{IVF_DIM}_c{IVF_CELLS}"
+    root = f"{BENCH_DIR}/ivf_{IVF_N}x{IVF_DIM}_c{IVF_CELLS}"
     marker = f"{root}/.complete"
     if not os.path.exists(marker):
         log(f"writing cell-partitioned IVF corpus: {IVF_N}x{IVF_DIM}, "

@@ -7,8 +7,11 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from twawler_spark.io_catalog import Catalog
-from twawler_spark.plans.round import bootstrap, run_rounds
+from twawler_spark.operators.seen_filter import BroadcastBloom
+from twawler_spark.plans.round import bloom_prefix, bootstrap, run_rounds
 
 from .conftest import N_HOSTS
 
@@ -44,13 +47,18 @@ def test_resume_equals_uninterrupted(spark, crawl_root, tmp_path_factory):
     assert docs_a == docs_b
 
 
-def test_compaction_and_history_expiry(spark, crawl_root, tmp_path_factory):
+@pytest.fixture(scope="module")
+def five_rounds(spark, crawl_root, tmp_path_factory):
+    cat = _setup(spark, crawl_root, str(tmp_path_factory.mktemp("e")))
+    return cat, run_rounds(cat, 5, n_hosts=N_HOSTS)
+
+
+def test_compaction_and_history_expiry(five_rounds):
     """COMPACT_EVERY=4: round 4 writes a compaction snapshot and expires
     earlier manifests/deltas; reads and resume still work after."""
     from twawler_spark.plans.round import round_status
 
-    cat = _setup(spark, crawl_root, str(tmp_path_factory.mktemp("e")))
-    stats = run_rounds(cat, 5, n_hosts=N_HOSTS)
+    cat, stats = five_rounds
     assert cat.compaction_rounds("frontier") == [4]  # 0..3 expired at r4
     assert cat.committed_rounds("frontier") == [4, 5]
     assert cat.latest_round("frontier") == 5
@@ -73,6 +81,19 @@ def test_compaction_and_history_expiry(spark, crawl_root, tmp_path_factory):
     }
 
 
+def test_seen_counts_keys(five_rounds):
+    """A 404 key is already in seen (as tracked) and in the filter, so
+    the round's count and the filter's grow by the admitted keys only:
+    each round's ``n_seen`` is the distinct keys of its committed seen."""
+    cat, stats = five_rounds
+    for st in stats:
+        keys = cat.read_committed("seen", st.round).select("url_hash").distinct().count()
+        assert st.n_seen == keys, st.round
+    last = stats[-1]
+    assert cat.read_manifest("seen", last.round)["n_rows"] == last.n_seen
+    assert BroadcastBloom.load(bloom_prefix(cat, last.round)).n_keys == last.n_seen
+
+
 def test_manifest_lineage(spark, crawl_root, tmp_path_factory):
     cat = _setup(spark, crawl_root, str(tmp_path_factory.mktemp("m")))
     run_rounds(cat, 1, n_hosts=N_HOSTS)
@@ -80,6 +101,13 @@ def test_manifest_lineage(spark, crawl_root, tmp_path_factory):
     assert man["kind"] == "compaction"
     assert man["n_rows"] == sum(p["rows"] for p in man["partitions"])
     assert man["n_rows"] > 0
+    # the lineage names every file of the snapshot with its row count
+    snap = f"{cat.root}/frontier/snap=0"
+    assert sorted(p["file"] for p in man["partitions"]) == sorted(
+        f for f in os.listdir(snap) if f.endswith(".parquet")
+    )
+    for p in man["partitions"]:
+        assert spark.read.parquet(f"{snap}/{p['file']}").count() == p["rows"], p
     assert "url_hash" in man["columns"]
     man1 = cat.read_manifest("frontier", 1)  # delta-only commit
     assert man1["kind"] == "commit" and man1["n_rows"] > 0

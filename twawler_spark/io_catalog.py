@@ -7,7 +7,7 @@ implements the same contract on plain parquet dirs:
   root/<table>/snap=<round>/part-*.parquet     full snapshots (frontier)
   root/<table>/data/round=<round>/...          append-only logs (frontier_v,
                                                seen, documents, ...)
-  root/<table>/_manifests/<round>.json         row counts + per-partition
+  root/<table>/_manifests/<round>.json         row counts + per-file
                                                lineage (the north rule's
                                                "per-partition lineage +
                                                counters") + the round's
@@ -18,7 +18,17 @@ frontier_v, seen, documents, follow_edges, crawl_order) has a declared
 schema: every write is checked against the declaration on the driver,
 and reads pass it to the parquet reader, so no read runs a
 footer-inference job. A table without a declaration can be neither
-written nor read. External inputs (``read_input``) keep inference.
+written nor read. The four external inputs (``schemas.INPUT_TABLES``)
+are declared too: ``read_input`` checks one parquet footer per input on
+the driver (pyarrow) and reads with the declaration, so it runs no job
+and a missing or retyped input column raises instead of reading NULLs.
+
+A snapshot is written in two steps: ``stage_snapshot`` writes its files
+and takes the per-file lineage (row counts) from their parquet footers,
+O(files) on the driver with no read-back job; ``commit_snapshot``
+writes the manifest. ``write_snapshot`` runs both; bootstrap stages
+round 0's snapshot on a worker thread next to its seen append and
+filter build, and commits it last.
 
 Resume = read the highest committed snapshot (manifest written last, so
 a killed round leaves no committed-but-partial snapshot — the
@@ -39,16 +49,32 @@ files it owns itself (the seen-filter files) before calling it.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
-from .schemas import CATALOG_TABLES, FRONTIER
+from .schemas import CATALOG_TABLES, FRONTIER, INPUT_TABLES
+
+
+def _check_columns(got: dict[str, T.DataType], want: T.StructType, table: str) -> None:
+    """Raise ``ValueError`` naming the first declared column of ``want``
+    that ``got`` (name -> type) lacks or types differently."""
+    for f in want.fields:
+        if f.name not in got:
+            raise ValueError(f"{table}: column {f.name!r} is missing")
+        if got[f.name] != f.dataType:
+            raise ValueError(
+                f"{table}: column {f.name!r} is {got[f.name].simpleString()}, "
+                f"declared {f.dataType.simpleString()}"
+            )
 
 
 def _check_schema(df: DataFrame, table: str) -> None:
@@ -59,14 +85,7 @@ def _check_schema(df: DataFrame, table: str) -> None:
     ``KeyError``."""
     want = CATALOG_TABLES[table]
     got = {f.name: f.dataType for f in df.schema.fields}
-    for f in want.fields:
-        if f.name not in got:
-            raise ValueError(f"{table}: column {f.name!r} is missing")
-        if got[f.name] != f.dataType:
-            raise ValueError(
-                f"{table}: column {f.name!r} is {got[f.name].simpleString()}, "
-                f"declared {f.dataType.simpleString()}"
-            )
+    _check_columns(got, want, table)
     extra = sorted(set(got) - set(want.fieldNames()))
     if extra:
         raise ValueError(f"{table}: column {extra[0]!r} is not declared")
@@ -85,6 +104,39 @@ class Catalog:
     def _manifest_path(self, table: str, round_no: int) -> str:
         return f"{self.root}/{table}/_manifests/{round_no}.json"
 
+    def stage_snapshot(self, df: DataFrame, table: str, round_no: int) -> dict:
+        """Write a full snapshot's files, uncommitted, and return the
+        manifest ``commit_snapshot`` commits. The lineage is one entry
+        per written ``part-*`` file with the row count of its parquet
+        footer: O(files) on the driver, no read-back job."""
+        _check_schema(df, table)
+        path = self._snap_dir(table, round_no)
+        df.write.mode("overwrite").parquet(path)
+        files = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+        rows = [pq.read_metadata(f"{path}/{f}").num_rows for f in files]
+        return {
+            "table": table,
+            "round": round_no,
+            "kind": "compaction",
+            "n_rows": sum(rows),
+            "partitions": [
+                {"partition": k, "file": f, "rows": n}
+                for k, (f, n) in enumerate(zip(files, rows))
+            ],
+            "columns": CATALOG_TABLES[table].fieldNames(),
+        }
+
+    def commit_snapshot(
+        self, manifest: dict, stats: Callable[[int], dict] | None = None
+    ) -> dict:
+        """Commit a staged snapshot. ``stats(n_rows)``, if given, returns
+        the round's stats; they are committed in the manifest with the
+        snapshot's row count."""
+        if stats is not None:
+            manifest = {**manifest, "stats": stats(manifest["n_rows"])}
+        self._write_manifest(manifest["table"], manifest["round"], manifest)
+        return manifest
+
     def write_snapshot(
         self,
         df: DataFrame,
@@ -92,35 +144,9 @@ class Catalog:
         round_no: int,
         stats: Callable[[int], dict] | None = None,
     ) -> dict:
-        """Write a full snapshot and commit it. ``stats(n_rows)``, if
-        given, returns the round's stats; they are committed in the
-        manifest once the snapshot's row count is known."""
-        _check_schema(df, table)
-        path = self._snap_dir(table, round_no)
-        df.write.mode("overwrite").parquet(path)
-        written = self._read_snapshot(table, round_no)
-        lineage = (
-            written.groupBy(F.spark_partition_id().alias("partition"))
-            .count()
-            .orderBy("partition")
-            .collect()
-        )
-        n_rows = int(sum(r["count"] for r in lineage))
-        manifest = {
-            "table": table,
-            "round": round_no,
-            "kind": "compaction",
-            "n_rows": n_rows,
-            "partitions": [
-                {"partition": int(r["partition"]), "rows": int(r["count"])}
-                for r in lineage
-            ],
-            "columns": written.columns,
-        }
-        if stats is not None:
-            manifest["stats"] = stats(n_rows)
-        self._write_manifest(table, round_no, manifest)
-        return manifest
+        """Write a full snapshot and commit it (``stage_snapshot`` then
+        ``commit_snapshot``)."""
+        return self.commit_snapshot(self.stage_snapshot(df, table, round_no), stats)
 
     def commit_round(
         self, table: str, round_no: int, n_rows: int, stats: dict | None = None
@@ -277,4 +303,18 @@ class Catalog:
 
     # ------------------------------------------------------------- inputs
     def read_input(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(f"{self.root}/{name}")
+        """External input ``name`` read with its declared schema
+        (``schemas.INPUT_TABLES``), so no inference job runs. A declared
+        read of an absent column would return NULLs, so one file footer
+        is checked on the driver first: a missing or retyped declared
+        column raises ``ValueError``, an input without parquet files
+        ``FileNotFoundError`` and an undeclared input ``KeyError``.
+        Undeclared extra columns are not read."""
+        want = INPUT_TABLES[name]
+        path = f"{self.root}/{name}"
+        files = sorted(glob.glob(f"{path}/*.parquet"))
+        if not files:
+            raise FileNotFoundError(f"{name}: no parquet file under {path}")
+        footer = pq.read_schema(files[0])
+        _check_columns({f.name: from_arrow_type(f.type) for f in footer}, want, name)
+        return self.spark.read.schema(want).parquet(path)

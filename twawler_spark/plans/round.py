@@ -19,7 +19,8 @@ worker threads = W; W writes overlap the M steps after them):
     -> outlink discovery -> seen filter       [persisted broadcast bloom probe
                                                + scan-only confirm] M
        -> state MERGE -> frontier_v append W  [broadcast join]
-       -> seen append + filter update      M  [admitted ∪ 404 keys, in memory]
+       -> seen append + filter update      M  [seen: admitted ∪ 404 keys; filter:
+                                               admitted keys, in memory]
     -> barrier, then commit: seen manifest, filter save, frontier manifest
        (+ RoundStats; a snapshot every COMPACT_EVERY rounds)
 
@@ -112,9 +113,18 @@ def bootstrap(
 
     The persisted seen-filter is built HERE, once, from the full set
     (per-bucket build + treeAggregate merge); every later round
-    only ORs in its delta — never an O(|seen|) rebuild."""
-    seed_keys = seen_seed.select("url_hash").distinct()
-    fresh = frontier_seed.join(seed_keys, "url_hash", "left_anti")
+    only ORs in its delta — never an O(|seen|) rebuild.
+
+    Overlap and commit order: the frontier snapshot depends on neither
+    the seen append nor the filter, so a worker thread stages its files
+    (``Catalog.stage_snapshot``, lineage from the parquet footers) while
+    the main thread appends seen, commits the seen manifest, builds the
+    filter and saves it. Both finish (or raise) before frontier
+    manifest 0, the last file written, commits the round: a failure at
+    any step leaves round 0 uncommitted with no write still running,
+    and bootstrapping the same root again overwrites every file."""
+    # a left anti join ignores duplicate keys: no distinct() shuffle
+    fresh = frontier_seed.join(seen_seed.select("url_hash"), "url_hash", "left_anti")
     # rows already in a terminal state belong in the sets, not the frontier
     # (cemetery/ignored are separate collections in the reference)
     frontier0 = fresh.where(~F.col("state").isin("dead", "ignored"))
@@ -127,15 +137,20 @@ def bootstrap(
             F.lit(0).alias("added_round"),
         )
     )
-    obs, n = _count_obs()
-    catalog.append(seen0.observe(obs, n), "seen", 0)
-    n_seen = int(obs.get["n"])
-    catalog.commit_round("seen", 0, n_seen)
-    bloom = BroadcastBloom.build(
-        catalog.read_committed("seen", 0).select("url_hash"), n_keys=n_seen
-    )
-    bloom.save(bloom_prefix(catalog, 0))
-    catalog.write_snapshot(frontier0, "frontier", 0)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        # carry the job group, description and tags to the worker
+        stage = inheritable_thread_target(catalog.spark)(catalog.stage_snapshot)
+        staged = pool.submit(stage, frontier0, "frontier", 0)
+        obs, n = _count_obs()
+        catalog.append(seen0.observe(obs, n), "seen", 0)
+        n_seen = int(obs.get["n"])
+        catalog.commit_round("seen", 0, n_seen)
+        bloom = BroadcastBloom.build(
+            catalog.read_committed("seen", 0).select("url_hash"), n_keys=n_seen
+        )
+        bloom.save(bloom_prefix(catalog, 0))
+        frontier_manifest = staged.result()
+    catalog.commit_snapshot(frontier_manifest)
 
 
 def build_two_phase_plan(
@@ -510,14 +525,16 @@ def run_round(catalog: Catalog, round_no: int, n_hosts: int) -> RoundStats:
             round_no,
         )
         n_dead = int(obs_dead.get["n_dead"] or 0)
-        # OR this round's delta into the filter (in memory; saved below)
-        bloom.update(seen_delta, n_delta=n_admitted + n_dead)
+        # OR the admitted keys into the filter (in memory; saved below).
+        # The dead keys were tracked, so their bits are set already
+        bloom.update(admitted, n_delta=n_admitted)
         for w in writes:
             w.result()
     n_docs = int(obs_docs.get["n"])
 
     # ---------------------------------------------------------- commit
-    n_seen = catalog.read_manifest("seen", round_no - 1)["n_rows"] + n_admitted + n_dead
+    # seen counts keys: a dead key re-enters seen as a row, not a key
+    n_seen = catalog.read_manifest("seen", round_no - 1)["n_rows"] + n_admitted
     catalog.commit_round("seen", round_no, n_seen)
 
     # persist the updated seen-filter. Idempotent under crash-replay

@@ -139,3 +139,13 @@ CATALOG_TABLES = {
     "follow_edges": FOLLOW_EDGES,
     "crawl_order": CRAWL_ORDER,
 }
+
+# the four external inputs under the catalog root: ``Catalog.read_input``
+# checks one file footer of each against its declaration and reads it
+# with the declared schema, so reading an input runs no inference job
+INPUT_TABLES = {
+    "frontier_seed": FRONTIER,
+    "seen_seed": SEEN,
+    "host_budget": HOST_BUDGET,
+    "robots": ROBOTS,
+}
