@@ -296,9 +296,9 @@ def main():
         rows.append(audit(name, txt))
         details[name] = txt
 
-    # the flagship round plan: the one run_round builds — the two-phase
-    # rank over the active frontier with its per-host stats (admission
-    # happens later in the round, against outlinks only)
+    # the flagship round plan: the one run_round builds — the per-host
+    # top-K cut and the two-phase rank over the active frontier
+    # (admission happens later in the round, against outlinks only)
     from pyspark.sql import functions as F
 
     from twawler_spark.plans.round import build_two_phase_plan
@@ -311,10 +311,7 @@ def main():
     budgets = spark.read.parquet(f"{root}/host_budget")
     robots = spark.read.parquet(f"{root}/robots")
     active = frontier.where(F.col("state") == "active")
-    host_stats = active.groupBy("host").agg(F.count(F.lit(1)).alias("n_urls"))
-    round_txt = plan_text(
-        build_two_phase_plan(active, robots, budgets, NOW_EPOCH + 3600, host_stats=host_stats)
-    )
+    round_txt = plan_text(build_two_phase_plan(active, robots, budgets, NOW_EPOCH + 3600))
     rows.append(audit("sched_round", round_txt))
 
     # dialogues level-join: with the reply-edge table repartitioned on
@@ -374,15 +371,18 @@ def main():
         f.write(f"Current hits: {sp_hits if sp_hits else 'none'}\n")
         f.write("\nNotes:\n")
         f.write("- `sched_round`: the plan `run_round` builds over the active\n")
-        f.write("  frontier. FOUR hash exchanges — the `host_stats` per-host count\n")
-        f.write("  over the frontier and the tiny robots deny-map groupBy, then\n")
-        f.write("  stage A by (host, salt) and stage B by host over stage-A survivors\n")
-        f.write("  only; both ranking phases come out of ONE stage-B pass (mixed-order\n")
-        f.write("  row_number — no union, no duplicated subtree). The hot-host set,\n")
-        f.write("  the deny map and the budget dim are broadcast, so the frontier is\n")
-        f.write("  never reshuffled for them. No seen anti-join: the round admits\n")
-        f.write("  only its outlinks, later, against the seen filter. The wide `url`\n")
-        f.write("  string is never read (robots gating reads `FRONTIER.path`).\n")
+        f.write("  frontier. TWO hash exchanges — the tiny robots deny-map groupBy\n")
+        f.write("  and ONE ranking exchange by host. Ahead of that exchange, the\n")
+        f.write("  one python stage (`host_top_k`, a `mapInArrow` over each input\n")
+        f.write("  partition, no exchange) cuts every host to its top B rows by\n")
+        f.write("  `expected` and top B + B_late by staleness, so a hot host sends\n")
+        f.write("  at most P·(2B + B_late) rows into the exchange. Both ranking\n")
+        f.write("  phases come out of ONE pass after it (mixed-order row_number —\n")
+        f.write("  no union, no duplicated subtree). The deny map and the budget\n")
+        f.write("  dim are broadcast, so the frontier is never reshuffled for them.\n")
+        f.write("  No seen anti-join: the round admits only its outlinks, later,\n")
+        f.write("  against the seen filter. The wide `url` string is never read\n")
+        f.write("  (robots gating reads `FRONTIER.path`).\n")
         f.write("- `dedup_minhash_lsh`/`dedup_jaccard`: the LSH band self-join is one\n")
         f.write("  shuffle on (band_idx, band_val); verification joins only the\n")
         f.write("  candidate pairs back to doc metadata.\n")
@@ -431,12 +431,12 @@ def main():
         f.write("  shuffles — the edge side is a persisted hash-partitioned scan.\n")
         f.write("- `crawl_round_*`: the driver-facing crawl round (real\n")
         f.write("  build_two_phase_plan + Arrow fetch stage); python stages are the\n")
-        f.write("  sanctioned fetch UDFs, everything before the fetch is JVM-side.\n")
-        f.write("- `span_dedup`: 8 of its 10 exchanges and the 1 python stage belong\n")
-        f.write("  to the underlying crawl_round_docs synthesis (the sanctioned fetch\n")
-        f.write("  Arrow surface); the dedup itself adds ONE hash exchange on span\n")
-        f.write("  content (occurrence count + canonical-owner rank are two windows\n")
-        f.write("  over the same partitioning) and the per-doc rollup.\n")
+        f.write("  plan's per-host top-K cut and the sanctioned fetch UDFs.\n")
+        f.write("- `span_dedup`: 4 of its 6 exchanges and both python stages belong\n")
+        f.write("  to the underlying crawl_round_docs synthesis (the plan's per-host\n")
+        f.write("  cut and the fetch Arrow surface); the dedup itself adds ONE hash\n")
+        f.write("  exchange on span content (occurrence count + canonical-owner rank\n")
+        f.write("  are two windows over the same partitioning) and the per-doc rollup.\n")
         f.write("- `dup_ngram_coverage`: grams build map-side as an array HOF; ONE\n")
         f.write("  exchange on gram (its window sort is the single Sort node), one\n")
         f.write("  per-doc rollup exchange, and the zero-gram-doc join-back rides a\n")
@@ -788,8 +788,10 @@ def main():
         f.write("  partition + an island rollup to a single summary row.\n")
         f.write("- `snapshot_diff`: one full-outer shuffle join at worst.\n")
         f.write("- python stages are zero everywhere except queries whose semantics\n")
-        f.write("  need Arrow (url canonicalization, bloom probe, multimodal)\n")
-        f.write("  — none of the audited analytics queries cross into Python.\n")
+        f.write("  need Arrow (url canonicalization, bloom probe, multimodal) and\n")
+        f.write("  the round plan's per-host top-K cut (`sched_round`, and the\n")
+        f.write("  `crawl_round_*` queries built on it) — none of the audited\n")
+        f.write("  analytics queries cross into Python.\n")
         f.write("\n## Flagship scheduling-round plan (full)\n\n```\n")
         f.write(round_txt)
         f.write("```\n")

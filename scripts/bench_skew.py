@@ -1,29 +1,27 @@
-"""Hot-domain skew A/B: salting OFF vs adaptive salting ON.
+"""Hot-domain skew: the engine's scheduling plan on a hot-host frontier.
 
-The north rule calls for a per-host politeness priority queue "salted
-by host-hash to defuse hot-domain skew". This measures that lever in
-isolation: a synthetic frontier where ONE host owns a large fraction
-of all URLs (the hot-domain case: a link farm / URL-shortener host),
-then the identical two-phase scheduling plan timed with
+A synthetic frontier where ONE host owns ``hot_pct``% of all URLs (the
+hot-domain case: a link farm / URL-shortener host), then the engine's
+two-phase scheduling plan (``build_two_phase_plan``) timed as one job
+that also digests the plan. The per-partition top-K cut ahead of the
+plan's one ranking exchange bounds the hot host's rows entering that
+exchange at P·(2B + B_late) for P input partitions, so no single task
+sorts the hot host's whole candidate set.
 
-  A) salt_buckets=1  — no salting: the hot host's entire candidate set
-     lands in one (host) partition and one task sorts it alone;
-  B) salt_buckets=16 + adaptive host_stats — the engine default: hot
-     hosts fan out 16-way in stage A, cold hosts keep one bucket.
-
-Both variants produce bit-identical plans (stage A's per-bucket top-B
-keep is a superset of the per-host top-B for any bucket count — see
-build_two_phase_plan); only the partition shape differs. Iterations
-are interleaved A/B/A/B so host noise hits both arms equally.
+The digest is the row count and the XOR of ``xxhash64`` over every
+plan row's columns (order-independent; ``url_hash`` is unique, so no
+two rows cancel): two plans with the same digest hold the same rows,
+ranks and phases.
 
 Usage: python scripts/bench_skew.py [n_urls] [n_hosts] [hot_pct] [iters]
-Writes one JSON line; paste the table into BENCH.md.
+Writes one JSON line; BENCH.md "Hot-domain skew" records the runs.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -31,16 +29,30 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from twawler_spark.plans.round import build_two_phase_plan
 from twawler_spark.session import default_cpus, get_spark
 from twawler_spark.synth import NOW_EPOCH, write_inputs
-from twawler_spark.plans.round import build_two_phase_plan
+
+PLAN_COLUMNS = (
+    "url_hash", "host", "phase", "fetch_rank", "last_id", "first_id", "reached",
+    "expected", "hours_idle",
+)
+
+
+def plan_digest(plan) -> tuple[int, str]:
+    """(rows, XOR of per-row xxhash64) of a plan, in one job."""
+    row = plan.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(*PLAN_COLUMNS)).alias("x"),
+    ).first()
+    return row["n"], f"{row['x'] & (2**64 - 1):016x}"
 
 
 def main() -> int:
-    n_urls = int(sys.argv[1]) if len(sys.argv) > 1 else 16_000_000
-    n_hosts = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000
+    n_urls = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
+    n_hosts = int(sys.argv[2]) if len(sys.argv) > 2 else 5_000
     hot_pct = int(sys.argv[3]) if len(sys.argv) > 3 else 25
-    iters = int(sys.argv[4]) if len(sys.argv) > 4 else 3
+    iters = int(sys.argv[4]) if len(sys.argv) > 4 else 6
 
     spark = get_spark("bench_skew")
     root = f"/tmp/twawler_bench/skew_u{n_urls}_h{n_hosts}_p{hot_pct}"
@@ -62,35 +74,31 @@ def main() -> int:
     budgets = spark.read.parquet(f"{root}/host_budget")
     robots = spark.read.parquet(f"{root}/robots")
     active = frontier.where(F.col("state") == "active")
-    host_stats = active.groupBy("host").agg(F.count(F.lit(1)).alias("n_urls"))
-    top = host_stats.orderBy(F.desc("n_urls")).first()
+    per_host = active.groupBy("host").count()
+    top = per_host.orderBy(F.desc("count")).first()
     n_active = active.count()
 
-    def run(salt: int) -> float:
+    def run() -> tuple[float, tuple[int, str]]:
         t0 = time.time()
-        plan = build_two_phase_plan(
-            active, robots, budgets, NOW_EPOCH + 3600,
-            salt_buckets=salt, host_stats=host_stats if salt > 1 else None,
-        )
-        plan.count()
-        return time.time() - t0
+        digest = plan_digest(build_two_phase_plan(active, robots, budgets, NOW_EPOCH + 3600))
+        return time.time() - t0, digest
 
-    run(16)  # warm: page cache + codegen for both shapes
-    a, b = [], []
+    _, digest = run()  # warm: page cache, codegen and Python workers
+    secs = []
     for _ in range(iters):
-        a.append(run(1))
-        b.append(run(16))
+        sec, again = run()
+        assert again == digest, (again, digest)
+        secs.append(sec)
     res = {
-        "metric": "hot_domain_skew_ab",
+        "metric": "hot_domain_skew_plan_s",
         "n_urls": n_urls,
         "n_hosts": n_hosts,
-        "hot_host_rows": top["n_urls"],
-        "hot_host_frac": round(top["n_urls"] / n_active, 4),
-        "unsalted_sec": [round(x, 3) for x in a],
-        "salted_sec": [round(x, 3) for x in b],
-        "best_unsalted": round(min(a), 3),
-        "best_salted": round(min(b), 3),
-        "speedup": round(min(a) / min(b), 2),
+        "hot_host_rows": top["count"],
+        "hot_host_frac": round(top["count"] / n_active, 4),
+        "plan_sec": [round(x, 3) for x in secs],
+        "median_sec": round(statistics.median(secs), 3),
+        "plan_rows": digest[0],
+        "plan_digest": digest[1],
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus()),
     }
     print(json.dumps(res))

@@ -4,6 +4,8 @@ the scalar docspec, row by row, plus its plan shape."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -178,6 +180,29 @@ def _python_nodes(text: str) -> int:
     return sum(text.count(node) for node in _PYTHON_NODES)
 
 
+def _shuffles(text: str, node: str) -> list[str]:
+    """Exchange lines at or under the first ``node`` of a plan tree string,
+    leaving out those under a BroadcastExchange (a broadcast side's own
+    shuffle never moves the rows the node reads)."""
+    lines = text.splitlines()
+    start = next(i for i, line in enumerate(lines) if node in line)
+
+    def col(line):
+        return re.match(r"[ :+\-]*", line).end()
+
+    out, skip_below = [], None
+    for line in lines[start:]:
+        c = col(line)
+        if line is not lines[start] and c <= col(lines[start]):
+            break
+        if skip_below is not None and c > skip_below:
+            continue
+        skip_below = c if line[c:].startswith("BroadcastExchange") else None
+        if line[c:].startswith("Exchange"):
+            out.append(line[c:])
+    return out
+
+
 def test_fetch_pass_plan_shape(spark):
     """The fetch pass is one Python node with no exchange; everything
     the round derives from its checkpoint runs in the JVM."""
@@ -213,8 +238,10 @@ def test_fetch_pass_plan_shape(spark):
 def test_run_round_runs_one_python_fetch_pass(spark, crawl_root, tmp_path, monkeypatch):
     """run_round checkpoints plan -> fetch -> cands -> admitted. The fetch
     checkpoint holds the round's only fetch Python node, with no exchange
-    ahead of it; the plan and candidate checkpoints and the documents,
-    crawl-order and follow-edge appends run no Python."""
+    ahead of it. The plan checkpoint holds one Python node, the per-host
+    top-K cut, with no shuffle under it: its one shuffle is the ranking
+    exchange on host, above the cut. The candidate checkpoint and the
+    documents, crawl-order and follow-edge appends run no Python."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from twawler_spark.io_catalog import Catalog
@@ -245,7 +272,11 @@ def test_run_round_runs_one_python_fetch_pass(spark, crawl_root, tmp_path, monke
     plan, fetched, cands, _admitted = checkpoints
     assert fetched.count("MapInArrow") == 1 and _python_nodes(fetched) == 1, fetched
     assert "Exchange" not in fetched, fetched
-    for name, text in [("plan", plan), ("cands", cands)] + [
+    assert plan.count("MapInArrow") == 1 and _python_nodes(plan) == 1, plan
+    assert _shuffles(plan, "MapInArrow") == [], plan
+    shuffles = _shuffles(plan, plan.splitlines()[0])
+    assert len(shuffles) == 1 and shuffles[0].startswith("Exchange hashpartitioning(host"), plan
+    for name, text in [("cands", cands)] + [
         (t, appends[t]) for t in ("documents", "crawl_order", "follow_edges")
     ]:
         assert _python_nodes(text) == 0, (name, text)

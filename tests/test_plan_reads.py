@@ -2,8 +2,9 @@
 rows"): robots gating reads ``FRONTIER.path``, decomposed once at
 admission, and no scan under the plan has ``url`` in its read schema.
 ``url_hash`` does not count. The plan ranks on the frontier's own
-columns, so no exchange under it gathers to a single partition, and the
-frontier view runs one latest-delta window."""
+columns, so no exchange under it gathers to a single partition; the
+frontier view runs one latest-delta window, and the round's plan
+checkpoint scans the frontier snapshot once."""
 
 from __future__ import annotations
 
@@ -19,6 +20,7 @@ from twawler_spark.plans.round import (
     bootstrap,
     build_two_phase_plan,
     round_now_epoch,
+    run_round,
     run_rounds,
 )
 
@@ -49,10 +51,9 @@ def test_round_plan_reads_no_url(spark, crawl_root, tmp_path):
     # round-0 snapshot and the round-1 frontier_v deltas
     frontier = cat.read_frontier(1)
     active = frontier.where(F.col("state") == "active")
-    host_stats = active.groupBy("host").agg(F.count(F.lit(1)).alias("n_urls"))
     plan = build_two_phase_plan(
         active, cat.read_input("robots"), cat.read_input("host_budget"),
-        round_now_epoch(2), host_stats=host_stats,
+        round_now_epoch(2),
     )
     schemas = _read_schemas(plan)
     # the snapshot scan, the frontier_v scans and the two inputs
@@ -78,17 +79,16 @@ def round1(spark, crawl_root, tmp_path_factory):
 
 
 def test_round_plan_has_no_single_partition_exchange(round1):
-    """Both ranking stages partition on ``host`` and budgets join by
+    """The ranking exchange partitions on ``host`` and budgets join by
     ``host``: no window without a partition key gathers the plan's rows
     (or the budgets) onto one partition."""
     cat = round1
     # round 2's plan, built as run_round builds it
     frontier = cat.read_frontier(1)
     active = frontier.where(F.col("state") == "active")
-    host_stats = active.groupBy("host").agg(F.count(F.lit(1)).alias("n_urls"))
     plan = build_two_phase_plan(
         active, cat.read_input("robots"), cat.read_input("host_budget"),
-        round_now_epoch(2), host_stats=host_stats,
+        round_now_epoch(2),
     )
     text = _executed(plan)
     assert "Exchange hashpartitioning(host" in text, text
@@ -100,3 +100,27 @@ def test_frontier_view_runs_one_window(round1):
     the latest-delta window, so the view's plan holds exactly one."""
     text = _executed(round1.read_frontier(1))
     assert len(re.findall(r"\bWindow \[", text)) == 1, text
+
+
+def test_plan_checkpoint_scans_the_frontier_once(round1, monkeypatch):
+    """``run_round``'s plan checkpoint evaluates the frontier view once:
+    its plan holds one scan of the frontier snapshot. The plan is read
+    before it runs (AQE prunes empty branches from the executed plan),
+    and the round stops there, uncommitted."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    class PlanRead(Exception):
+        pass
+
+    plans = []
+
+    def checkpoint(self, *args, **kwargs):
+        plans.append(_executed(self))
+        raise PlanRead
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", checkpoint)
+    with pytest.raises(PlanRead):
+        run_round(round1, 2, N_HOSTS)
+    assert round1.latest_round("frontier") == 1
+    scans = re.findall(r"FileScan parquet [^\n]*/frontier/snap=", plans[0])
+    assert len(scans) == 1, plans[0]

@@ -148,15 +148,9 @@ def test_plan_invariant_under_repartitioning(spark, crawl_root):
     frontier = spark.read.parquet(f"{crawl_root}/frontier_seed")
     budgets = spark.read.parquet(f"{crawl_root}/host_budget")
     robots = spark.read.parquet(f"{crawl_root}/robots")
-    host_stats = frontier.where(F.col("state") == "active").groupBy("host").agg(
-        F.count(F.lit(1)).alias("n_urls")
-    )
 
     def plan_rows(active):
-        plan = build_two_phase_plan(
-            active, robots, budgets, NOW_EPOCH + 3600, salt_buckets=4,
-            host_stats=host_stats, hot_threshold=50,
-        )
+        plan = build_two_phase_plan(active, robots, budgets, NOW_EPOCH + 3600)
         return sorted(
             (r["url_hash"], r["host"], r["phase"], r["fetch_rank"])
             for r in plan.collect()
@@ -175,7 +169,8 @@ def test_null_first_id_rides_the_plan_intact(spark, crawl_root):
     as NULL, and the non-null `reached` next to it must come out
     unchanged (a lost `reached` would be coerced to False by
     fetch_results, which would then resume backfill past an exhausted
-    floor). Both ride the ranking shuffles as plain columns."""
+    floor). Both ride the per-host cut and the ranking exchange as
+    plain columns."""
     from pyspark.sql import functions as F
 
     from twawler_spark.plans.round import build_two_phase_plan
@@ -190,9 +185,7 @@ def test_null_first_id_rides_the_plan_intact(spark, crawl_root):
         .withColumn("first_id", F.when(~nulled, F.col("first_id")))
         .withColumn("reached", F.when(nulled, F.lit(True)).otherwise(F.col("reached")))
     )
-    plan = build_two_phase_plan(
-        active, robots, budgets, NOW_EPOCH + 3600, salt_buckets=4,
-    )
+    plan = build_two_phase_plan(active, robots, budgets, NOW_EPOCH + 3600)
     rows = plan.select("url_hash", "first_id", "reached").collect()
     null_rows = [r for r in rows if r["url_hash"] % 5 == 0]
     assert null_rows, "expected some null-first_id rows to be scheduled"
@@ -227,9 +220,7 @@ def test_missing_budget_host_fails_fast(spark, crawl_root, case):
         )
         match = "NULL budget_per_round"
     active = frontier.where(F.col("state") == "active")
-    plan = build_two_phase_plan(
-        active, robots, holey, NOW_EPOCH + 3600, salt_buckets=4,
-    )
+    plan = build_two_phase_plan(active, robots, holey, NOW_EPOCH + 3600)
     with pytest.raises(Exception, match=match):
         plan.collect()
 

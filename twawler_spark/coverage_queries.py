@@ -3273,7 +3273,7 @@ def q_recrawl_schedule(spark, sf):
     is span/(n-1), so no lag window ever touches the history), then
     the J5 budgeted-take window over the tiny per-unit summary. At
     10^10 frontier scale this staleness column feeds
-    build_two_phase_plan's salted budget rank as its ordering key;
+    build_two_phase_plan's budget rank as its ordering key;
     here the plain per-host window IS the claim.
 
     Reference parity: twAwler re-crawls on fixed staleness TTLs

@@ -154,19 +154,14 @@ def _crawl_fixture(
 
 def _plan(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
     frontier, budgets, robots = _crawl_fixture(spark, sf)
-    plan = build_two_phase_plan(
-        frontier,
-        robots,
-        budgets,
-        CRAWL_NOW,
-        salt_buckets=4,
-    )
+    plan = build_two_phase_plan(frontier, robots, budgets, CRAWL_NOW)
     return frontier, plan
 
 
 # shared oracle CTE chain: frontier fixture -> robots gate -> two-phase
-# budget rank (the salted stage A is a pure superset optimization, so
-# the unsalted SQL ranking is the same function of the snapshot)
+# budget rank (the engine's per-partition top-K cut keeps a superset of
+# every host's top rows, so the uncut SQL ranking is the same function
+# of the snapshot)
 _SQL_PLAN_BASE = f"""
 agg AS (
   SELECT user_id, count(*) AS n_events,
@@ -218,7 +213,7 @@ plan AS (
 
 def q_crawl_round_plan(spark: SparkSession, sf: str) -> DataFrame:
     """S1/S5/O1/J5/P5: one scheduling round's fetch plan — score
-    (freq.py:103,133), robots gate, salted two-phase per-host budget
+    (freq.py:103,133), robots gate, two-phase per-host budget
     rank (dumpall.py:106-111 + --crawl-late), keyed by host name."""
     _, plan = _plan(spark, sf)
     return plan.select(

@@ -9,7 +9,8 @@ worker threads = W; W writes overlap the M steps after them):
   frontier snapshot (scan, pruned)           [parquet min-max on state]
     -> score                                  [column exprs, codegen]
     -> robots gate                            [broadcast join + exists()]
-    -> per-host budget rank                   [two-phase salted window]
+    -> per-host top-K of each partition       [Arrow pass, no exchange]
+    -> per-host budget rank                   [ONE exchange, on host]
     -> plan checkpoint                     M
        -> crawl_order append               W
     -> fetch: status, docs, outlinks          [ONE Arrow pass, no exchange,
@@ -41,6 +42,9 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -84,7 +88,6 @@ class RoundStats:
 
 
 COMPACT_EVERY = 4  # frontier compaction cadence (rounds)
-SALT_BUCKETS = 16  # stage-A salting of hot hosts in the round's plan
 
 
 def expire_frontier_history(catalog: Catalog) -> list[int]:
@@ -153,14 +156,52 @@ def bootstrap(
     catalog.commit_snapshot(frontier_manifest)
 
 
+def _desc_keys(col: pa.ChunkedArray) -> list[np.ndarray]:
+    """``np.lexsort`` keys, least significant first, that order a double
+    column as Spark orders it DESC: NaN first, then the values from
+    largest to smallest, then NULL."""
+    null = col.is_null().to_numpy()
+    v = pc.fill_null(col, 0.0).to_numpy()
+    nan = np.isnan(v)
+    return [-np.where(nan, 0.0, v), ~nan, null]
+
+
+def host_top_k_keep(table: pa.Table) -> np.ndarray:
+    """Row mask of each host's top ``__b`` rows by (expected DESC,
+    url_hash ASC) and top ``__b + __b2`` rows by (hours_idle DESC,
+    url_hash ASC) within ``table``: at most 2·__b + __b2 rows per host.
+    Both orders are the plan's window orders and total (``url_hash`` is
+    unique), so every row of ``table`` that is among its host's top
+    rows over a larger set of rows is among them here, and is kept."""
+    host = pc.dictionary_encode(table.column("host").combine_chunks()).indices.to_numpy()
+    uh = table.column("url_hash").to_numpy()
+    b = table.column("__b").to_numpy()
+    keep = np.zeros(len(uh), dtype=bool)
+    for key, bound in (("expected", b), ("hours_idle", b + table.column("__b2").to_numpy())):
+        order = np.lexsort([uh, *_desc_keys(table.column(key)), host])
+        grouped = host[order]
+        rank = np.arange(len(order)) - np.searchsorted(grouped, grouped)
+        keep[order[rank < bound[order]]] = True
+    return keep
+
+
+def host_top_k(ranked: DataFrame) -> DataFrame:
+    """Each input partition cut to ``host_top_k_keep``'s rows, in one
+    Arrow pass with no exchange. The mask is computed over the whole
+    partition, not batch by batch: per-batch cuts would keep up to
+    2·__b + __b2 rows per host from every Arrow batch."""
+
+    def run(batches):
+        batches = list(batches)
+        if batches:
+            table = pa.Table.from_batches(batches)
+            yield from table.filter(host_top_k_keep(table)).to_batches()
+
+    return ranked.mapInArrow(run, ranked.schema)
+
+
 def build_two_phase_plan(
-    active: DataFrame,
-    robots: DataFrame,
-    budgets: DataFrame,
-    now: int,
-    salt_buckets: int = SALT_BUCKETS,
-    host_stats: DataFrame | None = None,
-    hot_threshold: int = 5000,
+    active: DataFrame, robots: DataFrame, budgets: DataFrame, now: int
 ) -> DataFrame:
     """The per-round scheduling plan (crawl-tweets.sh phases 1+2):
     score → robots gate → per-host budget rank by ``expected`` (phase 1),
@@ -175,23 +216,22 @@ def build_two_phase_plan(
         every host in ``active`` — phase 1 takes up to B rows per host,
         the late phase up to max(B // 2, 1). A host missing from
         ``budgets``, or with a NULL budget, raises when the plan runs:
-        there is no default budget;
-      ``host_stats`` (optional): (host, n_urls), see adaptive salting
-        below.
+        there is no default budget.
 
-    Shuffle discipline (the 100 TB shape): exactly TWO exchanges touch
-    the candidate set —
-      stage A: partition by (host, salt); BOTH phase orders are
-        row_number'd in one pass (two sorts, one exchange); per-salt
-        keep expected-rank <= B and staleness-rank <= B + B_late (the
-        +B covers late winners displaced by phase-1 picks), so the
-        survivor set per host is <= salt_buckets*(2B + B_late);
-      stage B: partition by host over the survivors only; phase-1 =
-        expected-rank <= B; the late pool is a FILTER (not an
-        anti-join — no url_hash re-shuffle of the full set) and its
-        staleness window reuses stage B's partitioning.
-    Tie-breaks are (order DESC, url_hash ASC) throughout, keeping the
-    plan a deterministic function of the snapshot.
+    Shuffle discipline (the 100 TB shape): ONE exchange touches the
+    candidate set, on ``host``. Ahead of it, ``host_top_k`` cuts every
+    input partition to each host's top B rows by ``expected`` and top
+    B + B_late rows by staleness (the +B covers late winners displaced
+    by phase-1 picks), so at most P·(2B + B_late) rows of a host enter
+    the exchange from P input partitions, however hot the host is. Each
+    order is total (``url_hash`` is unique), so a host's top rows over
+    the whole frontier are among its top rows in the partition that
+    holds them, and the plan is the one an uncut ranking gives. After
+    the exchange, phase-1 = expected-rank <= B; the late pool is a
+    FILTER (not an anti-join — no url_hash re-shuffle of the full set)
+    and its staleness window reuses the same partitioning. Tie-breaks
+    are (order DESC, url_hash ASC) throughout, keeping the plan a
+    deterministic function of the snapshot.
 
     The URL string itself stays OUT of the ranking pipeline (it is the
     widest column and no plan consumer needs it — the fetch stage keys
@@ -200,26 +240,11 @@ def build_two_phase_plan(
     gating reads the ``path`` column, decomposed once at admission, so
     the plan never reads ``url``.
 
-    The ranking rows carry the frontier's own columns: both stages
-    partition on ``host``, and ``first_id``/``reached`` ride the two
-    ranking exchanges as they are (no ranking consumer reads them).
-    Budgets join by ``host`` in one broadcast join; no window in the
-    plan lacks a partition key, so none runs on a single partition.
-
-    ``host_stats`` (host, n_urls — per-host frontier row counts;
-    ``run_round`` computes them every round with a group-by over the
-    frontier view) turns the salting ADAPTIVE: only hosts above
-    ``hot_threshold`` rows get ``salt_buckets``-way salting; cold hosts
-    rank in a single stage-A bucket. With uniform salting and ~B rows
-    kept per (host, salt), a host with fewer than ``salt_buckets * (2B
-    + B_late)`` rows is not pruned AT ALL by stage A, so stage B
-    re-shuffles nearly the whole candidate set (measured at 100M URLs /
-    500k hosts: ~80M of 92M rows survive stage A). Adaptive salting
-    prunes every cold host to ~2B+B_late rows in stage A — stage B's
-    exchange and sorts then touch only ~1/10 the rows — while hot hosts
-    (the log-uniform head) keep full skew protection. Stage A's
-    per-bucket top-B keep is a superset of the per-host top-B for ANY
-    bucket count, so results are bit-identical.
+    The ranking rows carry the frontier's own columns: the exchange
+    partitions on ``host``, and ``first_id``/``reached`` ride it as
+    they are (no ranking consumer reads them). Budgets join by ``host``
+    in one broadcast join; no window in the plan lacks a partition key,
+    so none runs on a single partition.
     """
     # FRONTIER.path: decomposed once at admission — the scan never
     # reads the wide url column at all (biggest column in the table)
@@ -229,16 +254,10 @@ def build_two_phase_plan(
         now,
     )
     # rate_tph/latest_ts are consumed by score(); __path by the robots
-    # gate — none of them may ride the ranking shuffles and sorts.
+    # gate — none of them may ride the ranking exchange and sorts.
     gated = gate_robots(scored, robots, path_col="__path").drop(
         "__path", "rate_tph", "latest_ts"
     )
-    if host_stats is not None:
-        hot = (
-            host_stats.where(F.col("n_urls") > hot_threshold)
-            .select("host", F.lit(True).alias("__hot"))
-        )
-        gated = gated.join(F.broadcast(hot), "host", "left")
 
     def fail(what: str) -> F.Column:
         return F.raise_error(F.concat(
@@ -250,7 +269,7 @@ def build_two_phase_plan(
     # rows from the rank filters. Fail fast instead: the budget column
     # raises on the first unmatched or unbudgeted row (CASE branches
     # are tried in order; __known tells a missing host from a NULL
-    # budget).
+    # budget), in the JVM, before any row reaches host_top_k.
     known = budgets.select("host", "budget_per_round", F.lit(True).alias("__known"))
     wb = (
         gated.join(F.broadcast(known), "host", "left")
@@ -263,33 +282,15 @@ def build_two_phase_plan(
         .withColumn("__b2", F.greatest(F.floor(F.col("__b") / 2), F.lit(1)).cast("int"))
         .drop("budget_per_round", "__known")
     )
-    salt = F.pmod(F.col("url_hash"), F.lit(salt_buckets)).cast("int")
-    if host_stats is not None:
-        salt = (
-            F.when(F.col("__hot").isNotNull(), salt).otherwise(F.lit(0)).cast("int")
-        )
     order_e = [F.col("expected").desc(), F.col("url_hash").asc()]
     order_h = [F.col("hours_idle").desc(), F.col("url_hash").asc()]
-    wb = wb.withColumn("__salt", salt)
-    if host_stats is not None:
-        wb = wb.drop("__hot")
-    w_es = Window.partitionBy("host", "__salt").orderBy(*order_e)
-    w_hs = Window.partitionBy("host", "__salt").orderBy(*order_h)
-    pre = (
-        wb.withColumn("__rne", F.row_number().over(w_es))
-        .withColumn("__rnh", F.row_number().over(w_hs))
-        .where(
-            (F.col("__rne") <= F.col("__b"))
-            | (F.col("__rnh") <= F.col("__b") + F.col("__b2"))
-        )
-        .drop("__rne", "__rnh", "__salt")
-    )
-    # stage B in ONE pass — no union of filtered branches (a union would
-    # duplicate the whole ranking subtree in the physical plan; only the
-    # stage-A exchange gets reused, so the sorts and the stage-B exchange
-    # would run twice). Phase-2's rank among NON-phase-1 rows comes from a
-    # mixed-order row_number (phase-1 rows first) minus the host's
-    # phase-1 count — identical ordering semantics, half the sort work.
+    pre = host_top_k(wb)
+    # both phases in ONE pass — no union of filtered branches (a union
+    # would duplicate the whole ranking subtree in the physical plan, so
+    # the sorts and the exchange would run twice). Phase-2's rank among
+    # NON-phase-1 rows comes from a mixed-order row_number (phase-1 rows
+    # first) minus the host's phase-1 count — identical ordering
+    # semantics, half the sort work.
     w_e = Window.partitionBy("host").orderBy(*order_e)
     ranked = pre.withColumn("__rank_e", F.row_number().over(w_e))
     is_p1 = F.col("__rank_e") <= F.col("__b")
@@ -406,13 +407,7 @@ def run_round(catalog: Catalog, round_no: int, n_hosts: int) -> RoundStats:
     obs_active, n_a = _count_obs()
     active = frontier.where(F.col("state") == "active").observe(obs_active, n_a)
     obs_plan, n_p = _count_obs()
-    # per-host load for adaptive salting: a column-pruned scan + partial
-    # agg over the frontier (production would maintain these counts in
-    # the host dimension incrementally)
-    host_stats = frontier.where(F.col("state") == "active").groupBy("host").agg(
-        F.count(F.lit(1)).alias("n_urls")
-    )
-    plan = build_two_phase_plan(active, robots, budgets, now, host_stats=host_stats)
+    plan = build_two_phase_plan(active, robots, budgets, now)
     # one job materializes the plan AND surfaces both counters
     plan = plan.observe(obs_plan, n_p).localCheckpoint(eager=True)
     n_active = int(obs_active.get["n"])

@@ -152,7 +152,7 @@ def stream_host_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates stream in, ``applyInPandasWithState`` keyed by host
     admits the first HOST_BUDGET candidates per host in priority
     (event_id) order and rejects the rest — the streaming twin of the
-    batch scheduler's salted two-phase budget rank. State is one
+    batch scheduler's two-phase budget rank. State is one
     counter per host, so memory is O(|hosts|) regardless of stream
     length. The static-input run is single-trigger (one source file),
     so admission order is globally deterministic and the oracle is the

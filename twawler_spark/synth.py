@@ -4,8 +4,8 @@ Everything derives from ``spark.range(n)`` + JVM expressions keyed by
 ``xxhash64`` of the row id — no Python in the loop, no RNG state, no
 partition-id dependence, so any scale regenerates bit-identically (the
 FIXTURES.md requirement). Host popularity is log-uniform (≈ Zipf s~1),
-so a handful of hosts are hot — exercising the salted-budget skew path
-the north rule mandates.
+so a handful of hosts are hot — exercising the per-host top-K cut that
+bounds a hot host's rows ahead of the plan's ranking exchange.
 
 The 10^10-URL design point is reached by raising ``n_urls``; the layout
 (hash-derived columns, no driver-side state) is what makes that scale
